@@ -130,13 +130,23 @@ object Bench {
       }
     }
     // measured: median of 3 per query, fixed (alphabetical) order; the
-    // reported telemetry belongs to the MEDIAN-wall run (the quoted one)
-    val noRun = (-1.0, (0.0, 0.0, 0.0, 0.0, 0L), (0L, 0L, 0L, 0L, 0L, 0L, 0L))
-    val results = queries.map { q =>
-      val runs = (1 to 3).map { _ =>
-        try runOnce(q) catch { case _: Throwable => noRun }
-      }.sortBy(_._1)
-      q.name -> (runs(1), runs.head._1)
+    // reported telemetry belongs to the MEDIAN-wall run (the quoted one).
+    // A failing query fails the run: dropping it would make the total
+    // look faster.
+    val measuredRuns = queries.map(q => q.name -> measure(3)(() => runOnce(q))(_._1))
+    val failed = measuredRuns.collect { case (name, Left(e)) => name -> e }
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        e.printStackTrace()
+      }
+      spark.stop()
+      System.err.println(s"[bench] ${failed.size} measured queries failed: " +
+        failed.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
+    val results = measuredRuns.collect { case (name, Right(runs)) =>
+      name -> (runs(1), runs.head._1)
     }
 
     // fixture fingerprint: regen detection across rounds
@@ -162,13 +172,14 @@ object Bench {
     // everywhere = the query plans no graft table scan (raw parquet).
     val qTelemetry = results.map {
       case (k, ((_, (run, cpu, gc, mx, n), (sc, mt, ms, en, sp, sm, fp)), _)) =>
-        f""""$k":{"task_run_sec":$run%.3f,"task_cpu_sec":$cpu%.3f,""" +
-          f""""gc_sec":$gc%.3f,"max_task_sec":$mx%.3f,"tasks":$n,""" +
+        def ms3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+        s""""$k":{"task_run_sec":${ms3(run)},"task_cpu_sec":${ms3(cpu)},""" +
+          s""""gc_sec":${ms3(gc)},"max_task_sec":${ms3(mx)},"tasks":$n,""" +
           s""""plan_scans":$sc,"manifests_total":$mt,"manifests_skipped":$ms,""" +
           s""""entries_considered":$en,"skipped_by_partition":$sp,""" +
           s""""skipped_by_metrics":$sm,"files_planned":$fp}"""
     }.mkString("{", ",", "}")
-    val total = results.map(_._2._1._1).filter(_ >= 0).sum
+    val total = results.map(_._2._1._1).sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qMedians,"queries_min":$qMins,"telemetry":$qTelemetry,"fixture":$fixture,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("BENCH_LOCAL.json"), json + "\n")
     // The driver captures a BOUNDED TAIL of this process's output and
@@ -180,12 +191,27 @@ object Bench {
     // medians, 5-decimal seconds ≈ 10 µs, far under run noise), printed
     // last, after spark.stop(); everything else lives in
     // BENCH_LOCAL.json for the seal tooling.
-    val qCompact = results.map { case (k, ((med, _, _), _)) =>
-      val v = if (med < 0) med.toString else f"$med%.5f"
-      "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
-    val compact = f"""{"metric":"total","value":$total%.5f,"unit":"sec","queries":$qCompact,"sf":"$sfDir"}"""
+    val compact = compactLine(total,
+      results.map { case (k, ((med, _, _), _)) => k -> med }, sfDir)
     spark.stop()
     println(compact)
+  }
+
+  /** `runs` measured runs sorted by `wall`, or the first failure — a
+    * failed run is never replaced by a sentinel time. */
+  private[graft] def measure[A](runs: Int)(run: () => A)(wall: A => Double)
+      : Either[Throwable, Seq[A]] =
+    try Right((1 to runs).map(_ => run()).sortBy(wall))
+    catch { case e: Throwable => Left(e) }
+
+  /** The compact stdout summary the driver parses: 5-decimal seconds,
+    * formatted locale-independently (a comma decimal separator would make
+    * it invalid JSON). */
+  private[graft] def compactLine(total: Double, medians: Seq[(String, Double)],
+      sfDir: String): String = {
+    def sec(v: Double) = String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
+    val qCompact = medians.map { case (k, med) => "\"" + k + "\":" + sec(med) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qCompact,"sf":"$sfDir"}"""
   }
 }

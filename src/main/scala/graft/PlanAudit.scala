@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * query so scan pushdown (PushedFilters/ReadSchema), broadcast joins and
   * WholeStageCodegen spans can be inspected per round.
   *
-  * Run: sbt "runMain graft.PlanAudit [sfDir]"
+  * Run: sbt "runMain graft.PlanAudit [sfDir]"; SPARK_GRAFT_BENCH_ONLY=q1,q2
+  * restricts it to the named queries, as in [[Bench]].
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,10 @@ object PlanAudit {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Registry.benchQueries.sortBy(_.name).foreach { q =>
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    Registry.benchQueries.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name))).foreach { q =>
       println(s"\n===== ${q.name} =====")
       try println(q.fn(spark, sfDir).queryExecution
         .explainString(ExplainMode.fromString("formatted")))

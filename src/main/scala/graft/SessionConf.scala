@@ -102,6 +102,16 @@ object SessionConf {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, SparkSession]())
 
+  /** Hadoop conf for reader functions built directly on a scan session
+    * clone (the DSv2 reader, delete-file readers): the context conf plus
+    * [[ScanConf]], [[HadoopIoConf]] and `extra` (decryption entries). */
+  def readConf(scanSpark: SparkSession,
+      extra: Map[String, String] = Map.empty): org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration(scanSpark.sparkContext.hadoopConfiguration)
+    (ScanConf ++ HadoopIoConf ++ extra).foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
   /** The scan-configured clone of `spark`. */
   def scanSession(spark: SparkSession): SparkSession =
     clones.synchronized {

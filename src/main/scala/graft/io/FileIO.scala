@@ -100,18 +100,36 @@ final class FileIO(val conf: Configuration) extends Serializable {
     * atomically) then unlinks the source. Other schemes keep the
     * exists+rename shape (HDFS rename is already no-overwrite; object
     * stores should front commits with a CAS catalog — unchanged). */
-  def renameIfAbsent(src: String, dst: String): Boolean = {
+  def renameIfAbsent(src: String, dst: String): Boolean =
+    renameIfAbsent(src, dst, (d, s) => java.nio.file.Files.createLink(d, s))
+
+  /** [[renameIfAbsent]] over an explicit `link(dst, src)` primitive. A
+    * local filesystem without hard links (NFS, FAT, some container
+    * mounts: UnsupportedOperationException, or a plain FileSystemException
+    * such as EPERM/ENOTSUP) degrades to exists+rename instead of failing
+    * every commit. A missing source or directory and a denied access are
+    * real I/O errors and propagate — answering false would report them as
+    * a lost commit race. After a link, the source's `.crc` sidecar
+    * (written by the checksummed local FS, `graft.io.nio-local=false`) is
+    * removed too. */
+  private[io] def renameIfAbsent(src: String, dst: String,
+      link: (java.nio.file.Path, java.nio.file.Path) => Unit): Boolean = {
     val scheme = Option(new Path(src).toUri.getScheme).getOrElse("file")
-    if (scheme == "file") {
-      def local(p: String) = java.nio.file.Paths.get(new Path(p).toUri.getPath)
-      try {
-        java.nio.file.Files.createLink(local(dst), local(src))
-        java.nio.file.Files.delete(local(src))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
+    if (scheme != "file") return !exists(dst) && rename(src, dst)
+    def local(p: String) = java.nio.file.Paths.get(new Path(p).toUri.getPath)
+    val linked =
+      try { link(local(dst), local(src)); true }
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException => return false
+        case _: UnsupportedOperationException => false
+        case e: java.nio.file.FileSystemException
+            if e.getClass == classOf[java.nio.file.FileSystemException] => false
       }
-    } else !exists(dst) && rename(src, dst)
+    if (!linked) return !exists(dst) && rename(src, dst)
+    val s = local(src)
+    java.nio.file.Files.delete(s)
+    java.nio.file.Files.deleteIfExists(s.resolveSibling(s".${s.getFileName}.crc"))
+    true
   }
 
   def delete(path: String, recursive: Boolean = false): Boolean =

@@ -155,7 +155,7 @@ object IcebergQueries {
 
   /** MoR position deletes: DELETE WHERE price > 200k, then scan — must
     * equal the complementary filter over the raw data
-    * (positional_deletes.rs:35 anti-join semantics). */
+    * (positional_deletes.rs:35 semantics). */
   val i08 = Q.sql(
     "i08_iceberg_pos_delete_scan",
     """SELECT o_orderkey, o_custkey, o_totalprice
@@ -258,7 +258,7 @@ object IcebergQueries {
   }
 
   /** v3 deletion vectors: DELETE via Puffin roaring-bitmap blobs, then
-    * scan — executor-decoded DVs anti-join exactly like parquet position
+    * scan — executor-decoded DVs filter exactly like parquet position
     * deletes (delete_vector.rs:27, puffin writer/reader). */
   val i14 = Q.sql(
     "i14_deletion_vector_scan",

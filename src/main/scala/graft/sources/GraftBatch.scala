@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -12,11 +11,8 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.expr.{AlwaysTrue, Predicate}
-import graft.meta.FileContent
-import graft.puffin.{Puffin, Roaring64}
 import graft.table.GraftTable
 
 /** Native DSv2 Batch read path — the analogue of the reference's
@@ -105,34 +101,10 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     StructType(projected.flatMap(n => full.fields.find(_.name == n)))
   }
 
-  /** One equality-delete group per (key set, sequence number, partition
-    * scope) — resolved once per scan from the (cached) delete manifests,
-    * ordered deterministically so every task sees the same group list.
-    * Scope follows the reference's DeleteFileIndex (delete_file_index.rs:
-    * 137-141): a delete stored under an UNPARTITIONED spec is GLOBAL (how
-    * this engine writes eq deletes); one under a partitioned spec applies
-    * only to data files of the same spec and tuple — even when the tuple
-    * is all-null (a foreign writer's genuine null partition), where
-    * treating it as global would over-delete every partition. */
-  private case class EqGroup(keyNames: Seq[String], seq: Long,
-      scope: Option[(Int, Seq[Any])], files: Seq[(String, Long)]) {
-    def appliesTo(t: graft.table.CompactFileTask): Boolean =
-      seq > t.sequenceNumber && scope.forall { case (sid, tup) =>
-        sid == t.specId && tup == t.partition
-      }
-  }
-
-  private lazy val eqInfo: Seq[EqGroup] =
-    table.newScan().planDeletes()
-      .filter(_.file.content == FileContent.EqualityDeletes)
-      .groupBy(d => (d.file.equalityIds, d.sequenceNumber,
-        if (table.metadata.specById(d.specId).forall(_.fields.isEmpty)) None
-        else Some((d.specId, d.file.partition)))).toSeq
-      .map { case ((ids, seq, scope), g) =>
-        EqGroup(ids.map(id => table.schema.idToField(id).name), seq, scope,
-          g.map(d => (d.file.filePath, d.file.fileSizeInBytes)).sortBy(_._1))
-      }
-      .sortBy(g => (g.seq, g.keyNames.mkString(","), g.files.headOption.map(_._1)))
+  /** Equality-delete groups (key set, sequence number, partition scope),
+    * resolved once per scan from the (cached) delete manifests. */
+  private lazy val eqInfo: Seq[graft.table.EqDeleteGroup] =
+    graft.table.DeletePlan.eqGroupsOf(table, table.newScan().planDeletes())
 
   /** Equality-key columns the reader must materialize beyond the
     * projection (projected away again before rows leave the reader). */
@@ -573,19 +545,6 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     }
     lastScanMetrics = Some(planMetrics)
     val deletes = scan.planDeletes()
-    // pos-delete parquet is bound per data file through the
-    // DeleteFileIndex analogue (referenced-data-file + file_path bounds)
-    // instead of attaching every delete file to every task
-    val posIndex = new graft.table.PosDeleteIndex(
-      deletes.filter(d => d.file.content == FileContent.PositionDeletes &&
-        d.file.fileFormat != "PUFFIN"), qualify)
-    val dvByFile: Map[String, (String, Long, Long)] = deletes
-      .filter(d => d.file.content == FileContent.PositionDeletes &&
-        d.file.fileFormat == "PUFFIN")
-      .flatMap(d => d.file.referencedDataFile.map(r => qualify(r) ->
-        ((d.file.filePath, d.file.contentOffset.getOrElse(0L),
-          d.file.contentSizeInBytes.getOrElse(0L)))))
-      .toMap
 
     val all = allPlanned
     val unlimited = fileFilter match {
@@ -609,17 +568,16 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     }
     lastPlannedTasks = tasks // estimateStatistics reads the pruned set
     onPlanned(tasks.map(_.filePath)) // row-level ops record the replaced groups
+    // each data file's deletes: pos-delete parquet bound through the
+    // DeleteFileIndex analogue, DVs by referenced file, equality groups
+    // sequenced after the file whose partition scope covers it
+    val deletePlan = graft.table.DeletePlan.build(table, deletes,
+      tasks.map(t => (qualify(t.filePath), t.sequenceNumber, t.specId, t.partition)),
+      qualify, Some(eqInfo))
     tasks.flatMap { t =>
       val path = qualify(t.filePath)
       val size = t.fileSize
-      val dv = dvByFile.get(path)
-      val posParquet = posIndex.candidatesFor(path)
-        .map(d => (d.file.filePath, d.file.fileSizeInBytes))
-      val withDeletes = dv.isDefined || posParquet.nonEmpty
-      // delete groups sequenced AFTER this file's rows (spec: data_seq <
-      // delete_seq) whose partition scope covers this file
-      val eqGroups = eqInfo.collect { case g if g.appliesTo(t) =>
-        EqDeleteTaskGroup(g.keyNames, g.files) }
+      val fileDeletes = deletePlan.forFile(path)
       // the file's spec-shaped tuple projected into the unified struct
       // (field-id addressed — same rule as the V1 metadata-column path)
       val partVals: Seq[Any] =
@@ -637,16 +595,16 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
           }
         }
       val splits =
-        if (withDeletes || emitPos || emitRowId)
+        if (fileDeletes.hasPositions || emitPos || emitRowId)
           // whole file in one slice: row indexes must be exact (`_pos` and
           // inherited `_row_id` emission count rows, so splits and parquet
           // row-group filtering are both off)
           Seq(GraftInputPartition(path, 0L, size, size,
-            needsRowIndex = true, posParquet, dv, t.missingDefaults, eqGroups,
+            needsRowIndex = true, fileDeletes, t.missingDefaults,
             t.specId, partVals, t.firstRowId, t.sequenceNumber))
         else t.splitRanges.map { case (start, len) =>
           GraftInputPartition(path, start, len, size, needsRowIndex = false,
-            Nil, None, t.missingDefaults, eqGroups, t.specId, partVals,
+            fileDeletes, t.missingDefaults, t.specId, partVals,
             t.firstRowId, t.sequenceNumber)
         }
       splits.map(s => (t, s))
@@ -766,11 +724,6 @@ final class BytesReadMetric
   override def description(): String = "bytes read (data + delete files)"
 }
 
-/** Equality-delete files sharing one key set, applicable to a task
-  * (delete sequence > task sequence, pre-filtered at planning). */
-final case class EqDeleteTaskGroup(keyNames: Seq[String],
-    files: Seq[(String, Long)])
-
 /** One byte-range slice of a data file plus its delete context.
   * `partitionValues` are EXTERNAL Scala values aligned to the scan's
   * unified `_partition` schema (empty unless that column is projected). */
@@ -780,10 +733,8 @@ final case class GraftInputPartition(
     length: Long,
     fileSize: Long,
     needsRowIndex: Boolean,
-    posDeleteFiles: Seq[(String, Long)],
-    dv: Option[(String, Long, Long)],
+    deletes: graft.table.FileDeletes = graft.table.FileDeletes.none,
     missingDefaults: Seq[String] = Nil,
-    eqDeletes: Seq[EqDeleteTaskGroup] = Nil,
     specId: Int = -1,
     partitionValues: Seq[Any] = Nil,
     firstRowId: Option[Long] = None,
@@ -815,7 +766,7 @@ object GraftInputPartition {
   def cleanSplits(path: String, size: Long, offsets: Seq[Long]): Seq[GraftInputPartition] = {
     val target = 128L << 20
     if (offsets.size <= 1 || size <= target)
-      Seq(GraftInputPartition(path, 0L, size, size, needsRowIndex = false, Nil, None))
+      Seq(GraftInputPartition(path, 0L, size, size, needsRowIndex = false))
     else {
       val bounds = offsets :+ size
       val splits = Seq.newBuilder[GraftInputPartition]
@@ -824,7 +775,7 @@ object GraftInputPartition {
       while (i < bounds.size) {
         if (bounds(i) - start >= target || i == bounds.size - 1) {
           splits += GraftInputPartition(path, start, bounds(i) - start, size,
-            needsRowIndex = false, Nil, None)
+            needsRowIndex = false)
           start = bounds(i)
         }
         i += 1
@@ -835,13 +786,6 @@ object GraftInputPartition {
 }
 
 object GraftReaderFactory {
-
-  /** Position-delete file schema: (file_path string, pos long). */
-  private val PosDeleteSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("file_path",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** Build the three serializable read closures on the driver, against the
     * scan-configured session CLONE (graft.SessionConf): field-id and
@@ -863,35 +807,16 @@ object GraftReaderFactory {
     // per-task-amortized reader function (one JobConf per task, filter
     // serialized once) — matters most for packed bins of small files
     val fmt = new GraftParquetFileFormat()
-    val hc = scanSpark.sparkContext.hadoopConfiguration
-    def conf() = {
-      val c = new org.apache.hadoop.conf.Configuration(hc)
-      (graft.SessionConf.ScanConf ++ graft.SessionConf.HadoopIoConf ++ encConf).foreach { case (k, v) => c.set(k, v) }
-      c
-    }
+    def conf() = graft.SessionConf.readConf(scanSpark, encConf)
     val rowOpts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
     val empty = StructType(Nil)
-    // one delete-file read closure per distinct equality key set: the
-    // requested schema is just the key fields, resolved BY NAME (field-id
-    // metadata stripped — delete files carry the write-time column names
-    // but no embedded ids; same name-based read as the V1 anti-join path)
-    val eqReads = eqKeySets.map { names =>
-      val ks = StructType(names.map { n =>
-        val f = readSchema(readSchema.fieldIndex(n))
-        f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)
-      })
-      names -> fmt.buildReaderWithPartitionValues(scanSpark, ks, empty, ks,
-        Nil, rowOpts, conf())
-    }.toMap
     new GraftReaderFactory(
       fmt.buildReaderWithPartitionValues(scanSpark, dataSchema, empty, readSchema,
         filters, rowOpts, conf()),
       fmt.buildReaderWithPartitionValues(scanSpark, dataSchema, empty, readSchema,
         Nil, rowOpts, conf()),
-      fmt.buildReaderWithPartitionValues(scanSpark, PosDeleteSchema, empty, PosDeleteSchema,
-        Nil, rowOpts, conf()),
-      spark.sparkContext.broadcast(new SerializableConfiguration(conf())),
-      emitFile, emitPos, readSchema, outputOrdinals, defaults, eqReads,
+      graft.table.DeleteReaders.build(scanSpark, readSchema, eqKeySets, () => conf()),
+      emitFile, emitPos, readSchema, outputOrdinals, defaults,
       emitSpecId, partSchema, emitDeleted, emitRowId, emitLastSeq)
   }
 }
@@ -899,14 +824,12 @@ object GraftReaderFactory {
 final class GraftReaderFactory(
     filteredRead: PartitionedFile => Iterator[InternalRow],
     plainRead: PartitionedFile => Iterator[InternalRow],
-    posDeleteRead: PartitionedFile => Iterator[InternalRow],
-    conf: Broadcast[SerializableConfiguration],
+    deleteReaders: graft.table.DeleteReaders,
     emitFile: Boolean = false,
     emitPos: Boolean = false,
     readSchema: StructType = StructType(Nil),
     outputOrdinals: Option[Seq[Int]] = None,
     defaults: Map[String, Any] = Map.empty,
-    eqReads: Map[Seq[String], PartitionedFile => Iterator[InternalRow]] = Map.empty,
     emitSpecId: Boolean = false,
     partSchema: Option[StructType] = None,
     emitDeleted: Boolean = false,
@@ -914,26 +837,32 @@ final class GraftReaderFactory(
     emitLastSeq: Boolean = false)
     extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    // one partition per task: the split readers of a packed bin share the
+    // equality key sets the task has loaded
+    val eqSets = new graft.table.DeleteFilter.TaskEqSets
     partition match {
-      case pk: GraftPackedInputPartition => packed(pk.parts)
-      case kp: GraftKeyedPackedInputPartition => packed(kp.parts)
-      case k: GraftKeyedInputPartition => single(k.part)
-      case g: GraftInputPartition => single(g)
+      case pk: GraftPackedInputPartition => packed(pk.parts, eqSets)
+      case kp: GraftKeyedPackedInputPartition => packed(kp.parts, eqSets)
+      case k: GraftKeyedInputPartition => single(k.part, eqSets)
+      case g: GraftInputPartition => single(g, eqSets)
     }
+  }
 
-  private def packed(parts: Seq[GraftInputPartition]): PartitionReader[InternalRow] =
-    if (parts.lengthCompare(1) == 0) single(parts.head)
-    else new GraftConcatPartitionReader(parts.map(p => () => single(p)))
+  private def packed(parts: Seq[GraftInputPartition],
+      eqSets: graft.table.DeleteFilter.TaskEqSets): PartitionReader[InternalRow] =
+    if (parts.lengthCompare(1) == 0) single(parts.head, eqSets)
+    else new GraftConcatPartitionReader(parts.map(p => () => single(p, eqSets)))
 
-  private def single(p: GraftInputPartition): PartitionReader[InternalRow] = {
+  private def single(p: GraftInputPartition,
+      eqSets: graft.table.DeleteFilter.TaskEqSets): PartitionReader[InternalRow] = {
     // a file missing a defaulted column must not see pushed parquet
     // filters: a predicate on that column would evaluate against the
     // null-fill (possibly pruning whole row groups) instead of the default
     val read = if (p.needsRowIndex || p.missingDefaults.nonEmpty) plainRead
       else filteredRead
-    new GraftPartitionReader(p, read, posDeleteRead, conf, emitFile, emitPos,
-      readSchema, outputOrdinals, defaults, eqReads, emitSpecId, partSchema,
+    new GraftPartitionReader(p, read, deleteReaders, eqSets, emitFile, emitPos,
+      readSchema, outputOrdinals, defaults, emitSpecId, partSchema,
       emitDeleted, emitRowId, emitLastSeq)
   }
 }
@@ -998,14 +927,13 @@ final class GraftConcatPartitionReader(
 final class GraftPartitionReader(
     part: GraftInputPartition,
     read: PartitionedFile => Iterator[InternalRow],
-    posDeleteRead: PartitionedFile => Iterator[InternalRow],
-    conf: Broadcast[SerializableConfiguration],
+    deleteReaders: graft.table.DeleteReaders,
+    eqSets: graft.table.DeleteFilter.TaskEqSets,
     emitFile: Boolean = false,
     emitPos: Boolean = false,
     readSchema: StructType = StructType(Nil),
     outputOrdinals: Option[Seq[Int]] = None,
     defaults: Map[String, Any] = Map.empty,
-    eqReads: Map[Seq[String], PartitionedFile => Iterator[InternalRow]] = Map.empty,
     emitSpecId: Boolean = false,
     partSchema: Option[StructType] = None,
     emitDeleted: Boolean = false,
@@ -1020,14 +948,14 @@ final class GraftPartitionReader(
   // executor-side storage-read counter (BytesReadMetric): incremented as
   // each input actually loads — data split range at reader open, delete
   // parquet / DV blob bytes when the delete side materializes, equality
-  // delete files on JVM-cache MISS only
+  // delete files on JVM-cache MISS only (counted by the DeleteFilter)
   private var bytesRead: Long = 0L
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
       override def name(): String = "bytesRead"
-      override def value(): Long = bytesRead
+      override def value(): Long = bytesRead + deletes.bytesRead
     })
 
   // v3 default fill: identity BoundReferences except the file's missing
@@ -1046,52 +974,10 @@ final class GraftPartitionReader(
     UnsafeProjection.create(ords.map(i => BoundReference(i,
       readSchema(i).dataType, readSchema(i).nullable): Expression)))
 
-  /** Per equality-delete group: (data-row key projection, key ordinals,
-    * deleted key set). Key sets are cached per JVM keyed by the group's
-    * file list, so N tasks over one executor load each delete file once. */
-  private lazy val eqSets: Seq[(UnsafeProjection, Array[Int], java.util.HashSet[UnsafeRow])] =
-    part.eqDeletes.map { g =>
-      val ords = g.keyNames.map(readSchema.fieldIndex).toArray
-      val keySchema = StructType(ords.toSeq.map(readSchema(_)))
-      val set = GraftPartitionReader.eqSetLoad(
-        (g.keyNames, g.files)) {
-          bytesRead += g.files.map(_._2).sum // loaded fresh, not from cache
-          val s = new java.util.HashSet[UnsafeRow]()
-          val proj = UnsafeProjection.create(keySchema)
-          g.files.foreach { case (dp, dsize) =>
-            val pf = PartitionedFile(InternalRow.empty,
-              SparkPath.fromPathString(dp), 0L, dsize, Array.empty, 0L, dsize,
-              Map.empty)
-            val it = eqReads(g.keyNames)(pf)
-            while (it.hasNext) {
-              val r = it.next()
-              var i = 0; var hasNull = false
-              while (i < ords.length) { if (r.isNullAt(i)) hasNull = true; i += 1 }
-              // a delete row with a null key never matches (SQL `=`
-              // semantics — delete_filter.rs:190)
-              if (!hasNull) s.add(proj(r).copy())
-            }
-          }
-          s
-        }
-      val dataProj = UnsafeProjection.create(ords.toSeq.map(i =>
-        BoundReference(i, readSchema(i).dataType, readSchema(i).nullable): Expression))
-      (dataProj, ords, set)
-    }
-
-  /** True when some applicable equality-delete group holds this row's key
-    * tuple. Rows with a null in a key column are never deleted. */
-  private def eqDeleted(row: InternalRow): Boolean = {
-    var gi = 0
-    while (gi < eqSets.length) {
-      val (proj, ords, set) = eqSets(gi)
-      var i = 0; var hasNull = false
-      while (i < ords.length) { if (row.isNullAt(ords(i))) hasNull = true; i += 1 }
-      if (!hasNull && set.contains(proj(row))) return true
-      gi += 1
-    }
-    false
-  }
+  // position deletes, DVs and equality deletes of this file, loaded on
+  // first use (equality key sets held by the task, cached per JVM)
+  private lazy val deletes = new graft.table.DeleteFilter(part.path, part.deletes,
+    readSchema, deleteReaders, eqSets)
 
   // `_file` / `_pos` / `_spec_id` / `_partition` appended as metadata
   // columns (JoinedRow: zero-copy wrapper; only the pos slot mutates per
@@ -1147,32 +1033,6 @@ final class GraftPartitionReader(
   }
   private lazy val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow()
 
-  private lazy val deleted: Roaring64 = {
-    var bm = Roaring64.fromPositions(Nil)
-    part.dv.foreach { case (puffinPath, offset, len) =>
-      bytesRead += len
-      val io = new graft.io.FileIO(conf.value.value)
-      val meta = Puffin.BlobMetadata(Puffin.DeletionVectorV1, Nil, 0L, 0L,
-        offset, len, Map.empty)
-      bm = bm.or(Puffin.dvDeserialize(Puffin.readBlob(io, puffinPath, meta)))
-    }
-    if (part.posDeleteFiles.nonEmpty) {
-      val mine = scala.collection.mutable.ArrayBuffer[Long]()
-      part.posDeleteFiles.foreach { case (dp, dsize) =>
-        bytesRead += dsize
-        val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(dp),
-          0L, dsize, Array.empty, 0L, dsize, Map.empty)
-        val it = posDeleteRead(pf)
-        while (it.hasNext) {
-          val r = it.next()
-          if (r.getUTF8String(0).toString == part.path) mine += r.getLong(1)
-        }
-      }
-      if (mine.nonEmpty) bm = bm.or(Roaring64.fromPositions(mine))
-    }
-    bm
-  }
-
   private lazy val rows: Iterator[InternalRow] = {
     bytesRead += part.length
     val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(part.path),
@@ -1184,20 +1044,19 @@ final class GraftPartitionReader(
     while (rows.hasNext) {
       val r = rows.next()
       rowIndex += 1
-      val posDeleted = part.needsRowIndex && deleted.contains(rowIndex)
+      val posDeleted = part.needsRowIndex && deletes.posDeleted(rowIndex)
       if (emitDeleted) {
         // mark-instead-of-skip (metadata_columns.rs:75): every physical
         // row is served; MoR delete status rides the `_deleted` marker
         val filled = fillProj match { case Some(p) => p(r); case None => r }
-        deletedFlag = posDeleted ||
-          (part.eqDeletes.nonEmpty && eqDeleted(filled))
+        deletedFlag = posDeleted || deletes.eqDeleted(filled)
         captureLineage(filled)
         current = outProj match { case Some(p) => p(filled); case None => filled }
         return true
       }
       if (!posDeleted) {
         val filled = fillProj match { case Some(p) => p(r); case None => r }
-        if (part.eqDeletes.isEmpty || !eqDeleted(filled)) {
+        if (!deletes.eqDeleted(filled)) {
           captureLineage(filled)
           current = outProj match { case Some(p) => p(filled); case None => filled }
           return true
@@ -1217,37 +1076,4 @@ final class GraftPartitionReader(
     } else current
 
   override def close(): Unit = ()
-}
-
-object GraftPartitionReader {
-  /** JVM-wide equality-delete key-set cache: keyed by (key names, delete
-    * file list) — distinct snapshots/groups never collide because the file
-    * list identifies the group's content. Bounded by delete-set size, the
-    * same memory the V1 broadcast join would pin per executor; entry
-    * count is LRU-capped so a long-lived executor serving many snapshots
-    * cannot accrete stale key sets, and two concurrent scans whose
-    * combined group count exceeds the cap evict only the coldest entries
-    * rather than thrashing each other's hot ones. */
-  private val MaxCachedGroups = 32
-  private type EqKey = (Seq[String], Seq[(String, Long)])
-  private type EqSet = java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
-  private val cache = new java.util.LinkedHashMap[EqKey, EqSet](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[EqKey, EqSet]): Boolean =
-      size() > MaxCachedGroups
-  }
-  /** Loads run OUTSIDE the map lock (a load reads delete parquet — holding
-    * the lock would serialize distinct groups across tasks); a racing
-    * duplicate load is idempotent and the first insert wins. */
-  private[sources] def eqSetLoad(key: EqKey)(load: => EqSet): EqSet = {
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) return hit
-    }
-    val loaded = load
-    cache.synchronized {
-      val prior = cache.get(key)
-      if (prior != null) prior
-      else { cache.put(key, loaded); loaded }
-    }
-  }
 }

@@ -29,7 +29,7 @@ import graft.table.{Commits, GraftTable, Locations}
   *
   * At 100 TB this is the sparse-DML shape: an UPDATE touching 0.1% of
   * rows writes ~0.1% of the bytes the CoW rewrite would, at the price of
-  * read-time anti-joins until compaction folds the deletes away.
+  * read-time delete filtering until compaction folds the deletes away.
   *
   * Scale notes: the scan treats the command condition as inexact
   * pushdown (prunes files, Spark re-filters rows), `_pos` forces

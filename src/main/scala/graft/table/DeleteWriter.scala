@@ -17,12 +17,13 @@ import graft.meta._
   * writer/base_writer/equality_delete_writer.rs:39 + delete semantics
   * arrow/delete_filter.rs:190, caching_delete_file_loader.rs:421-424).
   *
-  * Position deletes are (file_path, pos) parquet rows — the scan applies
-  * them as a left-anti join against `_metadata.{file_path,row_index}`.
-  * Equality deletes are projected key-column rows with `equality_ids`;
-  * the scan anti-joins on the key columns scoped to
-  * `data_sequence_number < delete_sequence_number`, and a row whose key
-  * contains null is never deleted (null != null, spec rule).
+  * Position deletes are (file_path, pos) parquet rows — the scan turns
+  * them into a per-file row bitmap over `_metadata.{file_path,row_index}`
+  * ([[DeleteFilter]]). Equality deletes are projected key-column rows
+  * with `equality_ids`; the scan drops rows whose key is in the delete
+  * set, scoped to `data_sequence_number < delete_sequence_number`, and a
+  * row whose key contains null is never deleted (null != null, spec
+  * rule).
   */
 object DeleteWriter {
 
@@ -34,7 +35,7 @@ object DeleteWriter {
   /** Row-level `DELETE WHERE predicate` executed as a MoR commit with the
     * whole-file fast path: files whose stats PROVE every row matches
     * (StrictMetricsEvaluator) are dropped at the manifest level — no
-    * delete rows written, no read-time anti-join cost — and only the
+    * delete rows written, no read-time delete cost — and only the
     * boundary files get (file_path, pos) position deletes. At 100 TB a
     * partition-aligned DELETE (the common retention case) becomes pure
     * metadata. Mirrors the reference delete planning's
@@ -348,7 +349,15 @@ object DeleteWriter {
         catch { case _: Throwable => () }
         throw e
     }
-    val dataFiles = Await.result(dataF, Duration.Inf)
+    val dataFiles =
+      try Await.result(dataF, Duration.Inf)
+      catch {
+        case e: Throwable =>
+          // the key write already landed: reclaim it before rethrowing
+          try table.io.delete(delDir, recursive = true)
+          catch { case _: Throwable => () }
+          throw e
+      }
     if (dataFiles.isEmpty) {
       // no-op fold: reclaim the (already written) delete keys
       try table.io.delete(delDir, recursive = true)

@@ -908,8 +908,9 @@ final class TableScan private[table] (
   }
 
   /** Alive delete files in scope for this snapshot. At 100 TB the delete
-    * manifests are read once per scan; actual delete application happens
-    * distributed (anti-joins in toDF), never on the driver. */
+    * manifests are read once per scan; the delete files themselves load
+    * on the executors, inside the scan tasks ([[DeleteFilter]]), never on
+    * the driver. */
   def planDeletes(): Seq[DeleteTask] = {
     val snap = snapshot.getOrElse(return Nil)
     val deleteManifests = readListCached(snap)
@@ -1018,6 +1019,7 @@ final class TableScan private[table] (
       if (tasks.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
       else {
+        val deleted = deletedRows(reader, tasks, encConf)
         // name-mapping read path (spec/name_mapping): when legacy files
         // carry no embedded field ids, read with each field's mapped
         // physical name — id-ful files still resolve by the field-id
@@ -1047,11 +1049,12 @@ final class TableScan private[table] (
                 physical,
                 encConf ++ graft.SessionConf.HadoopIoConf,
                 mtimeMs = scanMtimeMs)
-            // deletes join on _metadata → must run before the rename
-            // projection drops it (position/DV deletes only for mapped
-            // tables; equality deletes would need alias-aware keys).
-            // The cast renames nested struct fields back positionally.
-            applyDeletes(spark, rawPhys, tasks, mark = deletedCol)
+            // deletes read _metadata → must run before the rename
+            // projection drops it; equality keys resolve to their
+            // physical aliases. The cast renames nested struct fields
+            // back positionally.
+            val alias = table.schema.fields.map(_.name).zip(physical.fieldNames).toMap
+            applyDeletes(rawPhys, deleted.map(_(alias)))
               .select(table.schema.fields.zip(sparkSchema.fields)
                 .zip(physical.fields).map { case ((f, sf), pf) =>
                   col(pf.name).cast(sf.dataType).as(f.name)
@@ -1107,7 +1110,7 @@ final class TableScan private[table] (
               val filled = missing.foldLeft(raw) { (df, f) =>
                 df.withColumn(f.name, defaultLiteral(f))
               }
-              applyDeletes(spark, filled, ts, mark = deletedCol)
+              applyDeletes(filled, deleted.map(_(identity)))
             }.reduce(_ unionByName _)
         }
       }
@@ -1171,8 +1174,7 @@ final class TableScan private[table] (
     }
     val taskDf = spark.createDataFrame(rows, taskSchema)
     // `_file`/`_pos` may already be materialized (the marked-delete path
-    // carries them out of applyDeletes; re-deriving from `_metadata`
-    // there would be ambiguous)
+    // adds them next to `_deleted` in applyDeletes)
     val withFp =
       if (df.columns.contains("_file")) df
       else df.withColumn("_file", col("_metadata.file_path"))
@@ -1203,170 +1205,46 @@ final class TableScan private[table] (
     table.io.fs(p).makeQualified(hp).toString
   }
 
-  /** MoR delete application (§2.3 join semantics):
-    *   - position deletes: left-anti join on
-    *     (_metadata.file_path, _metadata.row_index) ↔ (file_path, pos)
-    *     [positional_deletes.rs:35]
-    *   - equality deletes: left-anti join on the equality-id columns scoped
-    *     to data_seq < delete_seq; plain `===` keeps any row whose key
-    *     contains null [delete_filter.rs:190, caching_delete_file_loader.rs
-    *     :421-424]
-    * Both are executor-side joins — Spark broadcasts small delete sets
-    * automatically, so at 100 TB this stays shuffle-free until delete sets
-    * grow past the broadcast threshold (then it's a hash join, still never
-    * driver-side).
-    */
-  private def applyDeletes(spark: SparkSession, raw: DataFrame,
-      tasks: Seq[FileScanTask], mark: Boolean = false): DataFrame = {
+  /** MoR delete application, inside the scan's own stage: `deleted`
+    * (from [[deletedRows]]) filters the rows, or in `_deleted` mode is
+    * projected as the marker next to the `_file`/`_pos` coordinates. With
+    * no deletes in scope the plan is untouched. */
+  private def applyDeletes(raw: DataFrame, deleted: Option[Column]): DataFrame = {
+    val coords = if (!deletedCol) raw else raw
+      .withColumn("_file", col("_metadata.file_path"))
+      .withColumn("_pos", col("_metadata.row_index"))
+    deleted match {
+      case None => if (deletedCol) coords.withColumn(DeletedCol, lit(false)) else raw
+      case Some(d) => if (deletedCol) coords.withColumn(DeletedCol, d) else raw.filter(!d)
+    }
+  }
+
+  /** The deleted-row test for a read of `tasks`, None when no delete is in
+    * scope: one deterministic [[graft.functions.MorDeletedExpr]] over
+    * `_metadata.file_path`, `_metadata.row_index` and the equality-key
+    * columns, evaluated per row through the [[DeleteFilter]] the DSv2
+    * reader shares — position deletes and DVs as a per-file row bitmap
+    * [positional_deletes.rs:35], equality deletes as JVM-cached key sets
+    * scoped to data_seq < delete_seq and to the delete's partition, a
+    * null key never matching [delete_filter.rs:190,
+    * caching_delete_file_loader.rs:421-424]. Delete files load on the
+    * executors; no join or exchange is planned. The returned function maps
+    * each equality key to the frame's column holding it (the physical
+    * alias on name-mapped reads). */
+  private def deletedRows(scanSpark: SparkSession, tasks: Seq[FileScanTask],
+      encConf: Map[String, String]): Option[(String => String) => Column] = {
     val deletes = planDeletes()
-    if (deletes.isEmpty)
-      return if (mark)
-        raw.withColumn("_file", col("_metadata.file_path"))
-          .withColumn("_pos", col("_metadata.row_index"))
-          .withColumn(DeletedCol, lit(false))
-      else raw
-
-    val FILE = "_gf_file"; val POS = "_gf_pos"; val SEQ = "_gf_seq"
-    val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
-    var work = raw
-      .withColumn(FILE, col("_metadata.file_path"))
-      .withColumn(POS, col("_metadata.row_index"))
-    // mark-instead-of-skip (`_deleted`, metadata_columns.rs:38,75): each
-    // anti-join below becomes a LEFT join onto a distinct flagged side;
-    // the marker is the OR of the per-source flags
-    val flags = scala.collection.mutable.ArrayBuffer[String]()
-
-    // only read the delete files that can touch a scanned data file
-    // (referenced-data-file + file_path bounds — DeleteFileIndex role)
-    val posAll = deletes.filter(d =>
-      d.file.content == FileContent.PositionDeletes && d.file.fileFormat != "PUFFIN")
-    val posParquet =
-      if (posAll.isEmpty) Nil
-      else {
-        val idx = new PosDeleteIndex(posAll, qualifyPath)
-        val keep = scala.collection.mutable.LinkedHashSet.empty[String]
-        tasks.foreach(t => idx.candidatesFor(qualifyPath(t.file.filePath))
-          .foreach(d => keep += d.file.filePath))
-        posAll.filter(d => keep.contains(d.file.filePath))
-      }
-    if (posParquet.nonEmpty) {
-      val pd = spark.read.options(encConf).parquet(posParquet.map(_.file.filePath): _*)
-      if (mark) {
-        val flagged = pd.select(col("file_path"), col("pos")).distinct()
-          .withColumn("_gf_del_pp", lit(true))
-        work = work.join(flagged,
-          work(FILE) === flagged("file_path") && work(POS) === flagged("pos"),
-          "left").drop(flagged("file_path")).drop(flagged("pos"))
-        flags += "_gf_del_pp"
-      } else work = work.join(pd,
-        work(FILE) === pd("file_path") && work(POS) === pd("pos"), "left_anti")
-    }
-
-    // v3 deletion vectors: each entry is a roaring-bitmap blob range in a
-    // Puffin file, scoped to one data file. Blobs are decoded ON THE
-    // EXECUTORS (a parallelized job over blob descriptors — the driver
-    // never materializes positions) and applied with the same anti-join.
-    val dvs = deletes.filter(d =>
-      d.file.content == FileContent.PositionDeletes && d.file.fileFormat == "PUFFIN")
-    if (dvs.nonEmpty) {
-      import spark.implicits._
-      val descriptors = dvs.flatMap(d => d.file.referencedDataFile.map(ref =>
-        (d.file.filePath, d.file.contentOffset.getOrElse(0L),
-          d.file.contentSizeInBytes.getOrElse(0L), qualifyPath(ref))))
-      val dvRows = spark.sparkContext
-        .parallelize(descriptors, math.max(1, math.min(descriptors.size, 64)))
-        .flatMap { case (puffin, offset, len, ref) =>
-          // executor-local FileIO (Hadoop Configuration isn't serializable;
-          // same pattern as the footer harvest in AppendWriter)
-          val io = graft.io.FileIO.local()
-          val meta = graft.puffin.Puffin.BlobMetadata(
-            graft.puffin.Puffin.DeletionVectorV1, Nil, 0L, 0L, offset, len, Map.empty)
-          graft.puffin.Puffin.dvDeserialize(
-            graft.puffin.Puffin.readBlob(io, puffin, meta))
-            .iterator.map(pos => (ref, pos))
-        }
-        .toDF("file_path", "pos")
-      if (mark) {
-        val flagged = dvRows.distinct().withColumn("_gf_del_dv", lit(true))
-        work = work.join(flagged,
-          work(FILE) === flagged("file_path") && work(POS) === flagged("pos"),
-          "left").drop(flagged("file_path")).drop(flagged("pos"))
-        flags += "_gf_del_dv"
-      } else work = work.join(dvRows,
-        work(FILE) === dvRows("file_path") && work(POS) === dvRows("pos"), "left_anti")
-    }
-
-    val eqDeletes = deletes.filter(_.file.content == FileContent.EqualityDeletes)
-    if (eqDeletes.nonEmpty) {
-      import spark.implicits._
-      // per-row data sequence number from the owning file (broadcast map
-      // join); qualify paths to match _metadata.file_path's rendering
-      // (manifest paths may lack the filesystem scheme)
-      def qualify(p: String): String = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        table.io.fs(p).makeQualified(hp).toString
-      }
-      val seqDf = tasks.map(t => (qualify(t.file.filePath), t.sequenceNumber))
-        .toDF("_gf_seq_file", SEQ)
-      work = work.join(org.apache.spark.sql.functions.broadcast(seqDf),
-        work(FILE) === seqDf("_gf_seq_file"), "left").drop("_gf_seq_file")
-      // one anti-join per (key set, sequence number, partition scope)
-      // group — plan depth grows with delete commits until compaction
-      // folds them away; warn before the plan gets pathological (hundreds
-      // of stacked joins slow analysis and risk codegen limits).
-      // Scope rule (delete_file_index.rs:137-141): global iff the delete's
-      // spec is unpartitioned; otherwise only data files of the same spec
-      // and partition tuple are affected (see the native reader's EqGroup).
-      val eqGroups = eqDeletes.groupBy(d => (d.file.equalityIds, d.sequenceNumber,
-        if (table.metadata.specById(d.specId).forall(_.fields.isEmpty)) None
-        else Some((d.specId, d.file.partition))))
-      if (eqGroups.size > 20)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"table ${table.name}: ${eqGroups.size} equality-delete groups stack " +
-            s"${eqGroups.size} anti-joins onto every scan — run rewriteDataFiles " +
-            "to fold them into the data")
-      eqGroups.zipWithIndex.foreach {
-        case (((ids, delSeq, scope), group), gi) =>
-          val keyNames = ids.map(id => table.schema.idToField(id).name)
-          val dels = spark.read.options(encConf).parquet(group.map(_.file.filePath): _*)
-            .select(keyNames.map(col): _*).distinct()
-          val scopeCond = scope match {
-            case None => lit(true)
-            case Some((sid, tup)) =>
-              // partition-scoped: restrict the anti-join to rows from
-              // same-spec-same-tuple files (scoped foreign deletes are
-              // rare and the file list is the already-pruned task set)
-              val inScope = tasks.filter(t =>
-                t.specId == sid && t.file.partition == tup)
-                .map(t => qualify(t.file.filePath))
-              if (inScope.isEmpty) lit(false) else work(FILE).isin(inScope: _*)
-          }
-          if (mark) {
-            val flagName = s"_gf_del_eq$gi"
-            val flagged = dels.withColumn(flagName, lit(true))
-            val keyCond = keyNames.map(n => work(n) === flagged(n)).reduce(_ && _)
-            work = work.join(flagged,
-              keyCond && work(SEQ) < lit(delSeq) && scopeCond, "left")
-            keyNames.foreach(n => work = work.drop(flagged(n)))
-            flags += flagName
-          } else {
-            val keyCond = keyNames.map(n => work(n) === dels(n)).reduce(_ && _)
-            work = work.join(dels, keyCond && work(SEQ) < lit(delSeq) && scopeCond,
-              "left_anti")
-          }
-      }
-      work = work.drop(SEQ)
-    }
-    if (mark) {
-      // keep the row coordinates under their reserved names: the joins
-      // above put a second parquet relation (hence a second `_metadata`)
-      // in scope, so addMetadataColumns could no longer derive them
-      // unambiguously — it reuses these instead
-      work.withColumn(DeletedCol,
-          flags.map(f => coalesce(col(f), lit(false)))
-            .reduceOption(_ || _).getOrElse(lit(false)))
-        .drop(flags.toSeq: _*)
-        .withColumnRenamed(FILE, "_file").withColumnRenamed(POS, "_pos")
-    } else work.drop(FILE, POS)
+    if (deletes.isEmpty) return None
+    val plan = DeletePlan.build(table, deletes,
+      tasks.map(t => (qualifyPath(t.file.filePath), t.sequenceNumber, t.specId,
+        t.file.partition)), qualifyPath)
+    val keys = plan.keyNames
+    val readers = DeleteReaders.build(scanSpark,
+      org.apache.spark.sql.types.StructType(keys.map(table.schema.toSpark(_))),
+      plan.eqGroups.map(_.keyNames).distinct,
+      () => graft.SessionConf.readConf(scanSpark, encConf))
+    val planBc = scanSpark.sparkContext.broadcast(plan)
+    Some(keyColumn => graft.functions.MorDeletedExpr.column(
+      keys.map(k => k -> col(keyColumn(k))), planBc, readers))
   }
 }

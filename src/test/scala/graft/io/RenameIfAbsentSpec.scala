@@ -34,6 +34,58 @@ class RenameIfAbsentSpec extends AnyFunSuite {
     assert(io.readString(s"$dir/v2.json") === "loser")
   }
 
+  test("renameIfAbsent falls back to exists+rename where hard links are unsupported") {
+    val io = FileIO.local()
+    val failures = Seq[Throwable](
+      new UnsupportedOperationException("links not supported"),
+      new java.nio.file.FileSystemException("v2.json", null, "Operation not permitted"))
+    failures.foreach { failure =>
+      val dir = tmpDir()
+      val noLinks = (_: java.nio.file.Path, _: java.nio.file.Path) => throw failure
+      io.writeString(s"$dir/a.tmp", "winner")
+      io.writeString(s"$dir/b.tmp", "loser")
+      assert(io.renameIfAbsent(s"$dir/a.tmp", s"$dir/v2.json", noLinks),
+        s"${failure.getClass.getSimpleName} must degrade, not fail the commit")
+      assert(!io.exists(s"$dir/a.tmp"))
+      assert(!io.renameIfAbsent(s"$dir/b.tmp", s"$dir/v2.json", noLinks))
+      assert(io.readString(s"$dir/v2.json") === "winner")
+    }
+  }
+
+  test("renameIfAbsent propagates a missing path or denied access instead of reporting a lost race") {
+    val io = FileIO.local()
+    val failures = Seq[Throwable](
+      new java.nio.file.NoSuchFileException("a.tmp"),
+      new java.nio.file.AccessDeniedException("v2.json"))
+    failures.foreach { failure =>
+      val dir = tmpDir()
+      val broken = (_: java.nio.file.Path, _: java.nio.file.Path) => throw failure
+      io.writeString(s"$dir/a.tmp", "winner")
+      val thrown = intercept[java.nio.file.FileSystemException](
+        io.renameIfAbsent(s"$dir/a.tmp", s"$dir/v2.json", broken))
+      assert(thrown eq failure)
+      assert(io.exists(s"$dir/a.tmp"), "no fallback rename may run")
+      assert(!io.exists(s"$dir/v2.json"))
+    }
+    // and the real primitive: a source that is gone is an error, not `false`
+    val dir = tmpDir()
+    intercept[java.nio.file.NoSuchFileException](
+      io.renameIfAbsent(s"$dir/missing.tmp", s"$dir/v2.json"))
+  }
+
+  test("renameIfAbsent removes the source's checksum sidecar after linking") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.setBoolean("graft.io.nio-local", false) // checksummed local FS
+    val io = new FileIO(conf)
+    val dir = tmpDir()
+    io.writeString(s"$dir/a.tmp", "winner")
+    val sidecar = java.nio.file.Paths.get(dir, ".a.tmp.crc")
+    assert(java.nio.file.Files.exists(sidecar), "checksummed FS writes a .crc sidecar")
+    assert(io.renameIfAbsent(s"$dir/a.tmp", s"$dir/v2.json"))
+    assert(!java.nio.file.Files.exists(sidecar), "the moved source's sidecar must not be orphaned")
+    assert(io.readString(s"$dir/v2.json") === "winner")
+  }
+
   test("catalog commit CAS: concurrent committers from one base never lose an acknowledged commit") {
     import graft.spec.{IcebergSchema, PartitionSpec}
     import org.apache.spark.sql.types._

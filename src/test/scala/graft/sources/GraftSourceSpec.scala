@@ -659,8 +659,8 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         case k: GraftKeyedInputPartition => Seq(k.part)
         case g: GraftInputPartition => Seq(g)
       }
-    val withDel = parts.filter(_.posDeleteFiles.nonEmpty)
-    val without = parts.filter(_.posDeleteFiles.isEmpty)
+    val withDel = parts.filter(_.deletes.posFiles.nonEmpty)
+    val without = parts.filter(_.deletes.posFiles.isEmpty)
     assert(withDel.map(_.path).distinct.length === 1,
       "only the deleted-from data file may carry pos-delete work")
     assert(without.nonEmpty)

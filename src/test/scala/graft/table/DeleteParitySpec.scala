@@ -1,0 +1,243 @@
+package graft.table
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.scalacheck.Gen
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog.HadoopCatalog
+import graft.expr.{And, Predicate}
+import graft.io.FileIO
+import graft.meta._
+import graft.spec._
+
+/** The two merge-on-read readers must agree: the V1 relation path
+  * (`toDF`, `readTasksLineage`, `withDeletedColumn`) and `format("graft")`
+  * apply deletes through one [[DeleteFilter]]. Random tables (v2/v3,
+  * partitioned or not, name-mapped or not) take random mixes of appends,
+  * position deletes, deletion vectors, global and partition-scoped
+  * equality deletes (null keys included), upserts and compactions; after
+  * every step both readers are compared with each other and with an
+  * in-memory model of the live rows. One step is one case. */
+class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+  private var wh: String = _
+
+  override def beforeAll(): Unit = {
+    spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    wh = java.nio.file.Files.createTempDirectory("graft-parity").toString
+  }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def catalog = new HadoopCatalog(wh, FileIO.fromSpark(spark))
+
+  /** (id, part, k, v): `id` is unique per written row, `k` the
+    * equality-delete key (nullable). */
+  private type Rec = (Long, String, Option[Long], String)
+
+  private sealed trait Op
+  private case class Append(rows: Int) extends Op
+  private case class PosDelete(lo: Int, width: Int, dv: Boolean) extends Op
+  private case class EqDelete(keys: Seq[Option[Long]]) extends Op
+  private case class ScopedEqDelete(part: String, keys: Seq[Long]) extends Op
+  private case class Upsert(keys: Seq[Option[Long]]) extends Op
+  private case object Compact extends Op
+
+  private case class Scenario(v3: Boolean, partitioned: Boolean, mapped: Boolean,
+      ops: Seq[Op])
+
+  private val keyGen: Gen[Option[Long]] =
+    Gen.frequency(4 -> Gen.choose(0L, 5L).map(Some(_)), 1 -> Gen.const(None))
+
+  private def opGen(v3: Boolean, partitioned: Boolean): Gen[Op] = Gen.frequency(
+    3 -> Gen.choose(1, 6).map(Append(_)),
+    3 -> (for { lo <- Gen.choose(0, 30); w <- Gen.choose(1, 6)
+      dv <- if (v3) Gen.oneOf(true, false) else Gen.const(false) }
+      yield PosDelete(lo, w, dv)),
+    3 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, keyGen)).map(EqDelete(_)),
+    (if (partitioned) 2 else 0) -> (for { p <- Gen.oneOf("a", "b")
+      n <- Gen.choose(1, 2); ks <- Gen.listOfN(n, Gen.choose(0L, 5L)) }
+      yield ScopedEqDelete(p, ks)),
+    2 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, keyGen)).map(Upsert(_)),
+    1 -> Gen.const(Compact))
+
+  private val scenarioGen: Gen[Scenario] = for {
+    v3 <- Gen.oneOf(true, false)
+    mapped <- Gen.frequency(1 -> true, 4 -> false)
+    partitioned <- if (mapped) Gen.const(false) else Gen.oneOf(true, false)
+    ops <- Gen.listOfN(8, opGen(v3, partitioned))
+  } yield Scenario(v3, partitioned, mapped, ops)
+
+  private val Scenarios = 25
+  private val Cols = Seq("id", "part", "k", "v")
+
+  private def frame(rows: Seq[Rec]): DataFrame = {
+    val ss = spark; import ss.implicits._
+    rows.map { case (id, p, k, v) => (id, p, k.map(Long.box).orNull, v) }
+      .toDF("id", "part", "k", "v").coalesce(1)
+  }
+
+  private def sorted(df: DataFrame, cols: Seq[String]): Seq[Row] =
+    df.select(cols.map(col): _*).collect().toSeq.sortBy(_.getLong(0))
+
+  private def recs(rows: Seq[Row]): Set[Rec] = rows.map(r =>
+    (r.getLong(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+      r.getString(3))).toSet
+
+  /** A partition-scoped equality delete on `k`, committed the way a
+    * foreign partitioned writer would (delete file under the partitioned
+    * spec with the partition's tuple). */
+  private def scopedEqDelete(t: GraftTable, part: String, keys: Seq[Long]): GraftTable = {
+    val ss = spark; import ss.implicits._
+    val uuid = java.util.UUID.randomUUID().toString
+    val dir = s"${t.location}/data/scoped-$uuid"
+    keys.distinct.toDF("k").coalesce(1).write.parquet(dir)
+    val (path, len) = t.io.listFiles(dir).filter(_._1.endsWith(".parquet")).head
+    val file = DataFile(content = FileContent.EqualityDeletes, filePath = path,
+      fileFormat = "PARQUET", partition = Seq(part), recordCount = keys.distinct.size.toLong,
+      fileSizeInBytes = len, equalityIds = Seq(t.schema.findField("k").get.id))
+    Commits.commit(t, "delete", uuid, Map.empty) { (base, seq, snapshotId) =>
+      val entry = ManifestEntry(ManifestStatus.Added, Some(snapshotId),
+        Some(seq), Some(seq), file)
+      Commits.writeManifest(t.io, base, s"$uuid-d0", Seq(entry),
+        base.currentSchema, base.defaultSpec, ManifestContent.Deletes,
+        snapshotId, seq) +: Commits.baseManifests(t.io, base)
+    }
+  }
+
+  test(s"V1 and DSv2 readers agree on random delete mixes ($Scenarios scenarios x 8 steps)") {
+    var seed = org.scalacheck.rng.Seed(20261018L)
+    var cases = 0
+    (0 until Scenarios).foreach { si =>
+      val sc = scenarioGen.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      val rng = new scala.util.Random(si)
+      val name = s"parity_$si"
+      var nextId = 0L
+      def fresh(n: Int, keys: Seq[Option[Long]] = Nil): Seq[Rec] =
+        (0 until n).map { i =>
+          nextId += 1
+          (nextId, if (rng.nextBoolean()) "a" else "b",
+            if (i < keys.size) keys(i) else if (rng.nextInt(5) == 0) None
+            else Some(rng.nextInt(6).toLong),
+            s"v$nextId-${rng.nextInt(100)}")
+        }
+      val schema = IcebergSchema.fromSpark(frame(Nil).schema)
+      val spec =
+        if (sc.partitioned)
+          PartitionSpec(0, Seq(PartitionField(schema.findField("part").get.id,
+            1000, "part", Transform.Identity)))
+        else PartitionSpec.unpartitioned
+      var t = GraftTable.create(name, catalog, schema, spec,
+        Map("format-version" -> (if (sc.v3) "3" else "2")))
+      var model = Set.empty[Rec]
+      if (sc.mapped) {
+        // id-less foreign parquet registered in place: name-mapped reads
+        val rows = fresh(6)
+        val dir = s"$wh/foreign_$si"
+        frame(rows).write.parquet(dir)
+        t = t.addFiles(spark, t.io.listFiles(dir).map(_._1).filter(_.endsWith(".parquet")))
+        assert(t.metadata.properties.get("graft.read.use-name-mapping").contains("true"))
+        model = rows.toSet
+      } else {
+        val rows = fresh(6)
+        t = t.append(frame(rows))
+        model = rows.toSet
+      }
+
+      sc.ops.zipWithIndex.foreach { case (op, step) =>
+        val ctx = s"scenario $si ($sc) step $step: $op"
+        op match {
+          case Append(n) =>
+            val rows = fresh(n)
+            t = t.append(frame(rows))
+            model ++= rows
+          case PosDelete(lo, w, dv) =>
+            val p = And(Predicate.gtEq("id", lo.toLong), Predicate.lt("id", (lo + w).toLong))
+            t = if (dv) t.deleteWhereDV(p, spark) else t.deleteWhere(p, spark)
+            model = model.filterNot(r => r._1 >= lo && r._1 < lo + w)
+          case EqDelete(keys) =>
+            val ss = spark; import ss.implicits._
+            t = t.equalityDelete(keys.map(_.map(Long.box).orNull).toDF("k"), Seq("k"))
+            val gone = keys.flatten.toSet
+            model = model.filterNot(r => r._3.exists(gone))
+          case ScopedEqDelete(part, keys) =>
+            t = scopedEqDelete(t, part, keys)
+            model = model.filterNot(r => r._2 == part && r._3.exists(keys.toSet))
+          case Upsert(keys) =>
+            val rows = fresh(keys.size, keys)
+            t = t.upsert(frame(rows), Seq("k"))
+            val gone = keys.flatten.toSet
+            model = model.filterNot(r => r._3.exists(gone)) ++ rows
+          case Compact =>
+            t = t.rewriteDataFiles(spark)
+        }
+
+        val dsv2 = spark.read.format("graft").option("warehouse", wh)
+          .option("table", name).load()
+        val v1 = sorted(t.newScan().toDF(spark), Cols)
+        assert(recs(v1) === model, s"V1 rows vs model — $ctx")
+        assert(v1 === sorted(dsv2, Cols), s"V1 vs DSv2 rows — $ctx")
+
+        val marked = t.newScan().withDeletedColumn().toDF(spark)
+        val markCols = Cols ++ Seq("_file", "_pos", "_deleted")
+        val v1Marked = sorted(marked, markCols)
+        assert(recs(v1Marked.filterNot(_.getBoolean(6))) === model,
+          s"V1 _deleted marker vs model — $ctx")
+        val lineageCols = Cols ++ Seq(RowLineage.RowIdName, RowLineage.LastUpdatedName)
+        val v1Lineage = sorted(
+          t.newScan().readTasksLineage(spark, t.newScan().planFiles()), lineageCols)
+        assert(recs(v1Lineage) === model, s"V1 lineage rows vs model — $ctx")
+        if (!sc.mapped) {
+          // metadata columns are served natively only without name mapping
+          assert(v1Marked === sorted(dsv2, markCols), s"V1 vs DSv2 _deleted — $ctx")
+          assert(v1Lineage === sorted(dsv2, lineageCols), s"V1 vs DSv2 lineage — $ctx")
+        }
+        cases += 1
+      }
+    }
+    assert(cases >= 200)
+  }
+
+  test("a V1 scan with position and equality deletes plans no join, exchange or job for them") {
+    val ss = spark; import ss.implicits._
+    val src = (1L to 40L).map(i => (i, if (i % 2 == 0) "a" else "b", i % 7, s"v$i"))
+      .toDF("id", "part", "k", "v")
+    var t = GraftTable.create("parity_plan", catalog, IcebergSchema.fromSpark(src.schema))
+    t = t.append(src.coalesce(2))
+      .deleteWhere(Predicate.lt("id", 5L), spark)
+      .equalityDelete(Seq(3L).toDF("k"), Seq("k"))
+    val deletes = t.newScan().planDeletes()
+    assert(deletes.exists(_.file.content == FileContent.PositionDeletes))
+    assert(deletes.exists(_.file.content == FileContent.EqualityDeletes))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val df = try t.newScan().toDF(spark) finally {
+      org.apache.spark.GraftListenerBridge.flushListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0, "building the scan must not read delete files on the driver")
+    val optimized = df.queryExecution.optimizedPlan
+    assert(optimized.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      .isEmpty, optimized.treeString)
+    val physical = df.queryExecution.sparkPlan
+    assert(physical.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+      .isEmpty, physical.treeString)
+    assert(physical.toString.contains("mor_deleted"), physical.treeString)
+    assert(df.count() === (1L to 40L).count(i => i >= 5 && i % 7 != 3))
+  }
+}

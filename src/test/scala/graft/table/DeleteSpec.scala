@@ -119,6 +119,34 @@ class DeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"delete manifests must use the unpartitioned spec, got ${delMs.map(_.partitionSpecId)}")
   }
 
+  test("more equality-delete groups than the JVM cache holds: each delete file loads once per task") {
+    val s = spark
+    import s.implicits._
+    val schema = IcebergSchema(0, Seq(
+      NestedField(1, "id", IcebergType.LongT, required = false)))
+    var t = GraftTable.create("eqmany", catalog, schema, PartitionSpec.unpartitioned)
+    (0 until 4).foreach(f => t = t.append((f * 10L until f * 10L + 10).toDF("id")))
+    // one group per commit (distinct sequence numbers), every group
+    // applying to every data file — more groups than the JVM key-set cache
+    val groups = 36
+    (0 until groups).foreach(k => t = t.equalityDelete(Seq(k.toLong).toDF("id"), Seq("id")))
+    val deleteFiles = t.newScan().planDeletes().size
+    assert(deleteFiles >= groups)
+
+    // every data file in ONE scan task, so the task moves file to file
+    val one = spark.newSession()
+    one.conf.set("spark.sql.files.maxPartitionBytes", (1L << 30).toString)
+    one.conf.set("spark.sql.files.openCostInBytes", "1")
+    one.conf.set("spark.sql.files.minPartitionNum", "1")
+    val df = t.newScan().toDF(one)
+    assert(df.rdd.getNumPartitions === 1)
+    val before = DeleteFilter.eqFilesLoaded.get()
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq === (groups.toLong until 40L))
+    assert(DeleteFilter.eqFilesLoaded.get() - before === deleteFiles,
+      "the task must keep its key sets across its data files, not re-read " +
+        "evicted groups from disk for every file")
+  }
+
   test("all-null partition tuple under a partitioned spec scopes to the null partition") {
     val s = spark
     import s.implicits._
@@ -200,6 +228,26 @@ class DeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     t = t.rewriteDataFiles(spark)
     assert(t.newScan().planDeletes().isEmpty)
     assert(t.newScan().toDF(spark).collect().toSet === pre)
+  }
+
+  test("upsert: a failed data write reclaims the already-written delete keys") {
+    val ss = spark; import ss.implicits._
+    val src = Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "name", "v")
+    val t = GraftTable.create("ups_fail", catalog, IcebergSchema.fromSpark(src.schema))
+      .append(src)
+    val keys = Seq((2L, "b2", 21)).toDF("id", "name", "v")
+    // the key side writes from `keys`; the data side fails in its tasks
+    val broken = keys.withColumn("name",
+      org.apache.spark.sql.functions.expr("cast(raise_error('injected write failure') as string)"))
+    val e = intercept[Exception] {
+      DeleteWriter.upsert(t, broken, Seq("id"), spark, deleteKeys = Some(keys))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected write failure")))
+    val leaked = t.io.listFiles(s"${t.location}/data")
+      .filter(_._1.contains("/deletes-"))
+    assert(leaked.isEmpty, s"delete-key files leaked: $leaked")
+    assert(t.refresh().metadata.currentSnapshotId === t.metadata.currentSnapshotId)
   }
 
   test("position deletes: DELETE WHERE then scan == filtered source") {
