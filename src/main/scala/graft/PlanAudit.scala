@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * WholeStageCodegen spans can be inspected per round.
   *
   * Run: sbt "runMain graft.PlanAudit [sfDir]"; SPARK_GRAFT_BENCH_ONLY=q1,q2
-  * restricts it to the named queries, as in [[Bench]].
+  * restricts it to the named queries, which may be any registered query,
+  * not only the bench set.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -22,8 +23,8 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    Registry.benchQueries.sortBy(_.name)
-      .filter(q => only.forall(_.contains(q.name))).foreach { q =>
+    only.fold(Registry.benchQueries)(names => Registry.all.filter(q => names(q.name)))
+      .sortBy(_.name).foreach { q =>
       println(s"\n===== ${q.name} =====")
       try println(q.fn(spark, sfDir).queryExecution
         .explainString(ExplainMode.fromString("formatted")))

@@ -36,6 +36,12 @@ final class FileIO(val conf: Configuration) extends Serializable {
 
   def exists(path: String): Boolean = fs(path).exists(new Path(path))
 
+  /** `path` qualified by its filesystem (`file:/…` for a bare local
+    * path): the rendering Spark's `_metadata.file_path` shows and that
+    * position-delete rows written from it store. */
+  def qualify(path: String): String =
+    fs(path).makeQualified(new Path(path)).toString
+
   /** Text read with gzip sniffing (reference compression.rs: metadata
     * JSON may be gzip-compressed — e.g. `write.metadata.compression-codec
     * = gzip`, or a foreign `.gz.metadata.json`). Detection is by magic
@@ -190,7 +196,7 @@ object FileIO {
   private lazy val confTemplate: Configuration = {
     val c = new Configuration()
     c.get("io.file.buffer.size") // force-load properties into the template
-    c
+    new ReadOnlyConfiguration(c)
   }
 
   /** A fresh, mutable Configuration copied from the parsed template —
@@ -213,6 +219,34 @@ object FileIO {
     }
 
   def local(): FileIO = new FileIO(sharedConf())
+
+  /** A loaded Configuration whose mutators throw: the shared template
+    * behind [[readOnlyConf]] can be read by any number of callers but
+    * changed by none. Every public mutator funnels into the overrides
+    * below (`setInt`, `setBoolean`, … call `set`). Copies made from it
+    * (`new Configuration(ro)`) are ordinary mutable confs. */
+  private[io] final class ReadOnlyConfiguration(loaded: Configuration)
+      extends Configuration(loaded) {
+    private def refuse(): Nothing = throw new UnsupportedOperationException(
+      "read-only shared Configuration; take FileIO.sharedConf() to mutate")
+    override def set(name: String, value: String, source: String): Unit = refuse()
+    override def unset(name: String): Unit = refuse()
+    override def clear(): Unit = refuse()
+    override def addResource(name: String): Unit = refuse()
+    override def addResource(name: String, restricted: Boolean): Unit = refuse()
+    override def addResource(url: java.net.URL): Unit = refuse()
+    override def addResource(url: java.net.URL, restricted: Boolean): Unit = refuse()
+    override def addResource(file: Path): Unit = refuse()
+    override def addResource(file: Path, restricted: Boolean): Unit = refuse()
+    override def addResource(in: InputStream): Unit = refuse()
+    override def addResource(in: InputStream, restricted: Boolean): Unit = refuse()
+    override def addResource(in: InputStream, name: String): Unit = refuse()
+    override def addResource(in: InputStream, name: String,
+        restricted: Boolean): Unit = refuse()
+    override def addResource(conf: Configuration): Unit = refuse()
+    override def setClassLoader(cl: ClassLoader): Unit = refuse()
+    override def reloadConfiguration(): Unit = refuse()
+  }
 
   /** FileIO configured from reference-style cloud storage properties
     * (`s3.endpoint`, `gcs.project-id`, `adls.account-key`, …) — the

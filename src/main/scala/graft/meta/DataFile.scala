@@ -48,7 +48,16 @@ final case class DataFile(
       * file's first row; row N carries first_row_id + N. Assigned from
       * TableMetadata.nextRowId at append commit; None = no lineage (delete
       * files, pre-lineage appends, compaction rewrites). */
-    firstRowId: Option[Long] = None)
+    firstRowId: Option[Long] = None) {
+
+  /** Whether this file was written without column `fieldId` (the v3
+    * initial-default rule, shared by every reader and planner): decided
+    * from the harvested stats maps alone, no footer read. A stat-less
+    * imported file counts as having every column, so it null-fills. */
+  def lacksColumn(fieldId: Int): Boolean =
+    (columnSizes.nonEmpty || valueCounts.nonEmpty) &&
+      !columnSizes.contains(fieldId) && !valueCounts.contains(fieldId)
+}
 
 object ManifestStatus {
   val Existing = 0

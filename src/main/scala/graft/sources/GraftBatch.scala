@@ -54,6 +54,11 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
+  // the session the scan was built under: planning (split sizing,
+  // distributed planning) and the reader build use ITS conf, never the
+  // active session of whichever thread plans or executes the scan later
+  private val session = SparkSession.active
+
   // `_file` / `_pos` / `_spec_id` / `_partition` metadata columns
   // (SupportsMetadataColumns, metadata_columns.rs:33-90): appended by the
   // reader — `_file`, `_spec_id` and the `_partition` tuple are constant
@@ -91,8 +96,8 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     graft.spec.PartitionSpec.unifiedPartitionType(
       table.metadata.partitionSpecs, table.schema)
   private lazy val unifiedPartSchema: StructType =
-    StructType(unifiedPartType.fields.map(f => org.apache.spark.sql.types.StructField(
-      f.name, graft.spec.IcebergType.toSpark(f.fieldType), nullable = true)))
+    graft.spec.PartitionSpec.unifiedPartitionSchema(
+      table.metadata.partitionSpecs, table.schema)
 
   // projected schema rebuilt from the table schema so parquet.field.id
   // metadata survives whatever Spark passed through pruneColumns
@@ -124,19 +129,14 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
   }
 
   /** v3 initial-defaults the native reader serves for files written before
-    * the field existed (GraftTable.dfForTasks applies the same per-file
-    * rule on the V1 path): presence is decided from the harvested stats
-    * maps; stat-less imported files conservatively count as having every
-    * column. */
+    * the field existed — per file by `DataFile.lacksColumn`, the rule the
+    * V1 path shares. */
   private lazy val defaultedFields: Seq[graft.spec.NestedField] =
     table.schema.fields.filter(f =>
       f.initialDefault.isDefined && extendedNames.contains(f.name))
 
   private def missingDefaultNames(f: graft.meta.DataFile): Seq[String] =
-    if (defaultedFields.isEmpty) Nil
-    else if (f.columnSizes.isEmpty && f.valueCounts.isEmpty) Nil
-    else defaultedFields.filter(fd =>
-      !f.columnSizes.contains(fd.id) && !f.valueCounts.contains(fd.id)).map(_.name)
+    defaultedFields.filter(fd => f.lacksColumn(fd.id)).map(_.name)
 
   override def readSchema(): StructType = {
     val data = dataSchema().fields
@@ -170,11 +170,6 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
   override def description(): String =
     s"graft ${table.name}${if (predicate == AlwaysTrue) "" else s" filter=$predicate"}" +
       options.get("pushed-limit").map(n => s" limit=$n").getOrElse("")
-
-  private def qualify(p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    table.io.fs(p).makeQualified(hp).toString
-  }
 
   override def planInputPartitions(): Array[InputPartition] = planned
 
@@ -412,10 +407,10 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     //   - ordering: a scan whose files PROVE the table sort order skips
     //     packing entirely — the per-partition sort report (and the
     //     sort-elision it buys) outweighs task-count savings there.
-    val sqlConf = SparkSession.active.sessionState.conf
+    val sqlConf = session.sessionState.conf
     val openCost = sqlConf.filesOpenCostInBytes
     val minPartitionNum = sqlConf.filesMinPartitionNum
-      .getOrElse(SparkSession.active.sparkContext.defaultParallelism)
+      .getOrElse(session.sparkContext.defaultParallelism)
     val totalBytes = parts.map(_._2.length + openCost).sum
     val maxSplitBytes = math.min(sqlConf.filesMaxPartitionBytes,
       math.max(openCost, totalBytes / math.max(1, minPartitionNum)))
@@ -498,7 +493,7 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
       case _ => scan.estimatedDataEntries >= threshold
     }
     if (useDistributed)
-      scan.planCompactDistributed(SparkSession.active, projectedFieldIds,
+      scan.planCompactDistributed(session, projectedFieldIds,
         defaultedFields.map(f => (f.id, f.name)))
     else {
       val (tasks, m) = scan.planWithMetrics()
@@ -540,15 +535,15 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
           .getOrElse(throw new IllegalArgumentException(
             "incremental read on a table with no snapshots"))
         val allowed = table.newScan().appendsBetween(from.toLong, to)
-          .planFiles().map(t => qualify(t.file.filePath)).toSet
-        allPlanned0.filter(t => allowed(qualify(t.filePath)))
+          .planFiles().map(t => table.io.qualify(t.file.filePath)).toSet
+        allPlanned0.filter(t => allowed(table.io.qualify(t.filePath)))
     }
     lastScanMetrics = Some(planMetrics)
     val deletes = scan.planDeletes()
 
     val all = allPlanned
     val unlimited = fileFilter match {
-      case Some(keep) => all.filter(t => keep.contains(qualify(t.filePath)))
+      case Some(keep) => all.filter(t => keep.contains(table.io.qualify(t.filePath)))
       case None => all
     }
     // pushed limit (partial): truncate to the first files covering n rows
@@ -572,28 +567,16 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     // DeleteFileIndex analogue, DVs by referenced file, equality groups
     // sequenced after the file whose partition scope covers it
     val deletePlan = graft.table.DeletePlan.build(table, deletes,
-      tasks.map(t => (qualify(t.filePath), t.sequenceNumber, t.specId, t.partition)),
-      qualify, Some(eqInfo))
+      tasks.map(t => (table.io.qualify(t.filePath), t.sequenceNumber, t.specId, t.partition)),
+      Some(eqInfo))
     tasks.flatMap { t =>
-      val path = qualify(t.filePath)
+      val path = table.io.qualify(t.filePath)
       val size = t.fileSize
       val fileDeletes = deletePlan.forFile(path)
-      // the file's spec-shaped tuple projected into the unified struct
-      // (field-id addressed — same rule as the V1 metadata-column path)
       val partVals: Seq[Any] =
         if (!emitPartition) Nil
-        else {
-          val spec = table.metadata.specById(t.specId).getOrElse(table.spec)
-          val idxById = spec.fields.zipWithIndex
-            .map { case (f, i) => f.fieldId -> i }.toMap
-          unifiedPartType.fields.map { uf =>
-            idxById.get(uf.id) match {
-              case Some(i) if i < t.partition.length =>
-                graft.expr.Predicate.sparkValue(uf.fieldType, t.partition(i))
-              case _ => null
-            }
-          }
-        }
+        else graft.spec.PartitionSpec.unifiedPartitionValues(unifiedPartType,
+          table.metadata.specById(t.specId).getOrElse(table.spec), t.partition)
       val splits =
         if (fileDeletes.hasPositions || emitPos || emitRowId)
           // whole file in one slice: row indexes must be exact (`_pos` and
@@ -629,7 +612,6 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
     val ext = extendedSchema()
     // lineage physical columns ride at the END of the extended schema and
     // must be projected away (their values surface through the metadata
@@ -640,7 +622,7 @@ class GraftBatchScan(table: GraftTable, predicate: Predicate,
     val defaults: Map[String, Any] = defaultedFields.map(f =>
       f.name -> graft.meta.SingleValue.toCatalystValue(
         f.fieldType, f.initialDefault.get)).toMap
-    GraftReaderFactory.build(spark, table.schema.toSpark, ext, pushedFilters,
+    GraftReaderFactory.build(session, ext, pushedFilters,
       graft.crypto.Encryption.confFor(table.metadata.properties), emitFile, emitPos,
       eqKeySets = eqInfo.map(_.keyNames).distinct, outputOrdinals = outputOrdinals,
       defaults = defaults, emitSpecId = emitSpecId,
@@ -725,8 +707,8 @@ final class BytesReadMetric
 }
 
 /** One byte-range slice of a data file plus its delete context.
-  * `partitionValues` are EXTERNAL Scala values aligned to the scan's
-  * unified `_partition` schema (empty unless that column is projected). */
+  * `partitionValues` are Catalyst values aligned to the scan's unified
+  * `_partition` schema (empty unless that column is projected). */
 final case class GraftInputPartition(
     path: String,
     start: Long,
@@ -763,26 +745,10 @@ object GraftInputPartition {
 
   /** Split a delete-free data file at row-group boundaries into ~128 MB
     * read slices — the cluster distribution unit. */
-  def cleanSplits(path: String, size: Long, offsets: Seq[Long]): Seq[GraftInputPartition] = {
-    val target = 128L << 20
-    if (offsets.size <= 1 || size <= target)
-      Seq(GraftInputPartition(path, 0L, size, size, needsRowIndex = false))
-    else {
-      val bounds = offsets :+ size
-      val splits = Seq.newBuilder[GraftInputPartition]
-      var start = bounds.head
-      var i = 1
-      while (i < bounds.size) {
-        if (bounds(i) - start >= target || i == bounds.size - 1) {
-          splits += GraftInputPartition(path, start, bounds(i) - start, size,
-            needsRowIndex = false)
-          start = bounds(i)
-        }
-        i += 1
-      }
-      splits.result()
+  def cleanSplits(path: String, size: Long, offsets: Seq[Long]): Seq[GraftInputPartition] =
+    GraftTable.splitRanges(size, offsets).map { case (start, len) =>
+      GraftInputPartition(path, start, len, size, needsRowIndex = false)
     }
-  }
 }
 
 object GraftReaderFactory {
@@ -792,8 +758,8 @@ object GraftReaderFactory {
     * ns-as-long settings are baked into the broadcast hadoop conf and
     * captured closure state at build time, and the caller's session is
     * never mutated (the concurrent-scan hygiene contract). */
-  def build(spark: SparkSession, dataSchema: StructType, readSchema: StructType,
-      filters: Seq[Filter], encConf: Map[String, String] = Map.empty,
+  def build(spark: SparkSession, readSchema: StructType, filters: Seq[Filter],
+      encConf: Map[String, String] = Map.empty,
       emitFile: Boolean = false, emitPos: Boolean = false,
       eqKeySets: Seq[Seq[String]] = Nil,
       outputOrdinals: Option[Seq[Int]] = None,
@@ -809,12 +775,10 @@ object GraftReaderFactory {
     val fmt = new GraftParquetFileFormat()
     def conf() = graft.SessionConf.readConf(scanSpark, encConf)
     val rowOpts = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
-    val empty = StructType(Nil)
-    new GraftReaderFactory(
-      fmt.buildReaderWithPartitionValues(scanSpark, dataSchema, empty, readSchema,
-        filters, rowOpts, conf()),
-      fmt.buildReaderWithPartitionValues(scanSpark, dataSchema, empty, readSchema,
-        Nil, rowOpts, conf()),
+    // filtered and unfiltered readers over one conf broadcast
+    val Seq(filteredRead, plainRead) = fmt.buildReaders(scanSpark, StructType(Nil),
+      readSchema, Seq(filters, Nil), rowOpts, conf())
+    new GraftReaderFactory(filteredRead, plainRead,
       graft.table.DeleteReaders.build(scanSpark, readSchema, eqKeySets, () => conf()),
       emitFile, emitPos, readSchema, outputOrdinals, defaults,
       emitSpecId, partSchema, emitDeleted, emitRowId, emitLastSeq)
@@ -985,11 +949,8 @@ final class GraftPartitionReader(
   private def emitMeta =
     emitFile || emitPos || emitSpecId || partSchema.isDefined || emitDeleted ||
       emitRowId || emitLastSeq
-  private lazy val partStruct: Any = partSchema.map { ps =>
-    org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(ps)(
-        org.apache.spark.sql.Row(part.partitionValues: _*))
-  }.orNull
+  private lazy val partStruct: Any =
+    partSchema.map(_ => new GenericInternalRow(part.partitionValues.toArray)).orNull
   private lazy val metaRow = new GenericInternalRow(
     (if (emitFile)
       Seq[Any](org.apache.spark.unsafe.types.UTF8String.fromString(part.path))

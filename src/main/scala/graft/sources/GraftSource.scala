@@ -188,11 +188,8 @@ final class GraftSparkTable(table: GraftTable, viaProvider: Boolean = false,
         override def dataType(): org.apache.spark.sql.types.DataType = dt
         override def isNullable: Boolean = nul
       }
-    val partType = graft.spec.PartitionSpec.unifiedPartitionType(
+    val partSchema = graft.spec.PartitionSpec.unifiedPartitionSchema(
       table.metadata.partitionSpecs, table.schema)
-    val partSchema = org.apache.spark.sql.types.StructType(partType.fields.map(
-      f => org.apache.spark.sql.types.StructField(f.name,
-        graft.spec.IcebergType.toSpark(f.fieldType), nullable = true)))
     Array(
       col(GraftBatchScan.FileColumn, org.apache.spark.sql.types.StringType, false),
       col(GraftBatchScan.PosColumn, org.apache.spark.sql.types.LongType, false),

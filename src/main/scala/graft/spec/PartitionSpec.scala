@@ -103,6 +103,34 @@ object PartitionSpec {
     })
   }
 
+  /** [[unifiedPartitionType]] as the Spark struct of the `_partition`
+    * metadata column, every field nullable — the one schema both readers
+    * and the SQL metadata-column list serve. */
+  def unifiedPartitionSchema(specs: Seq[PartitionSpec],
+      schema: IcebergSchema): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      unifiedPartitionType(specs, schema).fields.map(f =>
+        org.apache.spark.sql.types.StructField(f.name,
+          IcebergType.toSpark(f.fieldType), nullable = true)))
+
+  /** A file's `partition` tuple (written under `spec`) projected into the
+    * `unified` struct as Catalyst values: fields are addressed by field
+    * id, so evolution reorders and drops never misalign, and a field the
+    * file's spec lacks is null. */
+  def unifiedPartitionValues(unified: StructT, spec: PartitionSpec,
+      partition: Seq[Any]): Seq[Any] = {
+    val idxById = spec.fields.zipWithIndex.map { case (f, i) => f.fieldId -> i }.toMap
+    unified.fields.map { uf =>
+      idxById.get(uf.id) match {
+        case Some(i) if i < partition.length =>
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToCatalystConverter(IcebergType.toSpark(uf.fieldType))(
+              graft.expr.Predicate.sparkValue(uf.fieldType, partition(i)))
+        case _ => null
+      }
+    }
+  }
+
   def fromJson(n: JsonNode): PartitionSpec =
     PartitionSpec(
       specId = n("spec-id").asInt(),

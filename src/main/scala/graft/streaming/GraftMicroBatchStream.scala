@@ -131,10 +131,8 @@ final class GraftMicroBatchStream(
     t.newScan().appendsBetween(from, to, skipNonAppend).planFiles()
       .filter(task => InclusiveMetricsEvaluator.fileMightMatch(bound, task.file, t.schema))
       .flatMap { task =>
-        val hp = new org.apache.hadoop.fs.Path(task.file.filePath)
-        val path = t.io.fs(task.file.filePath).makeQualified(hp).toString
-        GraftInputPartition.cleanSplits(path, task.file.fileSizeInBytes,
-          task.file.splitOffsets)
+        GraftInputPartition.cleanSplits(t.io.qualify(task.file.filePath),
+          task.file.fileSizeInBytes, task.file.splitOffsets)
       }.toArray
   }
 
@@ -144,7 +142,7 @@ final class GraftMicroBatchStream(
     val read =
       if (projected.isEmpty) full
       else StructType(projected.flatMap(n => full.fields.find(_.name == n)))
-    GraftReaderFactory.build(SparkSession.active, full, read, pushedFilters,
+    GraftReaderFactory.build(SparkSession.active, read, pushedFilters,
       graft.crypto.Encryption.confFor(t.metadata.properties))
   }
 

@@ -347,11 +347,7 @@ object AppendWriter {
       .map(r => r.getString(0) ->
         floatFields.zipWithIndex.map { case (f, i) => f.id -> r.getLong(i + 1) }.toMap)
       .toMap
-    def qualify(p: String): String = {
-      val hp = new Path(p)
-      table.io.fs(p).makeQualified(hp).toString
-    }
-    dataFiles.map(d => perFile.get(qualify(d.filePath))
+    dataFiles.map(d => perFile.get(table.io.qualify(d.filePath))
       .map(counts => d.copy(nanValueCounts = counts)).getOrElse(d))
   }
 

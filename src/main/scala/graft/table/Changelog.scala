@@ -142,11 +142,6 @@ object Changelog {
     }
   }
 
-  private def qualify(table: GraftTable, p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    table.io.fs(p).makeQualified(hp).toString
-  }
-
   /** Rows snapshot `s` removed, resolved against the parent-visible scan:
     * whole removed files, new position/DV delete positions, and new
     * equality-delete keys (sequence-scoped). */
@@ -160,7 +155,7 @@ object Changelog {
     val removedPaths = entriesOf(table, s, ManifestContent.Data)
       .filter(e => e.status == ManifestStatus.Deleted &&
         e.snapshotId.contains(s.snapshotId))
-      .map(e => qualify(table, e.dataFile.filePath))
+      .map(e => table.io.qualify(e.dataFile.filePath))
     val newDeletes = entriesOf(table, s, ManifestContent.Deletes)
       .filter(e => e.status == ManifestStatus.Added &&
         e.snapshotId.contains(s.snapshotId))
@@ -192,7 +187,7 @@ object Changelog {
       import spark.implicits._
       val descriptors = dvs.flatMap(e => e.dataFile.referencedDataFile.map(ref =>
         (e.dataFile.filePath, e.dataFile.contentOffset.getOrElse(0L),
-          e.dataFile.contentSizeInBytes.getOrElse(0L), qualify(table, ref))))
+          e.dataFile.contentSizeInBytes.getOrElse(0L), table.io.qualify(ref))))
       val dvRows = spark.sparkContext
         .parallelize(descriptors, math.max(1, math.min(descriptors.size, 64)))
         .flatMap { case (puffin, offset, len, ref) =>

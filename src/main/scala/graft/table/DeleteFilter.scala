@@ -114,8 +114,8 @@ object DeletePlan {
     * their referenced data file; `eqGroups` defaults to
     * [[eqGroupsOf]]. */
   def build(table: GraftTable, deletes: Seq[DeleteTask], files: Seq[DataFileRef],
-      qualify: String => String,
       eqGroups: Option[Seq[EqDeleteGroup]] = None): DeletePlan = {
+    val qualify: String => String = table.io.qualify
     val (dvTasks, posTasks) = deletes
       .filter(_.file.content == FileContent.PositionDeletes)
       .partition(_.file.fileFormat == "PUFFIN")

@@ -51,13 +51,7 @@ object DeleteWriter {
 
     val matches =
       if (partial.isEmpty) null
-      else spark.read
-        .options(graft.crypto.Encryption.confFor(table.metadata.properties))
-        .schema(table.schema.toSpark)
-        .parquet(partial.map(_.file.filePath): _*)
-        .filter(Predicate.toColumn(bound, table.schema))
-        .select(col("_metadata.file_path").as("file_path"),
-          col("_metadata.row_index").as("pos"))
+      else matchingPositions(table, partial, bound, spark)
         .sortWithinPartitions("file_path", "pos")
 
     if (whole.isEmpty)
@@ -94,6 +88,19 @@ object DeleteWriter {
       deleteManifest ++ rewritten
     }
   }
+
+  /** (file_path, pos) of the live rows of `tasks` matching `bound`, read
+    * through the table's own scan: field-id resolution, or the name
+    * mapping for registered id-less files (a plain parquet read with the
+    * id-carrying schema refuses those files), with existing deletes
+    * applied. The frame runs under the caller's session (its shuffle and
+    * AQE settings); the relation keeps the scan conf. */
+  private def matchingPositions(table: GraftTable, tasks: Seq[FileScanTask],
+      bound: Predicate, spark: SparkSession): DataFrame =
+    graft.SessionConf.bind(spark, table.newScan().withMetadataColumns()
+      .readTasks(spark, tasks)
+      .filter(Predicate.toColumn(bound, table.schema))
+      .select(col("_file").as("file_path"), col("_pos").as("pos")))
 
   /** Write (file_path, pos) parquet rows and return their DataFile
     * descriptors (no commit). */
@@ -132,13 +139,7 @@ object DeleteWriter {
     val tasks = table.newScan().withFilter(bound).planFiles()
     if (tasks.isEmpty) return table
 
-    val matches = spark.read
-      .options(graft.crypto.Encryption.confFor(table.metadata.properties))
-      .schema(table.schema.toSpark)
-      .parquet(tasks.map(_.file.filePath): _*)
-      .filter(Predicate.toColumn(bound, table.schema))
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("pos"))
+    val matches = matchingPositions(table, tasks, bound, spark)
 
     import spark.implicits._
     val commitUuid = UUID.randomUUID().toString

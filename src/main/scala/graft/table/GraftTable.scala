@@ -1,7 +1,8 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
+import org.apache.spark.sql.functions.{coalesce, col, lit, struct, when}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.catalog.{Catalog, CommitRetry}
 import graft.expr.{AlwaysTrue, ExpressionEvaluator, InclusiveMetricsEvaluator, InclusiveProjection, ManifestEvaluator, Predicate}
@@ -447,8 +448,9 @@ object GraftTable {
   }
 
   /** Greedy row-group packing into ~target-sized (start, length) read
-    * ranges — shared by local and distributed planning so both produce
-    * byte-identical splits. */
+    * ranges — the one split rule of local and distributed planning,
+    * `planSplits` and the streaming reader, so all produce byte-identical
+    * splits. */
   def splitRanges(size: Long, offsets: Seq[Long], target: Long = 128L << 20)
       : Seq[(Long, Long)] =
     if (offsets.size <= 1 || size <= target) Seq((0L, size))
@@ -681,8 +683,10 @@ final class TableScan private[table] (
 
   /** Surface the reserved metadata columns (metadata_columns.rs:33-90):
     * `_file` (source file path), `_pos` (row position in file), `_spec_id`
-    * (partition spec of the file), `_partition` (typed partition tuple of
-    * the default spec; null for files of other specs). */
+    * (partition spec of the file), `_partition` (the file's partition
+    * tuple in the struct unified across all of the table's specs —
+    * partitioning.rs; null where the file's spec lacks a field) and the
+    * v3 lineage pair `_row_id` / `_last_updated_sequence_number`. */
   def withMetadataColumns(): TableScan =
     new TableScan(table, filter, selected, snapshotId, limitRows, metaCols = true,
       deletedCol)
@@ -885,14 +889,9 @@ final class TableScan private[table] (
           }
           .map { e =>
             val f = e.dataFile
-            val missing =
-              if (defaulted.isEmpty ||
-                  (f.columnSizes.isEmpty && f.valueCounts.isEmpty)) Nil
-              else defaulted.collect { case (id, n)
-                if !f.columnSizes.contains(id) && !f.valueCounts.contains(id) => n }
             CompactFileTask(f.filePath, f.fileSizeInBytes, f.recordCount,
               specId, e.sequenceNumber.getOrElse(mseq), f.partition,
-              f.sortOrderId, missing,
+              f.sortOrderId, defaulted.collect { case (id, n) if f.lacksColumn(id) => n },
               GraftTable.splitRanges(f.fileSizeInBytes, f.splitOffsets, targetSplitSize),
               f.nullValueCounts.filter(kv => projectedFieldIds(kv._1)),
               f.firstRowId)
@@ -942,25 +941,8 @@ final class TableScan private[table] (
     * semantics) and to verify split math against footer offsets. */
   def planSplits(targetSplitSize: Long = 128L << 20): Seq[FileSplit] =
     planFiles().flatMap { t =>
-      val size = t.file.fileSizeInBytes
-      val offsets = t.file.splitOffsets
-      if (offsets.size <= 1 || size <= targetSplitSize)
-        Seq(FileSplit(t, 0L, size))
-      else {
-        // greedy: accumulate row groups until the target is exceeded
-        val bounds = offsets :+ size
-        val splits = Seq.newBuilder[FileSplit]
-        var start = bounds.head
-        var i = 1
-        while (i < bounds.size) {
-          if (bounds(i) - start >= targetSplitSize || i == bounds.size - 1) {
-            splits += FileSplit(t, start, bounds(i) - start)
-            start = bounds(i)
-          }
-          i += 1
-        }
-        splits.result()
-      }
+      GraftTable.splitRanges(t.file.fileSizeInBytes, t.file.splitOffsets, targetSplitSize)
+        .map { case (start, len) => FileSplit(t, start, len) }
     }
 
   /** planFiles truncated to the first files covering `limitRows` —
@@ -1009,214 +991,144 @@ final class TableScan private[table] (
 
   private def dfForTasks(spark: SparkSession, tasks: Seq[FileScanTask]): DataFrame = {
     val sparkSchema = table.schema.toSpark
+    if (tasks.isEmpty) {
+      val empty = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
+      return if (deletedCol) empty.withColumn(DeletedCol, lit(false)) else empty
+    }
     // id-based projection (pipeline.rs:160-168) via a conf-carrying session
     // clone — the caller's session conf is never mutated, so concurrent
     // queries can't observe scan settings (graft.SessionConf). Encrypted
     // tables add their PME decryption entries as per-relation options.
     val reader = graft.SessionConf.scanSession(spark)
     val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
-    val base =
-      if (tasks.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
-      else {
-        val deleted = deletedRows(reader, tasks, encConf)
-        // name-mapping read path (spec/name_mapping): when legacy files
-        // carry no embedded field ids, read with each field's mapped
-        // physical name — id-ful files still resolve by the field-id
-        // metadata, id-less files name-match the alias — then rename to
-        // canonical names
-        val useMapping =
-          table.metadata.properties.get("graft.read.use-name-mapping").contains("true")
-        val mapping = if (useMapping) NameMapping.fromTable(table.metadata) else None
-        mapping match {
-          case Some(nm) =>
-            // mapped read schema: every field (nested included) renamed to
-            // its physical alias with field-id metadata stripped — with ids
-            // present Spark NULL-FILLS id-less files (ignoreMissing)
-            // instead of name-matching, so mapped resolution must be
-            // name-based for every file (true for both foreign files and
-            // our own, which write the then-current names)
-            val physical = nm.physicalSchema(table.schema)
-            // explicit-file relation, same as the unmapped branch below
-            // (ADVICE r15): the listing-based read paid the one-task-per-
-            // path InMemoryFileIndex job this bridge eliminates. The
-            // physical schema carries NO field-id metadata, so resolution
-            // stays name-based for every file — the mapped contract.
-            val rawPhys = org.apache.spark.sql.GraftFileRelationBridge
-              .parquetOverFiles(reader,
-                tasks.map(t => (qualifyPath(t.file.filePath),
-                  t.file.fileSizeInBytes)).distinctBy(_._1),
-                physical,
-                encConf ++ graft.SessionConf.HadoopIoConf,
-                mtimeMs = scanMtimeMs)
-            // deletes read _metadata → must run before the rename
-            // projection drops it; equality keys resolve to their
-            // physical aliases. The cast renames nested struct fields
-            // back positionally.
-            val alias = table.schema.fields.map(_.name).zip(physical.fieldNames).toMap
-            applyDeletes(rawPhys, deleted.map(_(alias)))
-              .select(table.schema.fields.zip(sparkSchema.fields)
-                .zip(physical.fields).map { case ((f, sf), pf) =>
-                  col(pf.name).cast(sf.dataType).as(f.name)
-                } ++ (if (deletedCol)
-                  Seq(col(DeletedCol), col("_file"), col("_pos"))
-                else Nil): _*)
-          case None =>
-            // v3 initial-defaults: files written BEFORE a defaulted field
-            // existed serve the default, not null. Column presence is
-            // decided per file from the harvested stats maps (a file
-            // written without the field has no entry for its id —
-            // metadata-only, no footer reads); stat-less imported files
-            // conservatively count as having every column (null-fill).
-            // Tasks group by their missing-default set — one parquet
-            // read per group (almost always 1–2 groups), unioned.
-            val defaulted = table.schema.fields.filter(_.initialDefault.isDefined)
-            def missingFor(t: FileScanTask): Seq[NestedField] =
-              if (t.file.columnSizes.isEmpty && t.file.valueCounts.isEmpty) Nil
-              else defaulted.filter(f =>
-                !t.file.columnSizes.contains(f.id) && !t.file.valueCounts.contains(f.id))
-            val groups =
-              if (defaulted.isEmpty) Seq(tasks -> Seq.empty[NestedField])
-              else tasks.groupBy(missingFor).toSeq.map(_.swap)
-            // lineage-requesting reads also ask for the MATERIALIZED
-            // reserved columns (RowLineage): files written by compaction
-            // carry per-row lineage; field-id projection null-fills files
-            // without them, and addMetadataColumns coalesces with
-            // first_row_id + pos inheritance
-            val readSchema =
-              if (metaCols)
-                org.apache.spark.sql.types.StructType(
-                  sparkSchema.fields ++ graft.spec.RowLineage.sparkFields)
-              else sparkSchema
-            groups.map { case (ts, missing) =>
-              // explicit-file relation: paths AND sizes come from the
-              // manifests, so the read skips InMemoryFileIndex's
-              // listing pass entirely (one stat per file — a
-              // task-per-path Spark job at high file counts; r15-opt)
-              // distinct by path: planFiles may emit several byte-range
-              // tasks for one physical file, and the listing-based read
-              // deduped them implicitly (InMemoryFileIndex keys by path)
-              // paths FS-QUALIFIED (file:///…): `_metadata.file_path`
-              // renders the status path verbatim and the MoR delete join
-              // compares it against delete rows that stored the
-              // qualified form — a bare manifest string would miss
-              val raw = org.apache.spark.sql.GraftFileRelationBridge
-                .parquetOverFiles(reader,
-                  ts.map(t => (qualifyPath(t.file.filePath),
-                    t.file.fileSizeInBytes)).distinctBy(_._1),
-                  readSchema,
-                  encConf ++ graft.SessionConf.HadoopIoConf,
-                  mtimeMs = scanMtimeMs)
-              val filled = missing.foldLeft(raw) { (df, f) =>
-                df.withColumn(f.name, defaultLiteral(f))
-              }
-              applyDeletes(filled, deleted.map(_(identity)))
-            }.reduce(_ unionByName _)
-        }
-      }
-    val withDeleted =
-      if (deletedCol && (tasks.isEmpty || !base.columns.contains(DeletedCol)))
-        base.withColumn(DeletedCol, lit(false))
-      else base
-    if (!metaCols || tasks.isEmpty) withDeleted
-    else addMetadataColumns(spark, withDeleted, tasks)
+    // name-mapping read path (spec/name_mapping): legacy files carry no
+    // embedded field ids, so every field (nested included) is read under
+    // its physical alias with field-id metadata stripped — with ids
+    // present Spark NULL-FILLS id-less files (ignoreMissing) instead of
+    // name-matching — and cast back to its canonical name (the cast
+    // renames nested struct fields positionally)
+    val physical =
+      if (!table.metadata.properties.get("graft.read.use-name-mapping").contains("true")) None
+      else NameMapping.fromTable(table.metadata).map(_.physicalSchema(table.schema))
+    // lineage-requesting reads also ask for the MATERIALIZED reserved
+    // columns (RowLineage): files written by compaction carry per-row
+    // lineage; field-id projection null-fills files without them
+    val lineageRead = metaCols && physical.isEmpty
+    val readSchema = physical.getOrElse(
+      if (lineageRead) StructType(sparkSchema.fields ++ RowLineage.sparkFields)
+      else sparkSchema)
+    // v3 initial-defaults: files written BEFORE a defaulted field existed
+    // serve the default, not null (the per-file rule of
+    // DataFile.lacksColumn)
+    val missing = table.schema.fields.filter(f =>
+      f.initialDefault.isDefined && tasks.exists(_.file.lacksColumn(f.id)))
+    // explicit-file relation: paths AND sizes come from the manifests, so
+    // the read skips InMemoryFileIndex's listing pass entirely (one stat
+    // per file — a task-per-path Spark job at high file counts; r15-opt).
+    // Paths FS-QUALIFIED (file:///…): `_metadata.file_path` renders the
+    // status path verbatim and position deletes compare against it.
+    // Distinct by path: one physical file may back several tasks.
+    val files = tasks.distinctBy(_.file.filePath)
+    val consts = new FileConstants(missing)
+    val raw = org.apache.spark.sql.GraftFileRelationBridge.parquetOverFiles(reader,
+      files.map(t => (table.io.qualify(t.file.filePath), t.file.fileSizeInBytes)),
+      readSchema, encConf ++ graft.SessionConf.HadoopIoConf, scanMtimeMs,
+      consts.fields, files.map(consts.valuesOf))
+    // deletes read `_metadata` and the equality keys under their physical
+    // aliases, so they are evaluated on the relation itself
+    val alias: Map[String, String] = table.schema.fields.map(_.name)
+      .zip(readSchema.fieldNames).toMap
+    val deleted = deletedRows(reader, tasks, encConf).map(_(alias))
+    val kept = if (deletedCol) raw else deleted.fold(raw)(d => raw.filter(!d))
+    if (!metaCols && physical.isEmpty && missing.isEmpty) return kept
+
+    val dataCols = table.schema.fields.zip(sparkSchema.fields).map { case (f, sf) =>
+      val read =
+        if (physical.isDefined) col(alias(f.name)).cast(sf.dataType) else col(f.name)
+      if (missing.contains(f))
+        when(consts.col(FileConstants.missingFlag(f)), defaultLiteral(f))
+          .otherwise(read).as(f.name)
+      else if (physical.isDefined) read.as(f.name)
+      else read
+    }
+    // reserved metadata columns (metadata_columns.rs:33-90): `_file` and
+    // `_pos` from Spark's parquet `_metadata` (the reference's virtual
+    // RowNumber column, pipeline.rs:221-245); `_spec_id`, the unified
+    // `_partition` tuple and the v3 lineage pair (materialized wins, else
+    // first_row_id + position inheritance and the file's data sequence
+    // number) from the per-file constants
+    def lineage(name: String, inherited: Column): Column =
+      (if (lineageRead) coalesce(col(name), inherited) else inherited).as(name)
+    val metaColumns =
+      if (!metaCols) Nil
+      else Seq(
+        lineage(RowLineage.RowIdName,
+          consts.col(FileConstants.FirstRowId) + col("_metadata.row_index")),
+        lineage(RowLineage.LastUpdatedName, consts.col(FileConstants.DataSeq))) ++
+        (if (deletedCol) Seq(deleted.getOrElse(lit(false)).as(DeletedCol)) else Nil) ++
+        Seq(col("_metadata.file_path").as("_file"),
+          col("_metadata.row_index").as("_pos"),
+          consts.col(FileConstants.SpecId).as("_spec_id"),
+          struct(consts.unifiedPartition.fields.indices.map(i =>
+            consts.col(FileConstants.part(i)).as(consts.unifiedPartition(i).name)): _*)
+            .as("_partition"))
+    kept.select(dataCols ++ metaColumns: _*)
   }
 
   /** Spark literal for a field's initial-default. */
   private def defaultLiteral(f: NestedField): Column =
     SingleValue.toSparkLiteral(f.fieldType, f.initialDefault.get)
 
-  /** Reserved metadata columns (metadata_columns.rs:33-90): `_file` and
-    * `_pos` come from Spark's parquet `_metadata` struct (exactly what the
-    * reference synthesizes as a virtual RowNumber column,
-    * pipeline.rs:221-245); `_spec_id`, the typed `_partition` tuple, and
-    * the v3 row-lineage pair `_row_id` / `_last_updated_sequence_number`
-    * (first_row_id + position inheritance, metadata_columns.rs _row_id)
-    * join in from the planned task descriptors (broadcast — O(files)
-    * driver rows, never data). */
-  private def addMetadataColumns(spark: SparkSession, df: DataFrame,
-      tasks: Seq[FileScanTask]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.broadcast
-    // UNIFIED across evolved specs (partitioning.rs): every file serves
-    // the fields its own spec defines, null elsewhere — a pre-evolution
-    // file no longer collapses to an all-null tuple
-    val partType = PartitionSpec.unifiedPartitionType(
-      table.metadata.partitionSpecs, table.schema)
-    val partSchema = org.apache.spark.sql.types.StructType(
-      partType.fields.map(f => org.apache.spark.sql.types.StructField(
-        f.name, IcebergType.toSpark(f.fieldType), nullable = true)))
-    val taskSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_gf_meta_file",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("_spec_id",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("_partition", partSchema, nullable = true),
-      org.apache.spark.sql.types.StructField("_gf_first_row_id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("_gf_task_seq",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-    tasks.foreach { t =>
-      // project this file's spec-shaped tuple into the unified struct:
-      // field-id-addressed, so evolution reorders/drops never misalign
-      val spec = table.metadata.specById(t.specId).getOrElse(table.spec)
-      val idxById = spec.fields.zipWithIndex.map { case (f, i) => f.fieldId -> i }.toMap
-      val part = Row(partType.fields.map { uf =>
-        idxById.get(uf.id) match {
-          case Some(i) if i < t.file.partition.length =>
-            Predicate.sparkValue(uf.fieldType, t.file.partition(i))
-          case _ => null
-        }
-      }: _*)
-      rows.add(Row(qualifyPath(t.file.filePath), t.specId, part,
-        t.file.firstRowId.map(java.lang.Long.valueOf).orNull, t.sequenceNumber))
-    }
-    val taskDf = spark.createDataFrame(rows, taskSchema)
-    // `_file`/`_pos` may already be materialized (the marked-delete path
-    // adds them next to `_deleted` in applyDeletes)
-    val withFp =
-      if (df.columns.contains("_file")) df
-      else df.withColumn("_file", col("_metadata.file_path"))
-        .withColumn("_pos", col("_metadata.row_index"))
-    // materialized lineage (written by compaction) wins; files without the
-    // columns (or name-mapped reads, which skip them) fall back to
-    // first_row_id + pos inheritance / the file's sequence number
-    val lineageRead = withFp.columns.contains(graft.spec.RowLineage.RowIdName)
-    val withLineage = withFp
-      .join(broadcast(taskDf), col("_file") === col("_gf_meta_file"), "left")
-    val rowIdExpr =
-      if (lineageRead)
-        coalesce(col(graft.spec.RowLineage.RowIdName),
-          col("_gf_first_row_id") + col("_pos"))
-      else col("_gf_first_row_id") + col("_pos")
-    val lastSeqExpr =
-      if (lineageRead)
-        coalesce(col(graft.spec.RowLineage.LastUpdatedName), col("_gf_task_seq"))
-      else col("_gf_task_seq")
-    withLineage
-      .withColumn(graft.spec.RowLineage.RowIdName, rowIdExpr)
-      .withColumn(graft.spec.RowLineage.LastUpdatedName, lastSeqExpr)
-      .drop("_gf_meta_file", "_gf_first_row_id", "_gf_task_seq")
+  /** The per-file values a V1 read projects, served as file-constant
+    * `_metadata` fields of the explicit-file relation — the reference adds
+    * them per batch in RecordBatchTransformer. Declared only when the
+    * read needs them, so a plain read's plan is unchanged: spec id,
+    * first_row_id, data sequence number and the unified partition tuple
+    * (one field per partition field: Spark refuses struct-typed
+    * constants) when metadata columns are requested, plus one flag per
+    * defaulted field in `missing`. Values are Catalyst-internal. */
+  private final class FileConstants(missing: Seq[NestedField]) {
+    import FileConstants._
+    import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+
+    lazy val unifiedPartition: StructType =
+      PartitionSpec.unifiedPartitionSchema(table.metadata.partitionSpecs, table.schema)
+    private lazy val unifiedType =
+      PartitionSpec.unifiedPartitionType(table.metadata.partitionSpecs, table.schema)
+
+    val fields: Seq[StructField] =
+      (if (!metaCols) Nil
+      else Seq(constant(SpecId, IntegerType, nullable = false),
+        constant(FirstRowId, LongType, nullable = true),
+        constant(DataSeq, LongType, nullable = false)) ++
+        unifiedPartition.fields.indices.map(i =>
+          constant(part(i), unifiedPartition(i).dataType, nullable = true))) ++
+        missing.map(f => constant(missingFlag(f), BooleanType, nullable = false))
+
+    def valuesOf(t: FileScanTask): Map[String, Any] =
+      (if (!metaCols) Map.empty[String, Any]
+      else Map[String, Any](SpecId -> t.specId,
+        FirstRowId -> t.file.firstRowId.map(Long.box).orNull,
+        DataSeq -> t.sequenceNumber) ++
+        PartitionSpec.unifiedPartitionValues(unifiedType,
+          table.metadata.specById(t.specId).getOrElse(table.spec), t.file.partition)
+          .zipWithIndex.map { case (v, i) => part(i) -> v }) ++
+        missing.map(f => missingFlag(f) -> t.file.lacksColumn(f.id))
+
+    def col(name: String): Column = functions.col(s"_metadata.$name")
   }
 
-  private def qualifyPath(p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    table.io.fs(p).makeQualified(hp).toString
-  }
-
-  /** MoR delete application, inside the scan's own stage: `deleted`
-    * (from [[deletedRows]]) filters the rows, or in `_deleted` mode is
-    * projected as the marker next to the `_file`/`_pos` coordinates. With
-    * no deletes in scope the plan is untouched. */
-  private def applyDeletes(raw: DataFrame, deleted: Option[Column]): DataFrame = {
-    val coords = if (!deletedCol) raw else raw
-      .withColumn("_file", col("_metadata.file_path"))
-      .withColumn("_pos", col("_metadata.row_index"))
-    deleted match {
-      case None => if (deletedCol) coords.withColumn(DeletedCol, lit(false)) else raw
-      case Some(d) => if (deletedCol) coords.withColumn(DeletedCol, d) else raw.filter(!d)
-    }
+  private object FileConstants {
+    val SpecId = "graft_spec_id"
+    val FirstRowId = "graft_first_row_id"
+    val DataSeq = "graft_data_seq"
+    def part(i: Int): String = s"graft_part_$i"
+    def missingFlag(f: NestedField): String = s"graft_missing_${f.id}"
+    def constant(name: String, dt: org.apache.spark.sql.types.DataType,
+        nullable: Boolean): StructField =
+      org.apache.spark.sql.catalyst.expressions.FileSourceConstantMetadataStructField(
+        name, dt, nullable)
   }
 
   /** The deleted-row test for a read of `tasks`, None when no delete is in
@@ -1236,8 +1148,8 @@ final class TableScan private[table] (
     val deletes = planDeletes()
     if (deletes.isEmpty) return None
     val plan = DeletePlan.build(table, deletes,
-      tasks.map(t => (qualifyPath(t.file.filePath), t.sequenceNumber, t.specId,
-        t.file.partition)), qualifyPath)
+      tasks.map(t => (table.io.qualify(t.file.filePath), t.sequenceNumber, t.specId,
+        t.file.partition)))
     val keys = plan.keyNames
     val readers = DeleteReaders.build(scanSpark,
       org.apache.spark.sql.types.StructType(keys.map(table.schema.toSpark(_))),

@@ -513,12 +513,8 @@ object Maintenance {
     // alive data-file paths in BOTH forms delete rows may carry: as the
     // manifests record them AND filesystem-qualified (this engine's delta
     // writer stores the reader's qualified `_file`, e.g. file:/…)
-    def qualify(p: String): String = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      table.io.fs(p).makeQualified(hp).toString
-    }
     val alive0 = table.newScan().planFiles().map(_.file.filePath)
-    val alive = (alive0 ++ alive0.map(qualify)).distinct
+    val alive = (alive0 ++ alive0.map(table.io.qualify)).distinct
     val session = spark
     import session.implicits._
     val aliveDf = alive.toDF("file_path")

@@ -3,9 +3,9 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Build a parquet DataFrame over an EXPLICIT file list with KNOWN sizes.
   *
@@ -33,14 +33,18 @@ object GraftFileRelationBridge {
     * prefix-match scan paths through it). `mtimeMs` backs
     * `_metadata.file_modification_time` for user projections — the
     * caller passes the snapshot's commit timestamp (a file is at most
-    * as new as the snapshot that added it); 0 would surface epoch-0. */
+    * as new as the snapshot that added it); 0 would surface epoch-0.
+    * `constants(i)` holds file i's values of the format's file-constant
+    * `_metadata` fields, by field name (empty: none declared). */
   final class GraftManifestFileIndex(files: Seq[(String, Long)],
-      mtimeMs: Long = 0L)
+      mtimeMs: Long = 0L, constants: Seq[Map[String, Any]] = Nil)
       extends FileIndex {
-    private val statuses = files.map { case (p, len) =>
-      new FileStatus(len, false, 1, 128L << 20, mtimeMs, new Path(p))
-    }.toArray
-    override def rootPaths: Seq[Path] = statuses.map(_.getPath).toSeq
+    private val statuses = files
+      .zip(if (constants.isEmpty) files.map(_ => Map.empty[String, Any]) else constants)
+      .map { case ((p, len), c) => FileStatusWithMetadata(
+        new FileStatus(len, false, 1, 128L << 20, mtimeMs, new Path(p)), c)
+      }
+    override def rootPaths: Seq[Path] = statuses.map(_.getPath)
     override def listFiles(
         partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
         dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
@@ -52,9 +56,15 @@ object GraftFileRelationBridge {
     override def partitionSchema: StructType = new StructType()
   }
 
+  /** The relation over `files` (path, size). `constantFields` declares
+    * extra file-constant `_metadata` fields (atomic Spark types) and
+    * `constants` gives each file's values for them, Catalyst-internal and
+    * aligned with `files`; a read then projects
+    * `_metadata.<field>` with no join. */
   def parquetOverFiles(spark: SparkSession, files: Seq[(String, Long)],
       dataSchema: StructType, options: Map[String, String],
-      mtimeMs: Long = 0L): DataFrame = {
+      mtimeMs: Long = 0L, constantFields: Seq[StructField] = Nil,
+      constants: Seq[Map[String, Any]] = Nil): DataFrame = {
     val cs = spark.asInstanceOf[classic.SparkSession]
     // KB-scale artifact scans (maintenance censuses: thousands of
     // one-row files) cap the vectorized batch so each per-file reader
@@ -72,9 +82,10 @@ object GraftFileRelationBridge {
     // GraftParquetFileFormat: stock parquet semantics with the per-file
     // JobConf clone + filter re-serialization amortized per task — the
     // fixed cost that dominates KB-file census scans (r16)
-    val relation = HadoopFsRelation(new GraftManifestFileIndex(files, mtimeMs),
+    val relation = HadoopFsRelation(
+      new GraftManifestFileIndex(files, mtimeMs, constants),
       new StructType(), dataSchema.asNullable,
-      None, new GraftParquetFileFormat, options ++ tinyCap)(cs)
+      None, new GraftParquetFileFormat(constantFields), options ++ tinyCap)(cs)
     classic.Dataset.ofRows(cs, LogicalRelation(relation, isStreaming = false))
   }
 }

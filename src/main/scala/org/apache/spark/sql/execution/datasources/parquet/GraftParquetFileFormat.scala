@@ -17,11 +17,12 @@ import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, PartitionedFile}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.util.{SerializableConfiguration, Utils}
 
 /** ParquetFileFormat whose per-file read function amortizes fixed costs
-  * across the files of one task.
+  * across the files of one task, and which can serve extra per-file
+  * constants as `_metadata` fields.
   *
   * The stock reader function pays, for EVERY file it opens:
   *
@@ -37,10 +38,9 @@ import org.apache.spark.util.{SerializableConfiguration, Utils}
   *
   * A graft artifact scan plans thousands of KB-scale files packed ~32
   * per task, so the fixed cost dominates the actual reads. This subclass
-  * keeps the driver-side setup EXACTLY the stock code (it delegates to
-  * `super.buildReaderWithPartitionValues` for the hadoopConf mutation and
-  * option validation, then rebuilds only the per-file closure) and in the
-  * closure:
+  * keeps the driver-side setup the stock one — the same hadoopConf
+  * entries (`setupConf`, checked entry by entry against the stock
+  * builder by a spec), broadcast once — and in the per-file closure:
   *
   *   - builds ONE TaskAttemptContextImpl per task over a JobConf
   *     (JobContextImpl adopts a JobConf without copying) and reuses it
@@ -58,8 +58,29 @@ import org.apache.spark.util.{SerializableConfiguration, Utils}
   * Safe to reuse the context across a task's files because the task
   * binary is deserialized once per task — the closure instance, and so
   * the JobConf, is task-local (single-threaded).
+  *
+  * `constantFields` are extra file-constant `_metadata` fields
+  * (`FileSourceConstantMetadataStructField`, atomic types only): Spark
+  * takes each file's value by field name from the FileIndex's
+  * `FileStatusWithMetadata` map and serves it as a constant column
+  * vector, with no join and no extra job. The field list is part of the
+  * format's identity, so relations declaring different fields never
+  * compare equal.
   */
-final class GraftParquetFileFormat extends ParquetFileFormat {
+final class GraftParquetFileFormat(val constantFields: Seq[StructField] = Nil)
+    extends ParquetFileFormat {
+
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields ++ constantFields
+
+  // ParquetFileFormat.equals holds for any two parquet formats
+  override def equals(other: Any): Boolean = other match {
+    case g: GraftParquetFileFormat => g.constantFields == constantFields
+    case _ => false
+  }
+
+  override def hashCode(): Int =
+    (classOf[GraftParquetFileFormat], constantFields).hashCode()
 
   override def buildReaderWithPartitionValues(
       sparkSession: SparkSession,
@@ -68,22 +89,33 @@ final class GraftParquetFileFormat extends ParquetFileFormat {
       requiredSchema: StructType,
       filters: Seq[Filter],
       options: Map[String, String],
-      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
-    // Run the stock builder for its SIDE EFFECTS — it mutates hadoopConf
-    // (read-support class, requested-schema JSON, session flags) and
-    // validates OPTION_RETURNING_BATCH — and drop its closure. The conf
-    // mutation and flag derivation stay Spark's code, so a Spark upgrade
-    // that changes them cannot silently diverge from this subclass.
-    super.buildReaderWithPartitionValues(sparkSession, dataSchema,
-      partitionSchema, requiredSchema, filters, options, hadoopConf)
+      hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] =
+    buildReaders(sparkSession, partitionSchema, requiredSchema, Seq(filters),
+      options, hadoopConf).head
 
+  /** One reader function per entry of `filterSets`, all sharing ONE
+    * broadcast of `hadoopConf` (the conf does not depend on the filters). */
+  def buildReaders(
+      sparkSession: SparkSession,
+      partitionSchema: StructType,
+      requiredSchema: StructType,
+      filterSets: Seq[Seq[Filter]],
+      options: Map[String, String],
+      hadoopConf: Configuration): Seq[PartitionedFile => Iterator[InternalRow]] = {
     val sqlConf = sparkSession.sessionState.conf
+    GraftParquetFileFormat.setupConf(hadoopConf, sqlConf, requiredSchema)
+    val resultSchema = StructType(partitionSchema.fields ++ requiredSchema.fields)
+    // the stock builder's validation of the returning-batch option
+    val returningBatch = sqlConf.parquetVectorizedReaderEnabled &&
+      options.getOrElse(org.apache.spark.sql.execution.datasources.FileFormat
+        .OPTION_RETURNING_BATCH, throw new IllegalArgumentException(
+          "OPTION_RETURNING_BATCH should always be set for ParquetFileFormat")) == "true"
+    if (returningBatch) assert(supportBatch(sparkSession, resultSchema))
     val broadcastedHadoopConf =
       SerializableConfiguration.broadcast(sparkSession.sparkContext, hadoopConf)
-    val resultSchema = StructType(partitionSchema.fields ++ requiredSchema.fields)
     val parquetOptions = new ParquetOptions(options, sqlConf)
     // same derivations as the stock builder (verified against 4.1.2)
-    new GraftParquetReaderFn(
+    filterSets.map(filters => new GraftParquetReaderFn(
       format = this,
       partitionSchema = partitionSchema,
       requiredSchema = requiredSchema,
@@ -102,15 +134,39 @@ final class GraftParquetFileFormat extends ParquetFileFormat {
       isCaseSensitive = sqlConf.caseSensitiveAnalysis,
       timestampConversion = sqlConf.isParquetINT96TimestampConversion,
       enableOffHeapColumnVector = sqlConf.offHeapColumnVectorEnabled,
-      returningBatch = sqlConf.parquetVectorizedReaderEnabled &&
-        options.getOrElse(org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH, "false") == "true",
+      returningBatch = returningBatch,
       // per-relation batch-capacity override: KB-file census relations
       // cap it so thousands of per-file readers stop pre-allocating
       // 4096-row vectors (GraftFileRelationBridge sets it size-gated)
       capacity = options.get("graft.parquet.batch-capacity").map(_.toInt)
         .getOrElse(sqlConf.parquetVectorizedReaderBatchSize),
-      enableRecordFilter = sqlConf.parquetRecordFilterEnabled)
+      enableRecordFilter = sqlConf.parquetRecordFilterEnabled))
+  }
+}
+
+object GraftParquetFileFormat {
+
+  /** The stock builder's hadoopConf preamble (ParquetFileFormat's private
+    * `setupHadoopConf`, Spark 4.1.2): read-support class, requested
+    * schema JSON and the session flags the parquet converters read. */
+  private[parquet] def setupConf(conf: Configuration, sqlConf: SQLConf,
+      requiredSchema: StructType): Unit = {
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requiredSchema.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, requiredSchema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sqlConf.parquetReaderRespectUnknownTypeAnnotation)
   }
 }
 

@@ -13,13 +13,16 @@ import graft.meta._
 import graft.spec._
 
 /** The two merge-on-read readers must agree: the V1 relation path
-  * (`toDF`, `readTasksLineage`, `withDeletedColumn`) and `format("graft")`
-  * apply deletes through one [[DeleteFilter]]. Random tables (v2/v3,
-  * partitioned or not, name-mapped or not) take random mixes of appends,
-  * position deletes, deletion vectors, global and partition-scoped
-  * equality deletes (null keys included), upserts and compactions; after
-  * every step both readers are compared with each other and with an
-  * in-memory model of the live rows. One step is one case. */
+  * (`toDF`, `readTasksLineage`, `withDeletedColumn`,
+  * `withMetadataColumns`) and `format("graft")` apply deletes through one
+  * [[DeleteFilter]] and serve the same metadata columns. Random tables
+  * (v2/v3, partitioned or not, name-mapped or not) take random mixes of
+  * appends, position deletes, deletion vectors, global and
+  * partition-scoped equality deletes (null keys included), upserts,
+  * compactions, partition-spec evolution and (v3) a column added with an
+  * initial default; after every step both readers are compared with each
+  * other and with an in-memory model of the live rows. One step is one
+  * case. */
 class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -51,6 +54,10 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   private case class ScopedEqDelete(part: String, keys: Seq[Long]) extends Op
   private case class Upsert(keys: Seq[Option[Long]]) extends Op
   private case object Compact extends Op
+  /** Move to the next spec of [[SpecCycle]]. */
+  private case object Evolve extends Op
+  /** Add `d` with initial default [[DefaultD]] (v3; once). */
+  private case object AddDefault extends Op
 
   private case class Scenario(v3: Boolean, partitioned: Boolean, mapped: Boolean,
       ops: Seq[Op])
@@ -68,7 +75,9 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       n <- Gen.choose(1, 2); ks <- Gen.listOfN(n, Gen.choose(0L, 5L)) }
       yield ScopedEqDelete(p, ks)),
     2 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, keyGen)).map(Upsert(_)),
-    1 -> Gen.const(Compact))
+    1 -> Gen.const(Compact),
+    1 -> Gen.const(Evolve),
+    (if (v3) 1 else 0) -> Gen.const(AddDefault))
 
   private val scenarioGen: Gen[Scenario] = for {
     v3 <- Gen.oneOf(true, false)
@@ -79,11 +88,24 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val Scenarios = 25
   private val Cols = Seq("id", "part", "k", "v")
+  private val MetaCols = Seq("id", "_spec_id", "_partition")
 
-  private def frame(rows: Seq[Rec]): DataFrame = {
+  /** Partition layouts an [[Evolve]] steps through, after the initial one. */
+  private val SpecCycle: Seq[Seq[(String, Transform)]] = Seq(
+    Seq("part" -> Transform.Identity),
+    Seq("part" -> Transform.Identity, "id" -> Transform.Bucket(3)),
+    Seq("id" -> Transform.Bucket(3)),
+    Nil)
+
+  private val DefaultD = 7L
+  /** `d` as written by the rows appended after [[AddDefault]]. */
+  private def dOf(id: Long): Long = id * 10
+
+  private def frame(rows: Seq[Rec], withD: Boolean = false): DataFrame = {
     val ss = spark; import ss.implicits._
-    rows.map { case (id, p, k, v) => (id, p, k.map(Long.box).orNull, v) }
-      .toDF("id", "part", "k", "v").coalesce(1)
+    val df = rows.map { case (id, p, k, v) => (id, p, k.map(Long.box).orNull, v) }
+      .toDF("id", "part", "k", "v")
+    (if (withD) df.withColumn("d", col("id") * 10) else df).coalesce(1)
   }
 
   private def sorted(df: DataFrame, cols: Seq[String]): Seq[Row] =
@@ -117,6 +139,8 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test(s"V1 and DSv2 readers agree on random delete mixes ($Scenarios scenarios x 8 steps)") {
     var seed = org.scalacheck.rng.Seed(20261018L)
     var cases = 0
+    var evolvedCases = 0
+    var defaultedCases = 0
     (0 until Scenarios).foreach { si =>
       val sc = scenarioGen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
@@ -140,6 +164,10 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       var t = GraftTable.create(name, catalog, schema, spec,
         Map("format-version" -> (if (sc.v3) "3" else "2")))
       var model = Set.empty[Rec]
+      // ids written after `d` was added carry dOf(id); all others read DefaultD
+      var withD = false
+      var writtenWithD = Set.empty[Long]
+      var specStep = if (sc.partitioned) 0 else SpecCycle.size - 1
       if (sc.mapped) {
         // id-less foreign parquet registered in place: name-mapped reads
         val rows = fresh(6)
@@ -159,8 +187,9 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         op match {
           case Append(n) =>
             val rows = fresh(n)
-            t = t.append(frame(rows))
+            t = t.append(frame(rows, withD))
             model ++= rows
+            if (withD) writtenWithD ++= rows.map(_._1)
           case PosDelete(lo, w, dv) =>
             val p = And(Predicate.gtEq("id", lo.toLong), Predicate.lt("id", (lo + w).toLong))
             t = if (dv) t.deleteWhereDV(p, spark) else t.deleteWhere(p, spark)
@@ -171,41 +200,114 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
             val gone = keys.flatten.toSet
             model = model.filterNot(r => r._3.exists(gone))
           case ScopedEqDelete(part, keys) =>
-            t = scopedEqDelete(t, part, keys)
-            model = model.filterNot(r => r._2 == part && r._3.exists(keys.toSet))
+            // scoped to the identity(part) tuple: only under that layout
+            if (t.spec.fields.map(_.name) == Seq("part")) {
+              t = scopedEqDelete(t, part, keys)
+              model = model.filterNot(r => r._2 == part && r._3.exists(keys.toSet))
+            }
           case Upsert(keys) =>
             val rows = fresh(keys.size, keys)
-            t = t.upsert(frame(rows), Seq("k"))
+            t = t.upsert(frame(rows, withD), Seq("k"))
             val gone = keys.flatten.toSet
             model = model.filterNot(r => r._3.exists(gone)) ++ rows
+            if (withD) writtenWithD ++= rows.map(_._1)
           case Compact =>
             t = t.rewriteDataFiles(spark)
+          case Evolve =>
+            specStep = (specStep + 1) % SpecCycle.size
+            t = t.updateSpec(SpecCycle(specStep))
+          case AddDefault =>
+            if (!withD) {
+              t = t.updateSchema().addColumnWithDefault("d", IcebergType.LongT, DefaultD)
+                .commit()
+              withD = true
+            }
         }
+        val cols = if (withD) Cols :+ "d" else Cols
 
         val dsv2 = spark.read.format("graft").option("warehouse", wh)
           .option("table", name).load()
-        val v1 = sorted(t.newScan().toDF(spark), Cols)
+        val v1 = sorted(t.newScan().toDF(spark), cols)
         assert(recs(v1) === model, s"V1 rows vs model — $ctx")
-        assert(v1 === sorted(dsv2, Cols), s"V1 vs DSv2 rows — $ctx")
+        if (withD)
+          assert(v1.map(r => r.getLong(0) -> r.getLong(4)) === v1.map(r => r.getLong(0) ->
+            (if (writtenWithD(r.getLong(0))) dOf(r.getLong(0)) else DefaultD)),
+            s"V1 defaulted column vs model — $ctx")
+        assert(v1 === sorted(dsv2, cols), s"V1 vs DSv2 rows — $ctx")
 
         val marked = t.newScan().withDeletedColumn().toDF(spark)
-        val markCols = Cols ++ Seq("_file", "_pos", "_deleted")
+        val markCols = cols ++ Seq("_file", "_pos", "_deleted")
         val v1Marked = sorted(marked, markCols)
-        assert(recs(v1Marked.filterNot(_.getBoolean(6))) === model,
+        assert(recs(v1Marked.filterNot(_.getBoolean(markCols.size - 1))) === model,
           s"V1 _deleted marker vs model — $ctx")
-        val lineageCols = Cols ++ Seq(RowLineage.RowIdName, RowLineage.LastUpdatedName)
+        val lineageCols = cols ++ Seq(RowLineage.RowIdName, RowLineage.LastUpdatedName)
         val v1Lineage = sorted(
           t.newScan().readTasksLineage(spark, t.newScan().planFiles()), lineageCols)
         assert(recs(v1Lineage) === model, s"V1 lineage rows vs model — $ctx")
+        val v1Meta = sorted(t.newScan().withMetadataColumns().toDF(spark), MetaCols)
+        assert(v1Meta.map(_.getLong(0)) === v1.map(_.getLong(0)),
+          s"V1 metadata-column rows — $ctx")
         if (!sc.mapped) {
           // metadata columns are served natively only without name mapping
           assert(v1Marked === sorted(dsv2, markCols), s"V1 vs DSv2 _deleted — $ctx")
           assert(v1Lineage === sorted(dsv2, lineageCols), s"V1 vs DSv2 lineage — $ctx")
+          assert(v1Meta === sorted(dsv2, MetaCols),
+            s"V1 vs DSv2 _spec_id/_partition — $ctx")
         }
         cases += 1
+        if (t.metadata.partitionSpecs.size > 1) evolvedCases += 1
+        if (withD) defaultedCases += 1
       }
     }
     assert(cases >= 200)
+    assert(evolvedCases > 0 && defaultedCases > 0, s"$evolvedCases / $defaultedCases")
+  }
+
+  /** Spark jobs started while running `body`. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body finally {
+      org.apache.spark.GraftListenerBridge.flushListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("a V1 metadata-column or lineage read with no deletes plans no join and runs one job") {
+    val ss = spark; import ss.implicits._
+    val src = (1L to 40L).map(i => (i, if (i % 2 == 0) "a" else "b", i % 7, s"v$i"))
+      .toDF("id", "part", "k", "v")
+    val schema = IcebergSchema.fromSpark(src.schema)
+    var t = GraftTable.create("parity_meta_plan", catalog, schema,
+      PartitionSpec(0, Seq(PartitionField(schema.findField("part").get.id, 1000, "part",
+        Transform.Identity))), Map("format-version" -> "3"))
+    t = t.append(src.coalesce(2))
+    assert(t.newScan().planDeletes().isEmpty)
+    val reads = Seq(
+      "withMetadataColumns" -> t.newScan().withMetadataColumns().toDF(spark),
+      "readTasksLineage" -> t.newScan().readTasksLineage(spark, t.newScan().planFiles()))
+    reads.foreach { case (name, df) =>
+      val optimized = df.queryExecution.optimizedPlan
+      assert(optimized.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        .isEmpty, s"$name: ${optimized.treeString}")
+      var rows: Array[Row] = null
+      assert(jobsDuring { rows = df.collect() } === 1, name)
+      assert(rows.length === 40, name)
+    }
+    val meta = reads.head._2.select("id", "_spec_id", "_partition", RowLineage.RowIdName)
+      .collect().sortBy(_.getLong(0))
+    assert(meta.map(r => (r.getInt(1), r.getStruct(2).getString(0))).toSeq ===
+      (1L to 40L).map(i => (0, if (i % 2 == 0) "a" else "b")))
+    assert(meta.map(_.getLong(3)).distinct.length === 40)
+    // a plain read declares no per-file constants: its plan is the bare scan
+    val plainMeta = t.newScan().toDF(spark).select("_metadata").schema.head.dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(!plainMeta.fieldNames.exists(_.startsWith("graft_")), plainMeta.treeString)
   }
 
   test("a V1 scan with position and equality deletes plans no join, exchange or job for them") {
@@ -220,17 +322,9 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deletes.exists(_.file.content == FileContent.PositionDeletes))
     assert(deletes.exists(_.file.content == FileContent.EqualityDeletes))
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val df = try t.newScan().toDF(spark) finally {
-      org.apache.spark.GraftListenerBridge.flushListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get === 0, "building the scan must not read delete files on the driver")
+    var df: DataFrame = null
+    assert(jobsDuring { df = t.newScan().toDF(spark) } === 0,
+      "building the scan must not read delete files on the driver")
     val optimized = df.queryExecution.optimizedPlan
     assert(optimized.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
       .isEmpty, optimized.treeString)
