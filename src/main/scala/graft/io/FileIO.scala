@@ -224,7 +224,12 @@ object FileIO {
     * behind [[readOnlyConf]] can be read by any number of callers but
     * changed by none. Every public mutator funnels into the overrides
     * below (`setInt`, `setBoolean`, … call `set`). Copies made from it
-    * (`new Configuration(ro)`) are ordinary mutable confs. */
+    * (`new Configuration(ro)`) are ordinary mutable confs.
+    * `reloadConfiguration` stays open: `Configuration.addDefaultResource`
+    * calls it on every registered conf (JobConf, HdfsConfiguration and
+    * YarnConfiguration do so from their static initializers), and it only
+    * drops the parsed properties — the re-parse yields the same defaults
+    * plus the added resource, and there is no `set` entry to lose. */
   private[io] final class ReadOnlyConfiguration(loaded: Configuration)
       extends Configuration(loaded) {
     private def refuse(): Nothing = throw new UnsupportedOperationException(
@@ -245,7 +250,6 @@ object FileIO {
         restricted: Boolean): Unit = refuse()
     override def addResource(conf: Configuration): Unit = refuse()
     override def setClassLoader(cl: ClassLoader): Unit = refuse()
-    override def reloadConfiguration(): Unit = refuse()
   }
 
   /** FileIO configured from reference-style cloud storage properties

@@ -1035,23 +1035,27 @@ final class TableScan private[table] (
       files.map(t => (table.io.qualify(t.file.filePath), t.file.fileSizeInBytes)),
       readSchema, encConf ++ graft.SessionConf.HadoopIoConf, scanMtimeMs,
       consts.fields, files.map(consts.valuesOf))
-    // deletes read `_metadata` and the equality keys under their physical
-    // aliases, so they are evaluated on the relation itself
+    // each data column as served: the physical alias cast back on
+    // name-mapped reads, the initial default for files written without it
     val alias: Map[String, String] = table.schema.fields.map(_.name)
       .zip(readSchema.fieldNames).toMap
-    val deleted = deletedRows(reader, tasks, encConf).map(_(alias))
+    val served: Map[String, Column] =
+      table.schema.fields.zip(sparkSchema.fields).map { case (f, sf) =>
+        val read =
+          if (physical.isDefined) col(alias(f.name)).cast(sf.dataType) else col(f.name)
+        f.name -> (if (missing.contains(f))
+          when(consts.col(FileConstants.missingFlag(f)), defaultLiteral(f)).otherwise(read)
+        else read)
+      }.toMap
+    // deletes read `_metadata` and the equality keys as served, so they
+    // are evaluated on the relation itself
+    val deleted = deletedRows(reader, tasks, encConf).map(_(served))
     val kept = if (deletedCol) raw else deleted.fold(raw)(d => raw.filter(!d))
     if (!metaCols && physical.isEmpty && missing.isEmpty) return kept
 
-    val dataCols = table.schema.fields.zip(sparkSchema.fields).map { case (f, sf) =>
-      val read =
-        if (physical.isDefined) col(alias(f.name)).cast(sf.dataType) else col(f.name)
-      if (missing.contains(f))
-        when(consts.col(FileConstants.missingFlag(f)), defaultLiteral(f))
-          .otherwise(read).as(f.name)
-      else if (physical.isDefined) read.as(f.name)
-      else read
-    }
+    val dataCols = table.schema.fields.map(f =>
+      if (physical.isDefined || missing.contains(f)) served(f.name).as(f.name)
+      else served(f.name))
     // reserved metadata columns (metadata_columns.rs:33-90): `_file` and
     // `_pos` from Spark's parquet `_metadata` (the reference's virtual
     // RowNumber column, pipeline.rs:221-245); `_spec_id`, the unified
@@ -1141,10 +1145,11 @@ final class TableScan private[table] (
     * null key never matching [delete_filter.rs:190,
     * caching_delete_file_loader.rs:421-424]. Delete files load on the
     * executors; no join or exchange is planned. The returned function maps
-    * each equality key to the frame's column holding it (the physical
-    * alias on name-mapped reads). */
+    * each equality key to the column serving its value (default-filled
+    * for files written without it, cast from the physical alias on
+    * name-mapped reads). */
   private def deletedRows(scanSpark: SparkSession, tasks: Seq[FileScanTask],
-      encConf: Map[String, String]): Option[(String => String) => Column] = {
+      encConf: Map[String, String]): Option[(String => Column) => Column] = {
     val deletes = planDeletes()
     if (deletes.isEmpty) return None
     val plan = DeletePlan.build(table, deletes,
@@ -1157,6 +1162,6 @@ final class TableScan private[table] (
       () => graft.SessionConf.readConf(scanSpark, encConf))
     val planBc = scanSpark.sparkContext.broadcast(plan)
     Some(keyColumn => graft.functions.MorDeletedExpr.column(
-      keys.map(k => k -> col(keyColumn(k))), planBc, readers))
+      keys.map(k => k -> keyColumn(k)), planBc, readers))
   }
 }

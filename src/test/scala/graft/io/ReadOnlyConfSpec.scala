@@ -22,8 +22,7 @@ class ReadOnlyConfSpec extends AnyFunSuite {
       "unset" -> (_.unset("io.file.buffer.size")),
       "clear" -> (_.clear()),
       "addResource" -> (_.addResource("core-site.xml")),
-      "addResource(conf)" -> (_.addResource(new Configuration(false))),
-      "reloadConfiguration" -> (_.reloadConfiguration()))
+      "addResource(conf)" -> (_.addResource(new Configuration(false))))
     mutators.foreach { case (name, m) =>
       intercept[UnsupportedOperationException](m(ro))
       assert(ro.get("graft.spec.k") === null, name)
@@ -37,5 +36,17 @@ class ReadOnlyConfSpec extends AnyFunSuite {
     val withExtra = FileIO.readOnlyConf(Map("graft.spec.k" -> "x"))
     assert(withExtra.get("graft.spec.k") === "x")
     assert(ro.get("graft.spec.k") === null)
+  }
+
+  test("a default resource added after the template exists reloads it instead of failing") {
+    // what the static initializers of JobConf, HdfsConfiguration and
+    // YarnConfiguration do when those classes first load
+    val ro = FileIO.readOnlyConf()
+    val bufferSize = ro.get("io.file.buffer.size")
+    Configuration.addDefaultResource("graft-readonly-test.xml")
+    assert(ro.get("graft.readonly.test.default") === "loaded")
+    assert(ro.get("io.file.buffer.size") === bufferSize)
+    assert(FileIO.sharedConf().get("graft.readonly.test.default") === "loaded")
+    intercept[UnsupportedOperationException](ro.set("graft.spec.k", "v"))
   }
 }

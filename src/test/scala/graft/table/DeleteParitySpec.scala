@@ -20,7 +20,9 @@ import graft.spec._
   * appends, position deletes, deletion vectors, global and
   * partition-scoped equality deletes (null keys included), upserts,
   * compactions, partition-spec evolution and (v3) a column added with an
-  * initial default; after every step both readers are compared with each
+  * initial default, later used as an equality-delete and upsert key (its
+  * default then matches every row of the files written before it); after
+  * every step both readers are compared with each
   * other and with an in-memory model of the live rows. One step is one
   * case. */
 class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -58,6 +60,9 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   private case object Evolve extends Op
   /** Add `d` with initial default [[DefaultD]] (v3; once). */
   private case object AddDefault extends Op
+  /** Equality delete keyed on `d`, or an upsert whose rows carry `keys` as
+    * their `d` (after [[AddDefault]]). */
+  private case class DKeyed(keys: Seq[Long], upsert: Boolean) extends Op
 
   private case class Scenario(v3: Boolean, partitioned: Boolean, mapped: Boolean,
       ops: Seq[Op])
@@ -77,7 +82,11 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     2 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, keyGen)).map(Upsert(_)),
     1 -> Gen.const(Compact),
     1 -> Gen.const(Evolve),
-    (if (v3) 1 else 0) -> Gen.const(AddDefault))
+    (if (v3) 2 else 0) -> Gen.const(AddDefault),
+    (if (v3) 2 else 0) -> (for { n <- Gen.choose(1, 2)
+      ks <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(DefaultD),
+        2 -> Gen.choose(1L, 40L).map(dOf)))
+      up <- Gen.oneOf(true, false) } yield DKeyed(ks, up)))
 
   private val scenarioGen: Gen[Scenario] = for {
     v3 <- Gen.oneOf(true, false)
@@ -101,11 +110,13 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   /** `d` as written by the rows appended after [[AddDefault]]. */
   private def dOf(id: Long): Long = id * 10
 
-  private def frame(rows: Seq[Rec], withD: Boolean = false): DataFrame = {
+  /** The rows as a frame; with `d`, a column `d` of `d(id)`. */
+  private def frame(rows: Seq[Rec], d: Option[Long => Long] = None): DataFrame = {
     val ss = spark; import ss.implicits._
-    val df = rows.map { case (id, p, k, v) => (id, p, k.map(Long.box).orNull, v) }
-      .toDF("id", "part", "k", "v")
-    (if (withD) df.withColumn("d", col("id") * 10) else df).coalesce(1)
+    val df = rows.map { case (id, p, k, v) =>
+      (id, p, k.map(Long.box).orNull, v, d.map(f => Long.box(f(id))).orNull)
+    }.toDF("id", "part", "k", "v", "d")
+    (if (d.isDefined) df else df.drop("d")).coalesce(1)
   }
 
   private def sorted(df: DataFrame, cols: Seq[String]): Seq[Row] =
@@ -141,6 +152,7 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     var cases = 0
     var evolvedCases = 0
     var defaultedCases = 0
+    var defaultKeyedCases = 0
     (0 until Scenarios).foreach { si =>
       val sc = scenarioGen.pureApply(Gen.Parameters.default, seed)
       seed = seed.next
@@ -164,9 +176,11 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       var t = GraftTable.create(name, catalog, schema, spec,
         Map("format-version" -> (if (sc.v3) "3" else "2")))
       var model = Set.empty[Rec]
-      // ids written after `d` was added carry dOf(id); all others read DefaultD
+      // `d` of the ids written after it was added; all others read DefaultD
       var withD = false
-      var writtenWithD = Set.empty[Long]
+      var dWritten = Map.empty[Long, Long]
+      def dRead(r: Rec): Long = dWritten.getOrElse(r._1, DefaultD)
+      def dNew: Option[Long => Long] = if (withD) Some(dOf) else None
       var specStep = if (sc.partitioned) 0 else SpecCycle.size - 1
       if (sc.mapped) {
         // id-less foreign parquet registered in place: name-mapped reads
@@ -187,9 +201,9 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         op match {
           case Append(n) =>
             val rows = fresh(n)
-            t = t.append(frame(rows, withD))
+            t = t.append(frame(rows, dNew))
             model ++= rows
-            if (withD) writtenWithD ++= rows.map(_._1)
+            if (withD) dWritten ++= rows.map(r => r._1 -> dOf(r._1))
           case PosDelete(lo, w, dv) =>
             val p = And(Predicate.gtEq("id", lo.toLong), Predicate.lt("id", (lo + w).toLong))
             t = if (dv) t.deleteWhereDV(p, spark) else t.deleteWhere(p, spark)
@@ -207,10 +221,10 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
             }
           case Upsert(keys) =>
             val rows = fresh(keys.size, keys)
-            t = t.upsert(frame(rows, withD), Seq("k"))
+            t = t.upsert(frame(rows, dNew), Seq("k"))
             val gone = keys.flatten.toSet
             model = model.filterNot(r => r._3.exists(gone)) ++ rows
-            if (withD) writtenWithD ++= rows.map(_._1)
+            if (withD) dWritten ++= rows.map(r => r._1 -> dOf(r._1))
           case Compact =>
             t = t.rewriteDataFiles(spark)
           case Evolve =>
@@ -222,6 +236,22 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
                 .commit()
               withD = true
             }
+          case DKeyed(keys, upsert) =>
+            if (withD) {
+              if (keys.contains(DefaultD) && model.exists(r => !dWritten.contains(r._1)))
+                defaultKeyedCases += 1
+              val ss = spark; import ss.implicits._
+              if (upsert) {
+                val rows = fresh(keys.size)
+                val ds = rows.map(_._1).zip(keys).toMap
+                t = t.upsert(frame(rows, Some(ds)), Seq("d"))
+                model = model.filterNot(r => keys.contains(dRead(r))) ++ rows
+                dWritten ++= ds
+              } else {
+                t = t.equalityDelete(keys.toDF("d"), Seq("d"))
+                model = model.filterNot(r => keys.contains(dRead(r)))
+              }
+            }
         }
         val cols = if (withD) Cols :+ "d" else Cols
 
@@ -231,7 +261,7 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(recs(v1) === model, s"V1 rows vs model — $ctx")
         if (withD)
           assert(v1.map(r => r.getLong(0) -> r.getLong(4)) === v1.map(r => r.getLong(0) ->
-            (if (writtenWithD(r.getLong(0))) dOf(r.getLong(0)) else DefaultD)),
+            dWritten.getOrElse(r.getLong(0), DefaultD)),
             s"V1 defaulted column vs model — $ctx")
         assert(v1 === sorted(dsv2, cols), s"V1 vs DSv2 rows — $ctx")
 
@@ -260,7 +290,8 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(cases >= 200)
-    assert(evolvedCases > 0 && defaultedCases > 0, s"$evolvedCases / $defaultedCases")
+    assert(evolvedCases > 0 && defaultedCases > 0 && defaultKeyedCases > 0,
+      s"$evolvedCases / $defaultedCases / $defaultKeyedCases")
   }
 
   /** Spark jobs started while running `body`. */
