@@ -44,10 +44,11 @@ final case class DataFile(
     referencedDataFile: Option[String] = None,
     contentOffset: Option[Long] = None,
     contentSizeInBytes: Option[Long] = None,
-    /** v3 row lineage (data_file.rs:160 first_row_id): the id of this
-      * file's first row; row N carries first_row_id + N. Assigned from
-      * TableMetadata.nextRowId at append commit; None = no lineage (delete
-      * files, pre-lineage appends, compaction rewrites). */
+    /** v3 row lineage (data_file.rs:160 first_row_id), v3 tables only:
+      * the id of this file's first row; row N carries first_row_id + N.
+      * Assigned from TableMetadata.nextRowId at append commit; None = no
+      * lineage (v1/v2 tables, delete files, appends made before a v3
+      * upgrade, compaction rewrites). */
     firstRowId: Option[Long] = None) {
 
   /** Whether this file was written without column `fieldId` (the v3

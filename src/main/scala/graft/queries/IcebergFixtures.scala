@@ -62,12 +62,14 @@ object IcebergFixtures {
     }
 
   /** orders appended in two snapshots: even o_orderkey first, then odd —
-    * snapshot 1 is a deterministic half for time-travel queries. */
+    * snapshot 1 is a deterministic half for time-travel queries. A v3
+    * table, so the appends also take row-id blocks (i21). */
   def ordersTwoSnapshots(spark: SparkSession, sfDir: String): GraftTable =
     build(spark, sfDir, "orders_tt") { catalog =>
       val src = Tables.orders(spark, sfDir)
       val schema = IcebergSchema.fromSpark(src.schema)
-      val t = GraftTable.create("orders_tt", catalog, schema)
+      val t = GraftTable.create("orders_tt", catalog, schema,
+        properties = Map("format-version" -> "3"))
       t.append(src.filter(col("o_orderkey") % 2 === 0))
         .append(src.filter(col("o_orderkey") % 2 === 1))
     }
@@ -250,7 +252,7 @@ object IcebergFixtures {
     }
 
   /** orders appended in two snapshots then COMPACTED — the v3 row-lineage
-    * fixture: the replace commit must materialize per-row `_row_id` /
+    * fixture (a v3 table): the replace commit must materialize per-row `_row_id` /
     * `_last_updated_sequence_number` into its rewritten files (inheritance
     * cannot survive the rewrite shuffle), and the native SQL surface reads
     * them back. Registered in the graftfix session catalog for SQL reads. */
@@ -262,7 +264,8 @@ object IcebergFixtures {
       val src = Tables.orders(spark, sfDir)
       val schema = IcebergSchema.fromSpark(src.schema)
       GraftTable.create("orders_lineage", catalog, schema,
-          properties = Map("write.spark.max-records-per-file" -> "5000"))
+          properties = Map("write.spark.max-records-per-file" -> "5000",
+            "format-version" -> "3"))
         .append(src.filter(col("o_orderkey") % 2 === 0))
         .append(src.filter(col("o_orderkey") % 2 === 1))
         .rewriteDataFiles(spark)

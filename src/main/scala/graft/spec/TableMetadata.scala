@@ -235,13 +235,19 @@ final case class TableMetadata(
     statistics: Seq[StatisticsFile] = Nil,
     partitionStatistics: Seq[PartitionStatisticsFile] = Nil,
     /** v3 row lineage (table_metadata.rs:140,456): the next row id to
-      * assign; append commits take a contiguous block for their files. */
+      * assign; append commits take a contiguous block for their files.
+      * Stays 0 below format version 3 (see [[rowLineage]]). */
     nextRowId: Long = 0L,
     /** v3 snapshot-level encryption-key registry (encrypted_key.rs):
       * wrapped key material addressable by id, the rotation surface —
       * a new key is registered, new writes reference it, retired keys
       * are removed once no live snapshot depends on them. */
     encryptionKeys: Seq[EncryptedKey] = Nil) {
+
+  /** Row lineage is a v3 feature: only v3 tables assign row ids, bump
+    * next-row-id and carry `_row_id` through rewrites; v1/v2 tables read
+    * `_row_id` as null. */
+  def rowLineage: Boolean = formatVersion >= 3
 
   def encryptionKeyById(id: String): Option[EncryptedKey] =
     encryptionKeys.find(_.keyId == id)

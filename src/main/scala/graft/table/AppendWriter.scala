@@ -530,9 +530,9 @@ object AppendWriter {
   private[table] def appendManifests(table: GraftTable, files: Seq[DataFile],
       commitUuid: String): (graft.spec.TableMetadata, Long, Long) => Seq[graft.meta.ManifestFile] =
     (base, seq, snapshotId) => {
-      // v3 row lineage: each file takes a contiguous first_row_id block
-      // from the refreshed base's nextRowId (re-derived per retry; the
-      // commit bumps next-row-id by the same added-row total)
+      // v3 row lineage (v3 tables only): each file takes a contiguous
+      // first_row_id block from the refreshed base's nextRowId (re-derived
+      // per retry; the commit bumps next-row-id by the same total)
       val withIds = Commits.assignFirstRowIds(base, files)
       val entries = withIds.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
         Some(seq), Some(seq), f))

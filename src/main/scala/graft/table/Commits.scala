@@ -222,24 +222,21 @@ object Commits {
       case _ => Some(filter)
     }
 
+  /** v3 row lineage, v3 tables only: contiguous first_row_id blocks for
+    * a commit's added data files, from the refreshed base's next-row-id
+    * (re-derived per retry; applyCommit bumps next-row-id by the same
+    * added-row total). Rows WITH a materialized `_row_id` keep it —
+    * inheritance only fills the null ones, so a CoW rewrite's carried
+    * rows never re-id. Below v3 the files are returned untouched. */
+  def assignFirstRowIds(base: TableMetadata, files: Seq[DataFile]): Seq[DataFile] =
+    if (!base.rowLineage) files
+    else files.zip(files.scanLeft(base.nextRowId)(_ + _.recordCount))
+      .map { case (f, rid) => f.copy(firstRowId = Some(rid)) }
+
   /** Rewrite the base's data manifests dropping `dropPaths`: dropped files
     * become Deleted tombstones, survivors become Existing with resolved
     * sequence numbers; untouched manifests pass through. Delete manifests
     * are kept unless `dropDeleteManifests`. */
-  /** v3 row lineage: contiguous first_row_id blocks for a commit's added
-    * data files, from the refreshed base's next-row-id (re-derived per
-    * retry; applyCommit bumps next-row-id by the same added-row total).
-    * Rows WITH a materialized `_row_id` keep it — inheritance only fills
-    * the null ones, so a CoW rewrite's carried rows never re-id. */
-  def assignFirstRowIds(base: TableMetadata, files: Seq[DataFile]): Seq[DataFile] = {
-    var rid = base.nextRowId
-    files.map { f =>
-      val assigned = f.copy(firstRowId = Some(rid))
-      rid += f.recordCount
-      assigned
-    }
-  }
-
   def rewriteManifestsDropping(io: graft.io.FileIO, base: TableMetadata,
       dropPaths: Set[String], commitUuid: String, snapshotId: Long,
       seq: Long, dropDeleteManifests: Boolean = false): Seq[ManifestFile] =
@@ -361,9 +358,11 @@ object Commits {
       // can re-derive next-row-id from `add-snapshot` alone.
       // append AND overwrite snapshots add rows (CoW rewrites, INSERT
       // OVERWRITE); replace (compaction) only rearranges — its files'
-      // lineage rides materialized columns, no new block consumed
+      // lineage rides materialized columns, no new block consumed.
+      // Below v3 there is no lineage: no range, next-row-id stays put
       val addedRows =
-        if (operation == "append" || operation == "overwrite") addedRecords
+        if (base.rowLineage && (operation == "append" || operation == "overwrite"))
+          addedRecords
         else 0L
 
       val snap = Snapshot(
@@ -375,8 +374,8 @@ object Commits {
         operation = operation,
         summary = summary,
         schemaId = Some(base.currentSchema.schemaId),
-        firstRowId = Some(base.nextRowId),
-        addedRows = Some(addedRows),
+        firstRowId = Option.when(base.rowLineage)(base.nextRowId),
+        addedRows = Option.when(base.rowLineage)(addedRows),
         keyId = wrappedListKey.map(_._1))
       val keysAfter = wrappedListKey.map(_._2).getOrElse(base0.encryptionKeys)
       val updated = branch match {

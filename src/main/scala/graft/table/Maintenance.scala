@@ -72,11 +72,11 @@ object Maintenance {
 
     val totalBytes = tasks.map(_.file.fileSizeInBytes).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileSizeBytes).toInt)
-    // v3 row lineage: a rewrite shuffles rows across files, so
-    // first_row_id inheritance cannot survive it — read each row's
-    // lineage (inherited or already-materialized) and persist it as real
-    // columns in the rewritten files (RowLineage preference order)
-    val lineage = table.metadata.nextRowId > 0L
+    // v3 row lineage (v3 tables only): a rewrite shuffles rows across
+    // files, so first_row_id inheritance cannot survive it — read each
+    // row's lineage (inherited or already-materialized) and persist it as
+    // real columns in the rewritten files (RowLineage preference order)
+    val lineage = table.metadata.rowLineage
     val df0 = if (lineage) scan.toLineageDF(spark) else scan.toDF(spark)
     // unpartitioned: explicit file-count control; partitioned: the staged
     // write's per-partition fanout governs sizes (input splits are already
@@ -171,7 +171,7 @@ object Maintenance {
     if (sourcePaths.isEmpty) return table
     val selected = tasks.filter(t => sourcePaths(t.file.filePath))
 
-    val lineage = table.metadata.nextRowId > 0L
+    val lineage = table.metadata.rowLineage
     val df0 = if (lineage) scan.readTasksLineage(spark, selected)
       else scan.readTasks(spark, selected)
     val df =
@@ -237,7 +237,7 @@ object Maintenance {
     val zcol = graft.functions.ZOrderExpr.column(
       cols.map(org.apache.spark.sql.functions.col), mins, maxs)
     // lineage preservation: same contract as rewriteDataFiles
-    val lineage = table.metadata.nextRowId > 0L
+    val lineage = table.metadata.rowLineage
     val zdf0 = if (lineage) scan.toLineageDF(spark) else scan.toDF(spark)
     val df = zdf0
       .withColumn("__z", zcol)

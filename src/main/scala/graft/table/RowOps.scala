@@ -3,7 +3,7 @@ package graft.table
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.expr.Predicate
 import graft.meta._
@@ -18,36 +18,31 @@ import graft.meta._
   * movement is executor-side (the rewrite is a filtered scan → staged
   * write over ONLY the touched files — at 100 TB an overwrite of one
   * partition never reads the other 99.9%).
+  *
+  * Row lineage, v3 tables only (`TableMetadata.rowLineage`): every CoW
+  * rewrite path below PRESERVES lineage: carried rows keep their
+  * materialized `(_row_id, _last_updated_sequence_number)`, updated rows
+  * keep `_row_id` with a nulled sequence (the reader then serves the new
+  * file's sequence number — "last updated here"), and inserted rows ride
+  * null/null into first_row_id + position inheritance
+  * (Commits.assignFirstRowIds blocks the new files). On v1/v2 tables the
+  * rewrites read and write the data columns alone.
   */
 object RowOps {
 
-  /** Is v3 row lineage active on this table? When it is, every CoW
-    * rewrite path below PRESERVES lineage: carried rows keep their
-    * materialized `(_row_id, _last_updated_sequence_number)`, updated
-    * rows keep `_row_id` with a nulled sequence (the reader then serves
-    * the new file's sequence number — "last updated here"), and inserted
-    * rows ride null/null into first_row_id + position inheritance
-    * (Commits.assignFirstRowIds blocks the new files). */
-  private def lineageActive(table: GraftTable): Boolean =
-    table.metadata.nextRowId > 0L
-
-  /** Task read carrying the row-lineage pair alongside the data columns
-    * (materialized-or-inherited, the same resolution every scan uses). */
-  private def readWithLineage(table: GraftTable, spark: SparkSession,
+  /** The rewrite's task read: on v3 tables it carries the row-lineage
+    * pair alongside the data columns (materialized-or-inherited, the same
+    * resolution every scan uses). */
+  private def readForRewrite(table: GraftTable, spark: SparkSession,
       tasks: Seq[FileScanTask]): DataFrame =
-    table.newScan().readTasksLineage(spark, tasks)
+    if (table.metadata.rowLineage) table.newScan().readTasksLineage(spark, tasks)
+    else table.newScan().readTasks(spark, tasks)
 
   /** Null-fill the lineage pair on frames that lack it (external inserts:
     * fresh ids via inheritance). */
-  private def withLineageCols(df: DataFrame): DataFrame = {
-    val withId =
-      if (df.columns.contains(graft.spec.RowLineage.RowIdName)) df
-      else df.withColumn(graft.spec.RowLineage.RowIdName,
-        org.apache.spark.sql.functions.lit(null).cast("long"))
-    if (withId.columns.contains(graft.spec.RowLineage.LastUpdatedName)) withId
-    else withId.withColumn(graft.spec.RowLineage.LastUpdatedName,
-      org.apache.spark.sql.functions.lit(null).cast("long"))
-  }
+  private def withLineageCols(df: DataFrame): DataFrame =
+    graft.spec.RowLineage.sparkFields.map(_.name).foldLeft(df)((d, c) =>
+      if (d.columns.contains(c)) d else d.withColumn(c, lit(null).cast("long")))
 
   /** Atomically delete rows matching `predicate` and insert `replacement`.
     * CoW: touched files are dropped/rewritten in the same snapshot. */
@@ -55,7 +50,7 @@ object RowOps {
       replacement: DataFrame, spark: SparkSession): GraftTable = {
     val bound = Predicate.bind(predicate, table.schema)
     val tasks = table.newScan().withFilter(bound).planFiles()
-    val lineage = lineageActive(table)
+    val lineage = table.metadata.rowLineage
 
     val (whole, partial) = tasks.partition(t =>
       graft.expr.StrictMetricsEvaluator.fileMustMatch(bound, t.file, table.schema))
@@ -66,10 +61,8 @@ object RowOps {
     val survivors =
       if (partial.isEmpty) None
       else {
-        val base =
-          if (lineage) readWithLineage(table, spark, partial)
-          else table.newScan().readTasks(spark, partial)
-        Some(base.filter(!Predicate.toColumn(bound, table.schema)))
+        Some(readForRewrite(table, spark, partial)
+          .filter(!Predicate.toColumn(bound, table.schema)))
       }
 
     val replacementL = Option(replacement)
@@ -125,11 +118,13 @@ object RowOps {
     keyCols.foreach { c =>
       require(table.schema.findField(c).isDefined, s"unknown merge key: $c")
     }
-    val keys = source.select(keyCols.map(col): _*).distinct()
+    // duplicate keys change neither the anti- nor the semi-join below, so
+    // only the planning collect needs them distinct
+    val keys = source.select(keyCols.map(col): _*)
 
     val planPredicate: Predicate = keyCols match {
       case Seq(single) =>
-        val vals = keys.limit(10001).collect().map(_.get(0))
+        val vals = keys.distinct().limit(10001).collect().map(_.get(0))
         if (vals.length <= 10000)
           graft.expr.SetPred(graft.expr.In, single,
             vals.map(v => sparkToInternal(table, single, v)).toSet)
@@ -139,28 +134,24 @@ object RowOps {
     val candidates = table.newScan()
       .withFilter(Predicate.bind(planPredicate, table.schema)).planFiles()
 
-    val lineage = lineageActive(table)
+    val lineage = table.metadata.rowLineage
     val survivors =
       if (candidates.isEmpty) None
-      else {
-        val base =
-          if (lineage) readWithLineage(table, spark, candidates)
-          else table.newScan().readTasks(spark, candidates)
-        Some(base.join(keys, keyCols, "left_anti"))
-      }
+      else Some(readForRewrite(table, spark, candidates)
+        .join(keys, keyCols, "left_anti"))
     val ordered0 = source.select(table.schema.fields.map(f => col(f.name)): _*)
     // lineage: a MATCHED source row is an UPDATE of the target row — it
     // RETAINS the target's _row_id (min over duplicate target keys for
     // determinism) with a nulled sequence (→ the new file's); an
     // unmatched source row inserts fresh (null → block inheritance)
     val ordered =
-      if (!lineage || candidates.isEmpty) {
-        if (lineage) withLineageCols(ordered0) else ordered0
-      } else {
+      if (!lineage) ordered0
+      else if (candidates.isEmpty) withLineageCols(ordered0)
+      else {
         // second pass over the candidates, but column pruning cuts the
         // parquet read to the key columns only, and the semi-join bounds
         // the aggregated map to the source's keys
-        val idMap = readWithLineage(table, spark, candidates)
+        val idMap = table.newScan().readTasksLineage(spark, candidates)
           .select(keyCols.map(col) :+ col(graft.spec.RowLineage.RowIdName): _*)
           .join(keys, keyCols, "left_semi")
           .groupBy(keyCols.map(col): _*)
@@ -214,19 +205,14 @@ object RowOps {
     val tasks = table.newScan().withFilter(bound).planFiles()
     if (tasks.isEmpty) return table
 
-    val lineage = lineageActive(table)
-    val base =
-      if (lineage) readWithLineage(table, spark, tasks)
-      else table.newScan().readTasks(spark, tasks)
-    val updated0 = base
+    val updated0 = readForRewrite(table, spark, tasks)
       .filter(Predicate.toColumn(bound, table.schema))
       .withColumns(assignments)
     // updated rows RETAIN their _row_id; the nulled sequence makes the
     // reader serve the rewrite commit's sequence number (last update)
     val updated =
-      if (lineage) updated0.withColumn(graft.spec.RowLineage.LastUpdatedName,
-        org.apache.spark.sql.functions.lit(null).cast("long"))
-      else updated0
+      if (!table.metadata.rowLineage) updated0
+      else updated0.withColumn(graft.spec.RowLineage.LastUpdatedName, lit(null).cast("long"))
     overwriteWhere(table, predicate, updated, spark)
   }
 }

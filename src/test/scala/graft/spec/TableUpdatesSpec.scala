@@ -13,8 +13,9 @@ class TableUpdatesSpec extends AnyFunSuite {
     NestedField(1, "id", LongT, required = true),
     NestedField(2, "ts", TimestampT, required = false)))
 
+  // v3: the apply/diff tests re-derive next-row-id (row lineage)
   private def base = TableMetadata.newTable("/w/t", schema,
-    PartitionSpec.unpartitioned, Map("k" -> "v"))
+    PartitionSpec.unpartitioned, Map("k" -> "v", "format-version" -> "3"))
 
   private def snap(id: Long, seq: Long, parent: Option[Long], firstRow: Long,
       rows: Long) = Snapshot(id, parent, seq, 1000L * seq, s"/w/t/metadata/snap-$id.avro",

@@ -288,7 +288,8 @@ class TransactionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("row lineage: contiguous first_row_id blocks, dense _row_id, seq column") {
     import spark.implicits._
-    var t = GraftTable.create("lineage", freshHadoop(), schema)
+    var t = GraftTable.create("lineage", freshHadoop(), schema,
+      properties = Map("format-version" -> "3"))
     t = t.append((1L to 10L).map(i => (i, 1.0, "a")).toDF("id", "v", "s"))
     t = t.append((11L to 25L).map(i => (i, 2.0, "b")).toDF("id", "v", "s"))
 
