@@ -236,7 +236,7 @@ final case class TableMetadata(
     partitionStatistics: Seq[PartitionStatisticsFile] = Nil,
     /** v3 row lineage (table_metadata.rs:140,456): the next row id to
       * assign; append commits take a contiguous block for their files.
-      * Stays 0 below format version 3 (see [[rowLineage]]). */
+      * Not advanced below format version 3 (see [[rowLineage]]). */
     nextRowId: Long = 0L,
     /** v3 snapshot-level encryption-key registry (encrypted_key.rs):
       * wrapped key material addressable by id, the rotation surface —

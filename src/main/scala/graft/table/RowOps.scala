@@ -60,10 +60,8 @@ object RowOps {
     // folded in (a raw parquet read would resurrect deleted rows)
     val survivors =
       if (partial.isEmpty) None
-      else {
-        Some(readForRewrite(table, spark, partial)
-          .filter(!Predicate.toColumn(bound, table.schema)))
-      }
+      else Some(readForRewrite(table, spark, partial)
+        .filter(!Predicate.toColumn(bound, table.schema)))
 
     val replacementL = Option(replacement)
       .map(r => if (lineage) withLineageCols(r) else r)
