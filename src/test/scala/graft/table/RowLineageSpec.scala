@@ -186,8 +186,9 @@ class RowLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(byKey(nativeLineage("orders_lin_z")) == pre)
   }
 
-  private def orders3 = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    .select("o_orderkey", "o_custkey", "o_totalprice")
+  /** 1500 orders-shaped rows, keys 1..1500. */
+  private def orders3 = spark.range(1, 1501).select(col("id").as("o_orderkey"),
+    (col("id") % 97).as("o_custkey"), (col("id") * 1.5).as("o_totalprice"))
 
   /** Top-level parquet field ids in a data file's footer. */
   private def parquetFieldIds(path: String): Set[Int] = {
