@@ -294,11 +294,11 @@ object Membership {
 
   /** Total touched-blob bytes above which [[mightContainCol]] ships the
     * blobs as an explicit broadcast VARIABLE instead of binary Literals
-    * in the when-chain. Measured (tools/MembershipPlanCost →
-    * BENCH_PLANCOST.json, local[32], 100k-row batch, 4 buckets): the
-    * literal chain runs 0.30 s end-to-end at 4 MB total, 1.22 s at
-    * 32 MB, and HARD-FAILS at 256 MB — every task deserializes the
-    * taskBinary, so plan bytes multiply by the concurrent task count
+    * in the when-chain. Measured (BENCH_PLANCOST.json, local[32],
+    * 100k-row batch, 4 buckets): the literal chain runs 0.30 s
+    * end-to-end at 4 MB total, 1.22 s at 32 MB, and HARD-FAILS at
+    * 256 MB — every task deserializes the taskBinary, so plan bytes
+    * multiply by the concurrent task count
     * (32 × 256 MB ≈ the whole 8 g heap; tasks die in deserialization
     * with "unread block data") — while the broadcast variant is flat
     * 0.05–0.09 s at every size (one torrent ship, one deserialize per

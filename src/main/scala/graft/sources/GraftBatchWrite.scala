@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.meta.{DataFile, ManifestContent, ManifestEntry, ManifestIO, ManifestStatus}
+import graft.meta.{DataFile, ManifestContent, ManifestIO}
 import graft.spec.{IcebergType, Transform}
 import graft.spec.IcebergType._
 import graft.table.{AppendWriter, Commits, GraftTable, Locations}
@@ -196,7 +196,7 @@ final class GraftStreamingWrite(table: GraftTable, writeSchema: StructType,
         s.summary.get(graft.streaming.GraftStreamWriter.BatchIdKey)
           .exists(_.toLong >= epochId))
     if (!replayed && files.nonEmpty) {
-      graft.table.AppendWriter.commitAppend(live, files, s"$commitUuid-e$epochId",
+      graft.table.AppendWriter.commitAppend(table, files, s"$commitUuid-e$epochId",
         Map(graft.streaming.GraftStreamWriter.QueryIdKey -> queryId,
           graft.streaming.GraftStreamWriter.BatchIdKey -> epochId.toString))
       ()
@@ -259,7 +259,7 @@ final class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
     val live = GraftTable.load(table.name, table.catalog)
     mode match {
       case GraftWriteMode.Append =>
-        if (files.nonEmpty) AppendWriter.commitAppend(live, files, commitUuid)
+        if (files.nonEmpty) AppendWriter.commitAppend(table, files, commitUuid)
       case GraftWriteMode.Truncate =>
         commitReplace(live, files, dropAllBase = true, Set.empty,
           assignRowIds = true) // truncate-overwrite: all rows are new
@@ -313,8 +313,7 @@ final class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
   private def commitReplace(live: GraftTable, files: Seq[DataFile],
       dropAllBase: Boolean, fixedDrop: Set[String],
       assignRowIds: Boolean = false): Unit = {
-    Commits.commit(live, "overwrite", commitUuid, Map(
-      "added-data-files" -> files.size.toString)) { (base, seq, snapshotId) =>
+    Commits.commit(live, "overwrite", commitUuid) { base =>
       // group-based CoW: the fixed drop set was scanned earlier — its
       // files must still be alive, and under serializable isolation no
       // concurrent data may have appeared (the command's row condition
@@ -336,22 +335,12 @@ final class GraftBatchWrite(table: GraftTable, writeSchema: StructType,
                 m.keyMetadata)
               .filter(_.isAlive).map(_.dataFile.filePath)
           }.toSet
-      val rewritten = Commits.rewriteManifestsDropping(live.io, base, dropPaths,
-        commitUuid, snapshotId, seq, dropDeleteManifests = dropAllBase)
-      val added =
-        if (files.isEmpty) Nil
-        else {
-          // pure insert-overwrites mint fresh row-id blocks (v3 lineage:
-          // overwritten-in rows are NEW rows)
-          val stamped =
-            if (assignRowIds) Commits.assignFirstRowIds(base, files) else files
-          val entries = stamped.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(live.io, base, s"$commitUuid-m0", entries,
-            base.currentSchema, base.defaultSpec, ManifestContent.Data,
-            snapshotId, seq))
-        }
-      added ++ rewritten
+      // the files were written under the spec of the handle the write
+      // was planned on; insert-overwrites mint fresh row-id blocks (v3
+      // lineage: overwritten-in rows are NEW rows)
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> files),
+        removedData = dropPaths, dropDeleteManifests = dropAllBase,
+        assignRowIds = assignRowIds)
     }
     ()
   }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expr.{AlwaysTrue, Predicate, SparkFilters}
-import graft.meta.{DataFile, FileContent, ManifestContent, ManifestEntry, ManifestStatus}
+import graft.meta.{DataFile, FileContent}
 import graft.table.{Commits, GraftTable, Locations}
 
 /** DELTA-based (merge-on-read) SQL row-level operations, selected by
@@ -129,34 +129,16 @@ final class GraftDeltaBatchWrite(table: GraftTable, writeSchema: StructType)
     if (dataFiles.isEmpty && deleteFiles.isEmpty) return
     val live = GraftTable.load(table.name, table.catalog)
     val op = if (dataFiles.isEmpty) "delete" else "overwrite"
-    Commits.commit(live, op, commitUuid, Map(
-      "added-delete-files" -> deleteFiles.size.toString,
-      "added-position-deletes" -> deleteFiles.map(_.recordCount).sum.toString,
-      "added-data-files" -> dataFiles.size.toString),
-      prepare = m => Commits.ensureUnpartitionedSpec(m)._1) { (base, seq, snapshotId) =>
+    Commits.commit(live, op, commitUuid) { base =>
       // the delta's position deletes address rows by (_file, _pos) read at
       // scan time — any concurrent non-append commit may have moved them
       Commits.validateReplace(live.io, base, table.metadata.currentSnapshotId,
         Set.empty, None, base.currentSchema, failOnNewReplaceOps = true)
-      val delM =
-        if (deleteFiles.isEmpty) Nil
-        else {
-          val entries = deleteFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(live.io, base, s"$commitUuid-d0", entries,
-            base.currentSchema, base.partitionSpecs.find(_.fields.isEmpty).get,
-            ManifestContent.Deletes, snapshotId, seq))
-        }
-      val dataM =
-        if (dataFiles.isEmpty) Nil
-        else {
-          val entries = dataFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(live.io, base, s"$commitUuid-m0", entries,
-            base.currentSchema, base.defaultSpec, ManifestContent.Data,
-            snapshotId, seq))
-        }
-      delM ++ dataM ++ Commits.baseManifests(live.io, base)
+      // inserted rows were written under the planning handle's spec; like
+      // the group-based rewrite, updated rows carry no lineage here, so no
+      // fresh row ids are minted for them
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> dataFiles),
+        addedDeletes = deleteFiles, assignRowIds = false)
     }
     ()
   }

@@ -67,16 +67,8 @@ object AddFiles {
         "graft.read.use-name-mapping" -> "true"))
 
     val commitUuid = UUID.randomUUID().toString
-    Commits.commit(prepared, "append", commitUuid, Map(
-      "added-data-files" -> dataFiles.size.toString,
-      "added-records" -> dataFiles.map(_.recordCount).sum.toString)) {
-      (base, seq, snapshotId) =>
-        val entries = dataFiles.map(f => ManifestEntry(ManifestStatus.Added,
-          Some(snapshotId), Some(seq), Some(seq), f))
-        val m = Commits.writeManifest(prepared.io, base, s"$commitUuid-m0", entries,
-          base.currentSchema, base.defaultSpec, ManifestContent.Data, snapshotId, seq)
-        m +: Commits.baseManifests(prepared.io, base)
-    }
+    Commits.commit(prepared, "append", commitUuid)(
+      _ => Commits.FileChanges(addedData = Seq(prepared.spec.specId -> dataFiles)))
   }
 
   /** Refuse files whose parquet timestamp unit contradicts the declared

@@ -52,14 +52,13 @@ object AppendWriter {
     val commitUuid = UUID.randomUUID().toString
     val files = writeDataFiles(table, df, commitUuid)
     if (files.isEmpty) return table
-    try Commits.commit(table, "append", commitUuid,
-      extraSummary ++ appendSummary(files)) { (base, seq, snapshotId) =>
+    try Commits.commit(table, "append", commitUuid, extraSummary) { base =>
       if (base.currentSnapshotId != expectedSnapshot)
         throw new StaleBaseSnapshot(
           s"table ${table.name}: base moved ${expectedSnapshot.orNull} -> " +
             s"${base.currentSnapshotId.orNull} since the caller's read — " +
             "re-derive and retry")
-      appendManifests(table, files, commitUuid)(base, seq, snapshotId)
+      appendChanges(table, files)
     } catch {
       case e: StaleBaseSnapshot =>
         // the commit definitely did not land (validation precedes every
@@ -100,8 +99,7 @@ object AppendWriter {
             s"${base.currentSnapshotId.orNull} since the caller's read — " +
             "re-derive and retry")
       (post(Commits.applyCommit(table, base, "append", commitUuid, snapshotId,
-        extraSummary ++ appendSummary(files), None, identity)(
-        appendManifests(table, files, commitUuid))),
+        extraSummary, None)(_ => appendChanges(table, files))),
         (_: Int) => table.refresh())
     } catch {
       case e: StaleBaseSnapshot =>
@@ -508,36 +506,18 @@ object AppendWriter {
     sb.toString
   }
 
-  /** Build manifest, manifest list, snapshot; commit with optimistic retry
-    * (fast-append: one new manifest prepended to the base's list). Shared
-    * with the native DSv2 batch writer (GraftBatchWrite). */
+  /** Fast-append commit with optimistic retry: one new manifest prepended
+    * to the refreshed base's list. Shared with the native DSv2 batch
+    * writer (GraftBatchWrite). */
   private[graft] def commitAppend(table: GraftTable, files: Seq[DataFile],
       commitUuid: String, extraSummary: Map[String, String] = Map.empty,
       branch: Option[String] = None): GraftTable =
-    Commits.commit(table, "append", commitUuid,
-      extraSummary ++ appendSummary(files), branch)(
-      appendManifests(table, files, commitUuid))
+    Commits.commit(table, "append", commitUuid, extraSummary, branch)(
+      _ => appendChanges(table, files))
 
-  private[table] def appendSummary(files: Seq[DataFile]): Map[String, String] =
-    Map(
-      "added-data-files" -> files.size.toString,
-      "added-records" -> files.map(_.recordCount).sum.toString,
-      "added-files-size" -> files.map(_.fileSizeInBytes).sum.toString)
-
-  /** Fast-append manifest builder, re-invoked per commit attempt: one new
-    * manifest prepended to the refreshed base's list. Shared by
-    * [[commitAppend]] and [[Transaction.fastAppend]]. */
-  private[table] def appendManifests(table: GraftTable, files: Seq[DataFile],
-      commitUuid: String): (graft.spec.TableMetadata, Long, Long) => Seq[graft.meta.ManifestFile] =
-    (base, seq, snapshotId) => {
-      // v3 row lineage (v3 tables only): each file takes a contiguous
-      // first_row_id block from the refreshed base's nextRowId (re-derived
-      // per retry; the commit bumps next-row-id by the same total)
-      val withIds = Commits.assignFirstRowIds(base, files)
-      val entries = withIds.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
-        Some(seq), Some(seq), f))
-      val m = Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-        table.schema, table.spec, ManifestContent.Data, snapshotId, seq)
-      m +: Commits.baseManifests(table.io, base)
-    }
+  /** `files`, written under the table handle's spec, as an append. Shared
+    * by [[commitAppend]] and [[Transaction.fastAppend]]. */
+  private[table] def appendChanges(table: GraftTable,
+      files: Seq[DataFile]): Commits.FileChanges =
+    Commits.FileChanges(addedData = Seq(table.spec.specId -> files))
 }

@@ -228,59 +228,116 @@ object Commits {
     * added-row total). Rows WITH a materialized `_row_id` keep it —
     * inheritance only fills the null ones, so a CoW rewrite's carried
     * rows never re-id. Below v3 the files are returned untouched. */
-  def assignFirstRowIds(base: TableMetadata, files: Seq[DataFile]): Seq[DataFile] =
+  private def assignFirstRowIds(base: TableMetadata, files: Seq[DataFile]): Seq[DataFile] =
     if (!base.rowLineage) files
     else files.zip(files.scanLeft(base.nextRowId)(_ + _.recordCount))
       .map { case (f, rid) => f.copy(firstRowId = Some(rid)) }
 
-  /** Rewrite the base's data manifests dropping `dropPaths`: dropped files
-    * become Deleted tombstones, survivors become Existing with resolved
-    * sequence numbers; untouched manifests pass through. Delete manifests
-    * are kept unless `dropDeleteManifests`. */
-  def rewriteManifestsDropping(io: graft.io.FileIO, base: TableMetadata,
-      dropPaths: Set[String], commitUuid: String, snapshotId: Long,
-      seq: Long, dropDeleteManifests: Boolean = false): Seq[ManifestFile] =
-    baseManifests(io, base).flatMap { m =>
-      if (m.content != ManifestContent.Data)
-        if (dropDeleteManifests) None else Some(m)
-      else {
-        val spec = base.partitionSpecs.find(_.specId == m.partitionSpecId)
-          .getOrElse(base.defaultSpec)
-        val entries = ManifestIO.readManifest(io, m.manifestPath,
-          base.currentSchema, spec, m.keyMetadata)
-        if (!entries.exists(e => e.isAlive && dropPaths(e.dataFile.filePath))) Some(m)
-        else {
-          val newEntries = entries.filter(_.isAlive).map { e =>
-            val resolvedSeq = e.sequenceNumber.orElse(Some(m.sequenceNumber))
-            if (dropPaths(e.dataFile.filePath))
-              e.copy(status = ManifestStatus.Deleted,
-                snapshotId = Some(snapshotId), sequenceNumber = resolvedSeq)
-            else
-              e.copy(status = ManifestStatus.Existing, sequenceNumber = resolvedSeq)
-          }
-          Some(writeManifest(io, base,
-            s"$commitUuid-rw${m.manifestPath.hashCode.abs}", newEntries,
-            base.currentSchema, spec, ManifestContent.Data, snapshotId, seq))
-        }
-      }
-    }
+  /** Append and overwrite snapshots add rows (appends, CoW rewrites,
+    * INSERT OVERWRITE) and consume a v3 row-id block; replace
+    * (compaction) and delete only rearrange or hide rows. */
+  private def addsRows(operation: String): Boolean =
+    operation == "append" || operation == "overwrite"
 
-  /** Spec id of an unpartitioned spec in `md`, registering one (fresh id)
-    * when the table has none. Engine-global delete files are written under
+  /** `md` with an unpartitioned spec, registering one (fresh id) when
+    * the table has none. Engine-global delete files are written under
     * it: the reference scopes equality deletes as global iff their spec has
     * no fields (delete_file_index.rs:137-141) — an all-null tuple under a
     * partitioned spec means the NULL partition, not "applies everywhere". */
-  def ensureUnpartitionedSpec(md: TableMetadata): (TableMetadata, Int) =
-    md.partitionSpecs.find(_.fields.isEmpty) match {
-      case Some(s) => (md, s.specId)
-      case None =>
-        val id = md.partitionSpecs.map(_.specId).max + 1
-        (md.copy(partitionSpecs = md.partitionSpecs :+ PartitionSpec(id, Nil)), id)
+  private def ensureUnpartitionedSpec(md: TableMetadata): TableMetadata =
+    if (md.partitionSpecs.exists(_.fields.isEmpty)) md
+    else {
+      val id = md.partitionSpecs.map(_.specId).max + 1
+      md.copy(partitionSpecs = md.partitionSpecs :+ PartitionSpec(id, Nil))
     }
 
-  /** One snapshot commit with optimistic retry. `manifests` is re-invoked
-    * per attempt against the refreshed base and must return the FULL new
-    * manifest list.
+  /** What one commit changes at file level, derived per attempt against
+    * the refreshed base (the caller validates there first):
+    *   - `addedData`: new data files, grouped by the id of the partition
+    *     spec they were WRITTEN under — not the base's default, which a
+    *     concurrent spec change may have moved;
+    *   - `addedDeletes`: engine-global delete files, committed under the
+    *     unpartitioned spec; `deleteDataSeq` keeps a data sequence number
+    *     other than the commit's (a compaction of deletes preserves the
+    *     sources' scope);
+    *   - `removedData`: paths of data files to tombstone;
+    *   - `removedDeletes`: delete files to tombstone, by [[deleteKey]] —
+    *     superseding one deletion-vector blob leaves the other blobs of
+    *     its Puffin file alive;
+    *   - `dropDeleteManifests`: leave every base delete manifest out (a
+    *     full rewrite folded them all);
+    *   - `assignRowIds`: v3 first-row-id blocks for the added data files
+    *     of a row-adding commit; off where the files hold carried rows
+    *     whose lineage could not be materialized. */
+  final case class FileChanges(
+      addedData: Seq[(Int, Seq[DataFile])] = Nil,
+      addedDeletes: Seq[DataFile] = Nil,
+      deleteDataSeq: Option[Long] = None,
+      removedData: Set[String] = Set.empty,
+      removedDeletes: Set[(String, Option[Long])] = Set.empty,
+      dropDeleteManifests: Boolean = false,
+      assignRowIds: Boolean = true)
+
+  /** A delete file's identity: its path, plus the blob offset for a
+    * deletion vector (one Puffin file holds many). */
+  def deleteKey(f: DataFile): (String, Option[Long]) = (f.filePath, f.contentOffset)
+
+  /** The snapshot producer: writes the manifests for `ch` and returns the
+    * full new manifest list — one added data manifest per write spec, one
+    * added delete manifest, then the base list with removed entries
+    * tombstoned (their survivors become Existing with resolved sequence
+    * numbers). A base manifest is read only when the commit removes
+    * files of its content, so appends and pure delete additions read the
+    * manifest list alone; the read goes through the scan's manifest
+    * cache, which the commit's own planning has usually filled. */
+  private def produce(io: graft.io.FileIO, base: TableMetadata, ch: FileChanges,
+      rowIds: Boolean, commitUuid: String, snapshotId: Long,
+      seq: Long): Seq[ManifestFile] = {
+    def specOf(id: Int) = base.specById(id).getOrElse(base.defaultSpec)
+    def write(name: String, entries: Seq[ManifestEntry], spec: PartitionSpec,
+        content: Int) =
+      writeManifest(io, base, s"$commitUuid-$name", entries, base.currentSchema,
+        spec, content, snapshotId, seq)
+    def added(f: DataFile, dataSeq: Long) =
+      ManifestEntry(ManifestStatus.Added, Some(snapshotId), Some(dataSeq), Some(seq), f)
+
+    val tagged = ch.addedData.flatMap { case (id, fs) => fs.map(id -> _) }
+    val files = tagged.map(_._2)
+    val stamped = tagged.map(_._1).zip(if (rowIds) assignFirstRowIds(base, files) else files)
+    val dataMs = stamped.groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex
+      .map { case ((specId, fs), i) =>
+        write(s"m$i", fs.map(f => added(f._2, seq)), specOf(specId), ManifestContent.Data)
+      }
+    val deleteMs =
+      if (ch.addedDeletes.isEmpty) Nil
+      else Seq(write("d0", ch.addedDeletes.map(added(_, ch.deleteDataSeq.getOrElse(seq))),
+        base.partitionSpecs.find(_.fields.isEmpty).get, ManifestContent.Deletes))
+
+    val kept = baseManifests(io, base).zipWithIndex.flatMap { case (m, i) =>
+      val isData = m.content == ManifestContent.Data
+      val removed: DataFile => Boolean =
+        if (isData) f => ch.removedData(f.filePath)
+        else f => ch.removedDeletes(deleteKey(f))
+      if (!isData && ch.dropDeleteManifests) None
+      else if (if (isData) ch.removedData.isEmpty else ch.removedDeletes.isEmpty) Some(m)
+      else {
+        val entries = ManifestCacheKeyed.read(io, base, m)
+        if (!entries.exists(e => e.isAlive && removed(e.dataFile))) Some(m)
+        else Some(write(s"rw$i", entries.filter(_.isAlive).map { e =>
+          val resolvedSeq = e.sequenceNumber.orElse(Some(m.sequenceNumber))
+          if (removed(e.dataFile))
+            e.copy(status = ManifestStatus.Deleted,
+              snapshotId = Some(snapshotId), sequenceNumber = resolvedSeq)
+          else e.copy(status = ManifestStatus.Existing, sequenceNumber = resolvedSeq)
+        }, specOf(m.partitionSpecId), m.content))
+      }
+    }
+    dataMs ++ deleteMs ++ kept
+  }
+
+  /** One snapshot commit with optimistic retry: `changes` is re-invoked
+    * per attempt against the refreshed base, and the producer writes its
+    * manifests.
     *
     * With `branch` set, the commit targets that ref instead of the main
     * line (write-audit-publish staging): the new snapshot's parent and
@@ -289,42 +346,67 @@ object Commits {
     * readers of the table see nothing until a fast-forward publish. */
   def commit(table: GraftTable, operation: String, commitUuid: String,
       extraSummary: Map[String, String] = Map.empty,
-      branch: Option[String] = None,
-      prepare: TableMetadata => TableMetadata = identity)(
-      manifests: (TableMetadata, Long, Long) => Seq[ManifestFile]): GraftTable = {
+      branch: Option[String] = None)(
+      changes: TableMetadata => FileChanges): GraftTable =
+    retrying(table)((base, snapshotId) => applyCommit(table, base, operation,
+      commitUuid, snapshotId, extraSummary, branch)(changes))
+
+  /** A commit that moves no files and writes its own manifests: `manifests`
+    * returns the FULL new list per attempt (manifest consolidation). */
+  def commitManifests(table: GraftTable, operation: String, commitUuid: String,
+      extraSummary: Map[String, String] = Map.empty)(
+      manifests: (TableMetadata, Long, Long) => Seq[ManifestFile]): GraftTable =
+    retrying(table)((base, snapshotId) => applySnapshot(table, base, operation,
+      commitUuid, snapshotId, extraSummary, None)(manifests))
+
+  private def retrying(table: GraftTable)(
+      attempt: (TableMetadata, Long) => TableMetadata): GraftTable = {
     val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    graft.catalog.CommitRetry.run(table.catalog, table.name) { (base0raw, _) =>
-      (applyCommit(table, base0raw, operation, commitUuid, snapshotId,
-        extraSummary, branch, prepare)(manifests),
-        (_: Int) => table.refresh())
+    graft.catalog.CommitRetry.run(table.catalog, table.name) { (base, _) =>
+      (attempt(base, snapshotId), (_: Int) => table.refresh())
     }
   }
 
-  /** The body of one commit attempt: builds manifests + manifest list +
-    * snapshot against `base0raw` and returns the updated metadata WITHOUT
-    * touching the catalog. [[commit]] wraps it in the optimistic-retry
-    * loop; [[Transaction]] chains several of these (plus metadata-only
-    * actions) into one catalog swap. */
-  private[table] def applyCommit(table: GraftTable, base0raw: TableMetadata,
+  /** `md` as seen from `branch`: its head stands in as the current
+    * snapshot (the parent and manifest base of a branch commit). */
+  private def onBranch(md: TableMetadata, branch: Option[String]): TableMetadata =
+    branch match {
+      case Some(b) =>
+        val head = md.refs.getOrElse(b, throw new IllegalArgumentException(
+          s"unknown branch: $b")).snapshotId
+        md.copy(currentSnapshotId = Some(head))
+      case None => md
+    }
+
+  /** One file-level commit attempt against `base0`, WITHOUT touching the
+    * catalog: [[commit]] wraps it in the optimistic-retry loop;
+    * [[Transaction]] chains several of these (plus metadata-only actions)
+    * into one catalog swap. A commit adding delete files registers the
+    * unpartitioned spec first. */
+  private[table] def applyCommit(table: GraftTable, base0: TableMetadata,
       operation: String, commitUuid: String, snapshotId: Long,
-      extraSummary: Map[String, String], branch: Option[String],
-      prepare: TableMetadata => TableMetadata)(
+      extraSummary: Map[String, String], branch: Option[String])(
+      changes: TableMetadata => FileChanges): TableMetadata = {
+    val ch = changes(onBranch(base0, branch))
+    val prepared = if (ch.addedDeletes.isEmpty) base0 else ensureUnpartitionedSpec(base0)
+    applySnapshot(table, prepared, operation, commitUuid, snapshotId, extraSummary,
+      branch) { (base, seq, id) =>
+      produce(table.io, base, ch, ch.assignRowIds && addsRows(operation),
+        commitUuid, id, seq)
+    }
+  }
+
+  /** The body of one commit attempt: the manifest list and snapshot for
+    * the manifests `manifests` returns against `base0` (on `branch`). */
+  private def applySnapshot(table: GraftTable, base0: TableMetadata,
+      operation: String, commitUuid: String, snapshotId: Long,
+      extraSummary: Map[String, String], branch: Option[String])(
       manifests: (TableMetadata, Long, Long) => Seq[ManifestFile]): TableMetadata = {
     val io = table.io
     locally {
-      // metadata-shaping the commit needs in place before manifests are
-      // written (e.g. registering the unpartitioned spec for global
-      // deletes) — applied per attempt so it sees the refreshed base
-      val base0 = prepare(base0raw)
       // manifest building and parentage resolve against the branch head;
       // ref/current bookkeeping below applies to the true base
-      val base = branch match {
-        case Some(b) =>
-          val head = base0.refs.getOrElse(b, throw new IllegalArgumentException(
-            s"unknown branch: $b")).snapshotId
-          base0.copy(currentSnapshotId = Some(head))
-        case None => base0
-      }
+      val base = onBranch(base0, branch)
       val seq = base.lastSequenceNumber + 1
       val all = manifests(base, seq, snapshotId)
       val listPath = s"${base.location}/metadata/snap-$snapshotId-$commitUuid.avro"
@@ -349,21 +431,17 @@ object Commits {
       // update_snapshot_summaries) — caller extras layer on top
       val summary = SnapshotSummary.build(io, base, all, snapshotId) ++ extraSummary
 
-      // v3 row lineage: append commits consume a contiguous row-id block
-      // equal to the rows they added (AppendWriter assigned the per-file
-      // first_row_id from this same base.nextRowId). Only manifests THIS
-      // snapshot added count — carried base manifests keep historical
-      // added-row totals. The snapshot records its (first-row-id,
-      // added-rows) range (snapshot.rs:76-81) so an update-action catalog
-      // can re-derive next-row-id from `add-snapshot` alone.
-      // append AND overwrite snapshots add rows (CoW rewrites, INSERT
-      // OVERWRITE); replace (compaction) only rearranges — its files'
-      // lineage rides materialized columns, no new block consumed.
-      // Below v3 there is no lineage: no range, next-row-id stays put
+      // v3 row lineage: a row-adding commit consumes a contiguous row-id
+      // block equal to the rows it added (the producer assigned the
+      // per-file first_row_id from this same base.nextRowId). Only
+      // manifests THIS snapshot added count — carried base manifests keep
+      // historical added-row totals. The snapshot records its
+      // (first-row-id, added-rows) range (snapshot.rs:76-81) so an
+      // update-action catalog can re-derive next-row-id from
+      // `add-snapshot` alone. Below v3 there is no lineage: no range,
+      // next-row-id stays put
       val addedRows =
-        if (base.rowLineage && (operation == "append" || operation == "overwrite"))
-          addedRecords
-        else 0L
+        if (base.rowLineage && addsRows(operation)) addedRecords else 0L
 
       val snap = Snapshot(
         snapshotId = snapshotId,

@@ -49,43 +49,23 @@ object DeleteWriter {
     val (whole, partial) = tasks.partition(t =>
       graft.expr.StrictMetricsEvaluator.fileMustMatch(bound, t.file, table.schema))
 
-    val matches =
-      if (partial.isEmpty) null
-      else matchingPositions(table, partial, bound, spark)
-        .sortWithinPartitions("file_path", "pos")
-
-    if (whole.isEmpty)
-      return writeDeleteFiles(table, matches, FileContent.PositionDeletes, Nil, spark,
-        referencedPaths = partial.map(_.file.filePath).toSet)
-
-    // stage position-delete parquet for the boundary files (pre-commit)
+    // position deletes for the boundary files, staged pre-commit
     val commitUuid = UUID.randomUUID().toString
-    val posFiles: Seq[DataFile] =
-      if (matches == null) Nil
-      else stagePositionDeletes(table, matches, commitUuid)
+    val posFiles =
+      if (partial.isEmpty) Nil
+      else stageDeleteFiles(table, matchingPositions(table, partial, bound, spark)
+        .sortWithinPartitions("file_path", "pos"), FileContent.PositionDeletes, Nil,
+        commitUuid)
+    if (whole.isEmpty && posFiles.isEmpty) return table
 
     val wholePaths = whole.map(_.file.filePath).toSet
-    Commits.commit(table, "delete", commitUuid, Map(
-      "deleted-data-files" -> whole.size.toString,
-      "added-delete-files" -> posFiles.size.toString),
-      prepare = md => Commits.ensureUnpartitionedSpec(md)._1) { (base, seq, snapshotId) =>
+    Commits.commit(table, "delete", commitUuid) { base =>
       // positions reference files by (path, row index): a concurrently
       // rewritten target would silently resurrect its rows
       Commits.validateReplace(table.io, base, table.metadata.currentSnapshotId,
         wholePaths ++ partial.map(_.file.filePath),
         Commits.conflictFilterFor(base, "delete", bound), table.schema)
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base, wholePaths,
-        commitUuid, snapshotId, seq)
-      val deleteManifest =
-        if (posFiles.isEmpty) Nil
-        else {
-          val entries = posFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(table.io, base, s"$commitUuid-d0", entries,
-            base.currentSchema, base.partitionSpecs.find(_.fields.isEmpty).get,
-            ManifestContent.Deletes, snapshotId, seq))
-        }
-      deleteManifest ++ rewritten
+      Commits.FileChanges(addedDeletes = posFiles, removedData = wholePaths)
     }
   }
 
@@ -102,24 +82,36 @@ object DeleteWriter {
       .filter(Predicate.toColumn(bound, table.schema))
       .select(col("_file").as("file_path"), col("_pos").as("pos")))
 
-  /** Write (file_path, pos) parquet rows and return their DataFile
-    * descriptors (no commit). */
-  private def stagePositionDeletes(table: GraftTable, rows: DataFrame,
-      commitUuid: String): Seq[DataFile] = {
+  /** Write delete rows — (file_path, pos) for position deletes, the key
+    * columns for equality deletes — as parquet under the commit's
+    * deletes directory and return their descriptors from the footers (no
+    * commit). Delete files are engine-global: an EMPTY partition tuple,
+    * committed under the unpartitioned spec — the spec (and the
+    * reference's DeleteFileIndex, delete_file_index.rs:137-141) read
+    * "global" off the spec having no fields; an all-null tuple under a
+    * partitioned spec would scope them to the null partition. Empty
+    * files are skipped; when nothing is left the directory goes too. */
+  private[table] def stageDeleteFiles(table: GraftTable, rows: DataFrame,
+      content: Int, equalityIds: Seq[Int], commitUuid: String): Seq[DataFile] = {
     val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
     val outDir = Locations.commitDir(table, "deletes", commitUuid)
     rows.write.options(graft.SessionConf.WriteConf.toMap).options(encConf).option("compression", "zstd").parquet(outDir)
-    val written = table.io.listFiles(outDir).filter(_._1.endsWith(".parquet"))
-    written.map { case (p, len) =>
-      val (rows, bounds) = posDeleteStats(p, encConf)
-      withPathBounds(DataFile(
-        content = FileContent.PositionDeletes,
-        filePath = p,
-        fileFormat = "PARQUET",
-        partition = Nil, // global: committed under the unpartitioned spec
-        recordCount = rows,
-        fileSizeInBytes = len), bounds)
-    }.filter(_.recordCount > 0)
+    val files = table.io.listFiles(outDir).filter(_._1.endsWith(".parquet"))
+      .map { case (p, len) =>
+        val (count, bounds) =
+          if (content == FileContent.PositionDeletes) posDeleteStats(p, encConf)
+          else (countRows(p, encConf), None)
+        withPathBounds(DataFile(
+          content = content,
+          filePath = p,
+          fileFormat = "PARQUET",
+          partition = Nil,
+          recordCount = count,
+          fileSizeInBytes = len,
+          equalityIds = equalityIds), bounds)
+      }.filter(_.recordCount > 0)
+    if (files.isEmpty) scala.util.Try(table.io.delete(outDir, recursive = true))
+    files
   }
 
   /** Row-level `DELETE WHERE` committed as v3 deletion vectors: Puffin
@@ -179,34 +171,23 @@ object DeleteWriter {
       return table
     }
 
-    Commits.commit(table, "delete", commitUuid,
-      Map("added-delete-files" -> descs.size.toString,
-        "added-position-deletes" -> descs.map(_._3).sum.toString),
-      prepare = md => Commits.ensureUnpartitionedSpec(md)._1) { (base, seq, snapshotId) =>
+    Commits.commit(table, "delete", commitUuid) { base =>
       // v3 invariant: a data file carries at most ONE deletion vector, and a
       // new DV must supersede (contain) the old (delete_vector.rs semantics).
-      // Fold any existing DV for a touched file into the new bitmap, then
-      // tombstone the superseded entries in their manifests. Runs inside the
-      // commit closure so optimistic retries merge against the refreshed base.
+      // Fold any existing DV for a touched file into the new bitmap; the
+      // producer tombstones the superseded entries. Runs per attempt so
+      // optimistic retries merge against the refreshed base.
       val touched = descs.map(_._2).toSet
       // DV positions address the touched files: targets must still be alive
       Commits.validateReplace(table.io, base, table.metadata.currentSnapshotId,
-        touched, None, table.schema)
-      val baseMs = Commits.baseManifests(table.io, base)
-      def specOf(m: ManifestFile) = base.partitionSpecs
-        .find(_.specId == m.partitionSpecId).getOrElse(base.defaultSpec)
-      def isSupersededDv(e: ManifestEntry) =
-        e.isAlive && e.dataFile.fileFormat == "PUFFIN" &&
-          e.dataFile.referencedDataFile.exists(touched)
-      // (manifest, its entries) for delete manifests holding a DV we supersede
-      val dvManifests: Seq[(ManifestFile, Seq[ManifestEntry])] = baseMs
+        touched, Commits.conflictFilterFor(base, "delete", bound), table.schema)
+      val superseded: Seq[DataFile] = Commits.baseManifests(table.io, base)
         .filter(_.content == ManifestContent.Deletes)
-        .map(m => m -> ManifestIO.readManifest(table.io, m.manifestPath,
-          base.currentSchema, specOf(m), m.keyMetadata))
-        .filter(_._2.exists(isSupersededDv))
-      val oldDvs: Map[String, DataFile] = dvManifests.flatMap(_._2)
-        .filter(isSupersededDv)
-        .map(e => e.dataFile.referencedDataFile.get -> e.dataFile).toMap
+        .flatMap(ManifestCacheKeyed.read(table.io, base, _))
+        .filter(e => e.isAlive && e.dataFile.fileFormat == "PUFFIN" &&
+          e.dataFile.referencedDataFile.exists(touched))
+        .map(_.dataFile)
+      val oldDvs = superseded.map(f => f.referencedDataFile.get -> f).toMap
 
       // v3 invariant: the new DV must CONTAIN any DV it supersedes. Files
       // that already carry one get old ∪ new merged EXECUTOR-SIDE (a
@@ -267,29 +248,8 @@ object DeleteWriter {
           contentOffset = Some(off),
           contentSizeInBytes = Some(len))
       }
-      val entries = files.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
-        Some(seq), Some(seq), f))
-      val m = Commits.writeManifest(table.io, base, s"$commitUuid-dv0", entries,
-        table.schema, base.partitionSpecs.find(_.fields.isEmpty).get,
-        ManifestContent.Deletes, snapshotId, seq)
-      // rewrite manifests that held a superseded DV, tombstoning those entries
-      val kept = baseMs.map { bm =>
-        dvManifests.find(_._1.manifestPath == bm.manifestPath) match {
-          case None => bm
-          case Some((_, entries)) =>
-            val newEntries = entries.filter(_.isAlive).map { e =>
-              val resolvedSeq = e.sequenceNumber.orElse(Some(bm.sequenceNumber))
-              if (isSupersededDv(e))
-                e.copy(status = ManifestStatus.Deleted,
-                  snapshotId = Some(snapshotId), sequenceNumber = resolvedSeq)
-              else e.copy(status = ManifestStatus.Existing, sequenceNumber = resolvedSeq)
-            }
-            Commits.writeManifest(table.io, base,
-              s"$commitUuid-dvrw${bm.manifestPath.hashCode.abs}", newEntries,
-              base.currentSchema, specOf(bm), ManifestContent.Deletes, snapshotId, seq)
-        }
-      }
-      m +: kept
+      Commits.FileChanges(addedDeletes = files,
+        removedDeletes = superseded.map(Commits.deleteKey).toSet)
     }
   }
 
@@ -328,8 +288,6 @@ object DeleteWriter {
     val ids = keyCols.map(n => table.schema.findField(n).getOrElse(
       throw new IllegalArgumentException(s"unknown upsert key column: $n")).id)
     val commitUuid = UUID.randomUUID().toString
-    val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
-    val delDir = Locations.commitDir(table, "deletes", commitUuid)
     // the data write and the delete-key write are INDEPENDENT Spark jobs
     // (both derive from the caller's frames; the commit below consumes
     // both) — overlap them so the fold's critical path pays one write
@@ -339,49 +297,35 @@ object DeleteWriter {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val dataF = Future(AppendWriter.writeDataFiles(table, df, commitUuid))
-    try {
-      deleteKeys.getOrElse(df)
-        .select(keyCols.map(col): _*).na.drop("any", keyCols).distinct()
-        .write.options(graft.SessionConf.WriteConf.toMap).options(encConf).option("compression", "zstd").parquet(delDir)
-    } catch {
-      case e: Throwable =>
-        try Await.result(dataF, Duration.Inf).foreach(f =>
-          try table.io.delete(f.filePath) catch { case _: Throwable => () })
-        catch { case _: Throwable => () }
-        throw e
-    }
+    val delFiles =
+      try stageDeleteFiles(table, deleteKeys.getOrElse(df)
+        .select(keyCols.map(col): _*).na.drop("any", keyCols).distinct(),
+        FileContent.EqualityDeletes, ids, commitUuid)
+      catch {
+        case e: Throwable =>
+          try Await.result(dataF, Duration.Inf).foreach(f =>
+            try table.io.delete(f.filePath) catch { case _: Throwable => () })
+          catch { case _: Throwable => () }
+          throw e
+      }
+    def dropKeys(): Unit =
+      try table.io.delete(Locations.commitDir(table, "deletes", commitUuid), recursive = true)
+      catch { case _: Throwable => () }
     val dataFiles =
       try Await.result(dataF, Duration.Inf)
       catch {
         case e: Throwable =>
           // the key write already landed: reclaim it before rethrowing
-          try table.io.delete(delDir, recursive = true)
-          catch { case _: Throwable => () }
+          dropKeys()
           throw e
       }
     if (dataFiles.isEmpty) {
       // no-op fold: reclaim the (already written) delete keys
-      try table.io.delete(delDir, recursive = true)
-      catch { case _: Throwable => () }
+      dropKeys()
       return table
     }
-    val delFiles = table.io.listFiles(delDir).filter(_._1.endsWith(".parquet"))
-      .map { case (p, len) =>
-        DataFile(
-          content = FileContent.EqualityDeletes,
-          filePath = p,
-          fileFormat = "PARQUET",
-          partition = Nil, // global: committed under the unpartitioned spec
-          recordCount = countRows(p, encConf),
-          fileSizeInBytes = len,
-          equalityIds = ids)
-      }.filter(_.recordCount > 0)
 
-    try Commits.commit(table, "overwrite", commitUuid, extraSummary ++ Map(
-      "added-data-files" -> dataFiles.size.toString,
-      "added-records" -> dataFiles.map(_.recordCount).sum.toString,
-      "added-delete-files" -> delFiles.size.toString),
-      prepare = md => Commits.ensureUnpartitionedSpec(md)._1) { (base, seq, snapshotId) =>
+    try Commits.commit(table, "overwrite", commitUuid, extraSummary) { base =>
       validateFromSnapshot.foreach { expected =>
         if (base.currentSnapshotId != expected)
           throw new StaleBaseSnapshot(
@@ -389,29 +333,15 @@ object DeleteWriter {
               s"${base.currentSnapshotId.orNull} since the caller's read — " +
               "re-derive and retry")
       }
-      val dataEntries = dataFiles.map(f => ManifestEntry(ManifestStatus.Added,
-        Some(snapshotId), Some(seq), Some(seq), f))
-      val dataM = Commits.writeManifest(table.io, base, s"$commitUuid-m0",
-        dataEntries, table.schema, table.spec, ManifestContent.Data,
-        snapshotId, seq)
-      val delM =
-        if (delFiles.isEmpty) Nil
-        else {
-          val delEntries = delFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(table.io, base, s"$commitUuid-d0",
-            delEntries, table.schema,
-            base.partitionSpecs.find(_.fields.isEmpty).get,
-            ManifestContent.Deletes, snapshotId, seq))
-        }
-      (dataM +: delM) ++ Commits.baseManifests(table.io, base)
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> dataFiles),
+        addedDeletes = delFiles)
     } catch {
       case e: StaleBaseSnapshot =>
         // validation precedes every manifest write, so nothing landed:
         // reclaim this attempt's staged data + delete files (the caller
         // re-derives and stages a fresh set; orphan sweep is backstop)
-        (dataFiles.map(_.filePath) ++ delFiles.map(_.filePath)).foreach(p =>
-          try table.io.delete(p) catch { case _: Throwable => () })
+        (dataFiles ++ delFiles).foreach(f =>
+          try table.io.delete(f.filePath) catch { case _: Throwable => () })
         throw e
     }
   }
@@ -422,64 +352,13 @@ object DeleteWriter {
       spark: SparkSession): GraftTable = {
     val ids = keyCols.map(n => table.schema.findField(n).getOrElse(
       throw new IllegalArgumentException(s"unknown equality column: $n")).id)
-    val projected = keys.select(keyCols.map(col): _*).distinct()
-    writeDeleteFiles(table, projected, FileContent.EqualityDeletes, ids, spark)
-  }
-
-  private def writeDeleteFiles(table: GraftTable, rows: DataFrame, content: Int,
-      equalityIds: Seq[Int], spark: SparkSession,
-      referencedPaths: Set[String] = Set.empty): GraftTable = {
-    val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
     val commitUuid = UUID.randomUUID().toString
-    val outDir = Locations.commitDir(table, "deletes", commitUuid)
-    rows.write.options(graft.SessionConf.WriteConf.toMap).options(encConf).option("compression", "zstd").parquet(outDir)
-
-    val written = table.io.listFiles(outDir).filter(_._1.endsWith(".parquet"))
-    if (written.isEmpty || rowCount(written, encConf) == 0L) {
-      table.io.delete(outDir, recursive = true)
-      return table
-    }
-    // delete files are globally-scoped: written under the UNPARTITIONED
-    // spec with an EMPTY partition tuple — the spec (and the reference's
-    // DeleteFileIndex, delete_file_index.rs:137-141) read "global" off the
-    // spec having no fields; an all-null tuple under a partitioned spec
-    // would scope them to the null partition for compliant readers
-    val files = written.map { case (p, len) =>
-      val (rows, bounds) =
-        if (content == FileContent.PositionDeletes) posDeleteStats(p, encConf)
-        else (countRows(p, encConf), None)
-      withPathBounds(DataFile(
-        content = content,
-        filePath = p,
-        fileFormat = "PARQUET",
-        partition = Nil,
-        recordCount = rows,
-        fileSizeInBytes = len,
-        equalityIds = equalityIds), bounds)
-    }.filter(_.recordCount > 0)
-
-    Commits.commit(table, "delete", commitUuid,
-      Map("added-delete-files" -> files.size.toString,
-        "added-position-deletes" -> (if (content == FileContent.PositionDeletes)
-          files.map(_.recordCount).sum.toString else "0")),
-      prepare = md => Commits.ensureUnpartitionedSpec(md)._1) { (base, seq, snapshotId) =>
-      // position deletes address (path, row index): their target files must
-      // survive any concurrent rewrite. Equality deletes pass an empty set
-      // (they bind by key + sequence number, immune to file identity).
-      if (referencedPaths.nonEmpty)
-        Commits.validateReplace(table.io, base, table.metadata.currentSnapshotId,
-          referencedPaths, None, table.schema)
-      val entries = files.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
-        Some(seq), Some(seq), f))
-      val unpartSpec = base.partitionSpecs.find(_.fields.isEmpty).get
-      val m = Commits.writeManifest(table.io, base, s"$commitUuid-d0", entries,
-        table.schema, unpartSpec, ManifestContent.Deletes, snapshotId, seq)
-      m +: Commits.baseManifests(table.io, base)
-    }
+    val files = stageDeleteFiles(table, keys.select(keyCols.map(col): _*).distinct(),
+      FileContent.EqualityDeletes, ids, commitUuid)
+    if (files.isEmpty) table
+    else Commits.commit(table, "delete", commitUuid)(
+      _ => Commits.FileChanges(addedDeletes = files))
   }
-
-  private def rowCount(files: Seq[(String, Long)], encConf: Map[String, String]): Long =
-    files.map { case (p, _) => countRows(p, encConf) }.sum
 
   /** Footer-only row count (delete commits write few files; driver-side).
     * HadoopReadOptions resolves decryption via the crypto factory when the

@@ -87,9 +87,8 @@ object Maintenance {
     val files = AppendWriter.writeDataFiles(table, df, commitUuid, lineage)
 
     val sourcePaths = tasks.map(_.file.filePath).toSet
-    Commits.commit(table, "replace", commitUuid, Map(
-      "rewritten-data-files" -> tasks.size.toString,
-      "added-data-files" -> files.size.toString)) { (base, seq, snapshotId) =>
+    Commits.commit(table, "replace", commitUuid,
+      Map("rewritten-data-files" -> tasks.size.toString)) { base =>
       // Concurrent APPENDS are fine — their manifests pass through the
       // rewrite untouched. What must abort: a concurrent commit that
       // removed one of our sources (rows would duplicate — the new files
@@ -97,15 +96,11 @@ object Maintenance {
       // their rows would resurrect). Serializable-lite for compaction.
       Commits.validateReplace(table.io, base, baseSnapshotId, sourcePaths,
         None, table.schema, failOnNewDeletes = true)
-      val entries = files.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
-        Some(seq), Some(seq), f))
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base,
-        sourcePaths, commitUuid, snapshotId, seq,
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> files),
+        removedData = sourcePaths,
         // the rewrite folded every delete in scope; validation above
         // guarantees no newer ones exist
         dropDeleteManifests = true)
-      Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-        table.schema, table.spec, ManifestContent.Data, snapshotId, seq) +: rewritten
     }
   }
 
@@ -184,18 +179,12 @@ object Maintenance {
 
     val commitUuid = UUID.randomUUID().toString
     val newFiles = AppendWriter.writeDataFiles(table, df, commitUuid, lineage)
-    Commits.commit(table, "replace", commitUuid, Map(
-      "rewritten-data-files" -> sourcePaths.size.toString,
-      "added-data-files" -> newFiles.size.toString)) { (base, seq, snapshotId) =>
+    Commits.commit(table, "replace", commitUuid,
+      Map("rewritten-data-files" -> sourcePaths.size.toString)) { base =>
       Commits.validateReplace(table.io, base, baseSnapshotId, sourcePaths,
         None, table.schema, failOnNewDeletes = true)
-      val entries = newFiles.map(f => ManifestEntry(ManifestStatus.Added,
-        Some(snapshotId), Some(seq), Some(seq), f))
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base,
-        sourcePaths, commitUuid, snapshotId, seq,
-        dropDeleteManifests = false)
-      Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-        table.schema, table.spec, ManifestContent.Data, snapshotId, seq) +: rewritten
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> newFiles),
+        removedData = sourcePaths)
     }
   }
 
@@ -250,16 +239,11 @@ object Maintenance {
     val sourcePaths = tasks.map(_.file.filePath).toSet
     Commits.commit(table, "replace", commitUuid, Map(
       "rewritten-data-files" -> tasks.size.toString,
-      "added-data-files" -> files.size.toString,
-      "zorder-columns" -> cols.mkString(","))) { (base, seq, snapshotId) =>
+      "zorder-columns" -> cols.mkString(","))) { base =>
       Commits.validateReplace(table.io, base, baseSnapshotId, sourcePaths,
         None, table.schema, failOnNewDeletes = true)
-      val entries = files.map(f => ManifestEntry(ManifestStatus.Added, Some(snapshotId),
-        Some(seq), Some(seq), f))
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base,
-        sourcePaths, commitUuid, snapshotId, seq, dropDeleteManifests = true)
-      Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-        table.schema, table.spec, ManifestContent.Data, snapshotId, seq) +: rewritten
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> files),
+        removedData = sourcePaths, dropDeleteManifests = true)
     }
   }
 
@@ -470,17 +454,9 @@ object Maintenance {
     val commitUuid = UUID.randomUUID().toString
     val summary = Map("source-snapshot-id" -> snapshotId.toString) ++
       src.summary.get("wap.id").map("published-wap-id" -> _)
-    Commits.commit(table, "append", commitUuid, summary) { (base, seq, newId) =>
-      val fresh = bySpec.zipWithIndex.map { case ((sid, files), i) =>
-        val spec = base.partitionSpecs.find(_.specId == sid)
-          .getOrElse(base.defaultSpec)
-        val entries = files.map(f => ManifestEntry(ManifestStatus.Added,
-          Some(newId), Some(seq), Some(seq), f))
-        Commits.writeManifest(table.io, base, s"$commitUuid-cp$i", entries,
-          base.currentSchema, spec, ManifestContent.Data, newId, seq)
-      }
-      fresh ++ Commits.baseManifests(table.io, base)
-    }
+    // the files keep the first_row_ids they were staged with
+    Commits.commit(table, "append", commitUuid, summary)(
+      _ => Commits.FileChanges(addedData = bySpec, assignRowIds = false))
   }
 
   /** Compact position-delete parquet files and drop DANGLING delete rows
@@ -529,65 +505,20 @@ object Maintenance {
       .sortWithinPartitions("file_path", "pos")
 
     val commitUuid = UUID.randomUUID().toString
-    val outDir = Locations.commitDir(table, "deletes", commitUuid)
-    survivors.write.options(graft.SessionConf.WriteConf.toMap).options(encConf).option("compression", "zstd").parquet(outDir)
-    val written = table.io.listFiles(outDir).filter(_._1.endsWith(".parquet"))
-    val maxSeq = sources.map(_.sequenceNumber).max
-    val compacted = written.map { case (p, len) =>
-      val (rows, bounds) = DeleteWriter.posDeleteStats(p, encConf)
-      DeleteWriter.withPathBounds(DataFile(
-        content = FileContent.PositionDeletes,
-        filePath = p,
-        fileFormat = "PARQUET",
-        partition = Nil, // global: committed under the unpartitioned spec
-        recordCount = rows,
-        fileSizeInBytes = len), bounds)
-    }.filter(_.recordCount > 0)
-
-    val sourcePaths = sources.map(_.file.filePath).toSet
-    Commits.commit(table, "replace", commitUuid, Map(
-      "rewritten-delete-files" -> sources.size.toString,
-      "added-delete-files" -> compacted.size.toString),
-      prepare = m => Commits.ensureUnpartitionedSpec(m)._1) { (base, seq, snapshotId) =>
+    val compacted = DeleteWriter.stageDeleteFiles(table, survivors,
+      FileContent.PositionDeletes, Nil, commitUuid)
+    val sourceKeys = sources.map(d => Commits.deleteKey(d.file)).toSet
+    Commits.commit(table, "replace", commitUuid,
+      Map("rewritten-delete-files" -> sources.size.toString)) { base =>
       // concurrent appends pass through; any concurrent replace/delete may
       // have moved rows our surviving positions address — abort and rerun
       Commits.validateReplace(table.io, base, baseSnapshotId, Set.empty,
         None, table.schema, failOnNewReplaceOps = true)
-      val kept = Commits.baseManifests(table.io, base).map { m =>
-        if (m.content != ManifestContent.Deletes) m
-        else {
-          val spec = base.partitionSpecs.find(_.specId == m.partitionSpecId)
-            .getOrElse(base.defaultSpec)
-          val entries = ManifestIO.readManifest(table.io, m.manifestPath,
-            base.currentSchema, spec, m.keyMetadata)
-          if (!entries.exists(e => e.isAlive && sourcePaths(e.dataFile.filePath))) m
-          else {
-            val rewrittenEntries = entries.filter(_.isAlive).map { e =>
-              val resolvedSeq = e.sequenceNumber.orElse(Some(m.sequenceNumber))
-              if (sourcePaths(e.dataFile.filePath))
-                e.copy(status = ManifestStatus.Deleted,
-                  snapshotId = Some(snapshotId), sequenceNumber = resolvedSeq)
-              else e.copy(status = ManifestStatus.Existing,
-                sequenceNumber = resolvedSeq)
-            }
-            Commits.writeManifest(table.io, base,
-              s"$commitUuid-pdrw${m.manifestPath.hashCode.abs}", rewrittenEntries,
-              base.currentSchema, spec, ManifestContent.Deletes, snapshotId, seq)
-          }
-        }
-      }
-      val added =
-        if (compacted.isEmpty) Nil
-        else {
-          // data sequence PRESERVED (max of sources): a fresh seq would
-          // re-scope the deletes onto files written after the sources
-          val entries = compacted.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(maxSeq), Some(seq), f))
-          Seq(Commits.writeManifest(table.io, base, s"$commitUuid-pd0", entries,
-            base.currentSchema, base.partitionSpecs.find(_.fields.isEmpty).get,
-            ManifestContent.Deletes, snapshotId, seq))
-        }
-      added ++ kept
+      // data sequence PRESERVED (max of sources): a fresh seq would
+      // re-scope the deletes onto files written after the sources
+      Commits.FileChanges(addedDeletes = compacted,
+        deleteDataSeq = Some(sources.map(_.sequenceNumber).max),
+        removedDeletes = sourceKeys)
     }
   }
 
@@ -619,7 +550,7 @@ object Maintenance {
         m.manifestLength < smallManifestBytes)
     if (before.size <= 1) return table // nothing to consolidate
     val commitUuid = UUID.randomUUID().toString
-    Commits.commit(table, "replace", commitUuid,
+    Commits.commitManifests(table, "replace", commitUuid,
       Map("manifests-rewritten" -> before.size.toString)) { (base, seq, snapshotId) =>
       val manifests = Commits.baseManifests(io, base)
       val (data, rest) = manifests.partition(_.content == ManifestContent.Data)

@@ -25,7 +25,7 @@ import graft.meta._
   * keep `_row_id` with a nulled sequence (the reader then serves the new
   * file's sequence number — "last updated here"), and inserted rows ride
   * null/null into first_row_id + position inheritance
-  * (Commits.assignFirstRowIds blocks the new files). On v1/v2 tables the
+  * (the commit's producer blocks the new files). On v1/v2 tables the
   * rewrites read and write the data columns alone.
   */
 object RowOps {
@@ -75,29 +75,17 @@ object RowOps {
     }
 
     val commitUuid = UUID.randomUUID().toString
-    val newFiles0 = newData
+    val newFiles = newData
       .map(d => AppendWriter.writeDataFiles(table, d, commitUuid, lineage))
       .getOrElse(Nil)
     val dropPaths = (whole ++ partial).map(_.file.filePath).toSet
 
-    Commits.commit(table, "overwrite", commitUuid, Map(
-      "deleted-data-files" -> dropPaths.size.toString,
-      "added-data-files" -> newFiles0.size.toString)) { (base, seq, snapshotId) =>
+    Commits.commit(table, "overwrite", commitUuid) { base =>
       Commits.validateReplace(table.io, base, table.metadata.currentSnapshotId,
         dropPaths, Commits.conflictFilterFor(base, "delete", bound), table.schema,
         failOnDeletesApplyingTo = dropPaths)
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base, dropPaths,
-        commitUuid, snapshotId, seq)
-      val added =
-        if (newFiles0.isEmpty) Nil
-        else {
-          val newFiles = Commits.assignFirstRowIds(base, newFiles0)
-          val entries = newFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-            base.currentSchema, base.defaultSpec, ManifestContent.Data, snapshotId, seq))
-        }
-      added ++ rewritten
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> newFiles),
+        removedData = dropPaths)
     }
   }
 
@@ -161,30 +149,19 @@ object RowOps {
     val newData = survivors.map(_.unionByName(ordered)).getOrElse(ordered)
 
     val commitUuid = UUID.randomUUID().toString
-    val newFiles0 = AppendWriter.writeDataFiles(table, newData, commitUuid, lineage)
+    val newFiles = AppendWriter.writeDataFiles(table, newData, commitUuid, lineage)
     val dropPaths = candidates.map(_.file.filePath).toSet
 
-    Commits.commit(table, "overwrite", commitUuid, Map(
-      "merged-data-files" -> dropPaths.size.toString,
-      "added-data-files" -> newFiles0.size.toString)) { (base, seq, snapshotId) =>
+    Commits.commit(table, "overwrite", commitUuid,
+      Map("merged-data-files" -> dropPaths.size.toString)) { base =>
       // merge has no static predicate bounding the conflict region: under
       // serializable isolation ANY concurrently-added data row may match
       // a source key, so the filter is AlwaysTrue (every new file trips)
       Commits.validateReplace(table.io, base, table.metadata.currentSnapshotId,
         dropPaths, Commits.conflictFilterFor(base, "merge", graft.expr.AlwaysTrue),
         table.schema, failOnDeletesApplyingTo = dropPaths)
-      val rewritten = Commits.rewriteManifestsDropping(table.io, base, dropPaths,
-        commitUuid, snapshotId, seq)
-      val added =
-        if (newFiles0.isEmpty) Nil
-        else {
-          val newFiles = Commits.assignFirstRowIds(base, newFiles0)
-          val entries = newFiles.map(f => ManifestEntry(ManifestStatus.Added,
-            Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(Commits.writeManifest(table.io, base, s"$commitUuid-m0", entries,
-            base.currentSchema, base.defaultSpec, ManifestContent.Data, snapshotId, seq))
-        }
-      added ++ rewritten
+      Commits.FileChanges(addedData = Seq(table.spec.specId -> newFiles),
+        removedData = dropPaths)
     }
   }
 

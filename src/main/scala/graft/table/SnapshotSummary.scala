@@ -158,9 +158,10 @@ object SnapshotSummary {
   }
 }
 
-/** Entry reads for summary building, through the SAME cache key the
-  * scan path uses — the commit pre-warms exactly what the next plan
-  * parses. */
+/** Entry reads for commits (summary building, the producer's
+  * tombstones), through the SAME cache key the scan path uses — a
+  * commit reuses what its planning parsed and pre-warms exactly what the
+  * next plan parses. */
 private object ManifestCacheKeyed {
   def read(io: graft.io.FileIO, base: TableMetadata,
       m: ManifestFile): Seq[graft.meta.ManifestEntry] = {

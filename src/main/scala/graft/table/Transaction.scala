@@ -132,8 +132,7 @@ final class Transaction private[table] (origin: GraftTable) {
       val snapshotId =
         math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
       meta(base => Commits.applyCommit(origin, base, "append", commitUuid,
-        snapshotId, extraSummary ++ AppendWriter.appendSummary(files), None,
-        identity)(AppendWriter.appendManifests(origin, files, commitUuid)))
+        snapshotId, extraSummary, None)(_ => AppendWriter.appendChanges(origin, files)))
     }
     this
   }

@@ -93,6 +93,62 @@ class ConflictSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(GraftTable.load("c3", catalog).newScan().toDF(spark).count() === 105)
   }
 
+  Seq[(String, (GraftTable, graft.expr.Predicate) => GraftTable)](
+    "position deletes" -> ((t, p) => t.deleteWhere(p, spark)),
+    "deletion vectors" -> ((t, p) => t.deleteWhereDV(p, spark))
+  ).zipWithIndex.foreach { case ((what, delete), i) =>
+    test(s"serializable MoR delete ($what) of boundary files aborts on concurrent matching append; snapshot isolation proceeds") {
+      val catalog = freshCatalog()
+      val name = s"c7_$i"
+      var t = GraftTable.create(name, catalog, schema)
+      t = t.append(df(1 to 100).coalesce(1))
+
+      // id > 50 matches part of the one data file: no whole-file drop —
+      // the same isolation rule must hold
+      val stale = GraftTable.load(name, catalog)
+      GraftTable.load(name, catalog).append(df(101 to 110)) // concurrent append
+      intercept[Commits.ValidationException] {
+        delete(stale, BinaryPred(Gt, "id", 50L))
+      }
+      assert(GraftTable.load(name, catalog).newScan().toDF(spark).count() === 110)
+
+      // snapshot isolation: the delete applies to the rows it scanned
+      // (1..110), the concurrent append's 111..120 stay
+      GraftTable.load(name, catalog)
+        .updateProperties(Map("write.delete.isolation-level" -> "snapshot"))
+      val stale2 = GraftTable.load(name, catalog)
+      GraftTable.load(name, catalog).append(df(111 to 120))
+      delete(stale2, BinaryPred(Gt, "id", 50L))
+      assert(GraftTable.load(name, catalog).newScan().toDF(spark).count() === 60)
+    }
+  }
+
+  test("a merge from a stale handle commits its files under the spec they were written with") {
+    val catalog = freshCatalog()
+    var t = GraftTable.create("c8", catalog, schema)
+    t = t.append(df(1 to 100))
+
+    val stale = GraftTable.load("c8", catalog) // unpartitioned
+    GraftTable.load("c8", catalog).updateSpec(Seq("id" -> Transform.Bucket(4)))
+    RowOps.mergeInto(stale, df(95 to 105).withColumn("v", col("v") * 10),
+      Seq("id"), spark)
+
+    val fresh = GraftTable.load("c8", catalog)
+    assert(fresh.spec.specId !== stale.spec.specId)
+    val snap = fresh.metadata.currentSnapshotId.get
+    val added = Commits.baseManifests(fresh.io, fresh.metadata).filter(m =>
+      m.content == graft.meta.ManifestContent.Data && m.addedSnapshotId == snap &&
+        m.addedFilesCount > 0)
+    assert(added.nonEmpty && added.forall(_.partitionSpecId == stale.spec.specId),
+      added.map(_.partitionSpecId))
+    assert(fresh.newScan().toDF(spark).count() === 105)
+    val merged = fresh.newScan()
+      .withFilter(graft.expr.Predicate.bind(BinaryPred(Gt, "id", 94L), fresh.schema))
+      .toDF(spark).filter(col("id") > 94).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(merged === (95 to 105).map(i => i.toLong -> i * 10.0).toMap)
+  }
+
   test("CoW rewrite aborts when a concurrent MoR delete targets its files") {
     val catalog = freshCatalog()
     var t = GraftTable.create("c6", catalog, schema)

@@ -138,7 +138,7 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val file = DataFile(content = FileContent.EqualityDeletes, filePath = path,
       fileFormat = "PARQUET", partition = Seq(part), recordCount = keys.distinct.size.toLong,
       fileSizeInBytes = len, equalityIds = Seq(t.schema.findField("k").get.id))
-    Commits.commit(t, "delete", uuid, Map.empty) { (base, seq, snapshotId) =>
+    Commits.commitManifests(t, "delete", uuid) { (base, seq, snapshotId) =>
       val entry = ManifestEntry(ManifestStatus.Added, Some(snapshotId),
         Some(seq), Some(seq), file)
       Commits.writeManifest(t.io, base, s"$uuid-d0", Seq(entry),

@@ -65,7 +65,7 @@ class DeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       fileSizeInBytes = delLen,
       equalityIds = Seq(3))
     val uuid = java.util.UUID.randomUUID().toString
-    t = Commits.commit(t, "delete", uuid, Map.empty) { (base, seq, snapshotId) =>
+    t = Commits.commitManifests(t, "delete", uuid) { (base, seq, snapshotId) =>
       val entry = ManifestEntry(ManifestStatus.Added, Some(snapshotId),
         Some(seq), Some(seq), delFile)
       Commits.writeManifest(t.io, base, s"$uuid-d0", Seq(entry),
@@ -178,7 +178,7 @@ class DeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
       fileSizeInBytes = delLen,
       equalityIds = Seq(3))
     val uuid = java.util.UUID.randomUUID().toString
-    t = Commits.commit(t, "delete", uuid, Map.empty) { (base, seq, snapshotId) =>
+    t = Commits.commitManifests(t, "delete", uuid) { (base, seq, snapshotId) =>
       val entry = ManifestEntry(ManifestStatus.Added, Some(snapshotId),
         Some(seq), Some(seq), delFile)
       Commits.writeManifest(t.io, base, s"$uuid-d0", Seq(entry),

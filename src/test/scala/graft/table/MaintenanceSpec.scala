@@ -92,15 +92,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
         filePath = p, fileFormat = "PARQUET", partition = Nil,
         recordCount = 1L, fileSizeInBytes = len)
       val uuid = java.util.UUID.randomUUID().toString
-      Commits.commit(t, "delete", uuid, Map.empty,
-        prepare = m => Commits.ensureUnpartitionedSpec(m)._1) { (base, seq, snapId) =>
-        val e = graft.meta.ManifestEntry(graft.meta.ManifestStatus.Added,
-          Some(snapId), Some(seq), Some(seq), df)
-        Commits.writeManifest(t.io, base, s"$uuid-d0", Seq(e),
-          base.currentSchema, base.partitionSpecs.find(_.fields.isEmpty).get,
-          graft.meta.ManifestContent.Deletes, snapId, seq) +:
-          Commits.baseManifests(t.io, base)
-      }
+      Commits.commit(t, "delete", uuid)(_ => Commits.FileChanges(addedDeletes = Seq(df)))
     }
     val totalRowsBefore = posFiles(t).map(_.file.recordCount).sum
 

@@ -73,6 +73,41 @@ class SnapshotSummarySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s4("total-position-deletes") == "30", "carried forward")
   }
 
+  test("added-records and added-files-size match the committed files: append, upsert, delete, merge") {
+    val ss = spark; import ss.implicits._
+    val schema = IcebergSchema(0, Seq(
+      NestedField(1, "id", IcebergType.LongT, required = false),
+      NestedField(2, "v", IcebergType.DoubleT, required = false)))
+    def rows(r: Range, scale: Double = 1.0) = r.map(i => (i.toLong, i * scale)).toDF("id", "v")
+    def dataPaths(t: GraftTable) = t.newScan().planFiles().map(_.file.filePath).toSet
+    def allPaths(t: GraftTable) =
+      dataPaths(t) ++ t.newScan().planDeletes().map(_.file.filePath)
+    /** The summary against the files the commit added, read off disk:
+      * their bytes, and the rows of its new data files. */
+    def check(before: GraftTable, after: GraftTable, what: String): Unit = {
+      val s = after.metadata.currentSnapshot.get.summary
+      val added = (allPaths(after) -- allPaths(before)).toSeq
+      val data = added.filter(dataPaths(after))
+      val records = if (data.isEmpty) 0L else spark.read.parquet(data: _*).count()
+      assert(s.get("added-records").map(_.toLong).getOrElse(0L) === records, what)
+      assert(s("added-files-size").toLong === added.map(after.io.size).sum, what)
+    }
+
+    val t0 = GraftTable.create("sumfiles", catalog, schema)
+    val t1 = t0.append(rows(1 to 100))
+    check(t0, t1, "append")
+    assert(t1.metadata.currentSnapshot.get.summary("added-records") === "100")
+    val t2 = t1.upsert(rows(95 to 104, 10.0), Seq("id"))
+    check(t1, t2, "upsert")
+    assert(t2.metadata.currentSnapshot.get.summary("added-records") === "10")
+    // boundary delete: position-delete files only, no data rows added
+    val t3 = t2.deleteWhere(Predicate.gt("id", 20L).and(Predicate.lt("id", 31L)), spark)
+    check(t2, t3, "delete")
+    assert(!t3.metadata.currentSnapshot.get.summary.contains("added-records"))
+    val t4 = t3.mergeInto(rows(1 to 5, 2.0).unionByName(rows(200 to 201)), Seq("id"))
+    check(t3, t4, "merge")
+  }
+
   test("partition rollups appear under the configured limit only") {
     val ss = spark; import ss.implicits._
     val schema = IcebergSchema(0, Seq(
