@@ -92,13 +92,14 @@ object AppendWriter {
     if (files.isEmpty) return table
     val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
     val post = artifacts(snapshotId)
+    val names = new Commits.ManifestNames(commitUuid)
     try graft.catalog.CommitRetry.run(table.catalog, table.name) { (base, _) =>
       if (base.currentSnapshotId != expectedSnapshot)
         throw new StaleBaseSnapshot(
           s"table ${table.name}: base moved ${expectedSnapshot.orNull} -> " +
             s"${base.currentSnapshotId.orNull} since the caller's read — " +
             "re-derive and retry")
-      (post(Commits.applyCommit(table, base, "append", commitUuid, snapshotId,
+      (post(Commits.applyCommit(table, base, "append", names, snapshotId,
         extraSummary, None)(_ => appendChanges(table, files))),
         (_: Int) => table.refresh())
     } catch {

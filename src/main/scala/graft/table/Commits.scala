@@ -282,6 +282,18 @@ object Commits {
     * deletion vector (one Puffin file holds many). */
   def deleteKey(f: DataFile): (String, Option[Long]) = (f.filePath, f.contentOffset)
 
+  /** Manifest file names for one commit, `<commitUuid>-<kind><n>`: `n`
+    * counts every manifest the commit writes across ALL its retry
+    * attempts (Iceberg's SnapshotProducer manifest counter), so no two
+    * attempts write the same path. The manifest cache holds a path's
+    * parsed entries for good, and an attempt's entries differ from a
+    * retry's once the base has moved (row-id blocks, which base manifests
+    * get rewritten). Create one per commit, outside the retry loop. */
+  final class ManifestNames(val commitUuid: String) {
+    private val n = new java.util.concurrent.atomic.AtomicInteger
+    def next(kind: String): String = s"$commitUuid-$kind${n.getAndIncrement()}"
+  }
+
   /** The snapshot producer: writes the manifests for `ch` and returns the
     * full new manifest list — one added data manifest per write spec, one
     * added delete manifest, then the base list with removed entries
@@ -291,12 +303,12 @@ object Commits {
     * manifest list alone; the read goes through the scan's manifest
     * cache, which the commit's own planning has usually filled. */
   private def produce(io: graft.io.FileIO, base: TableMetadata, ch: FileChanges,
-      rowIds: Boolean, commitUuid: String, snapshotId: Long,
+      rowIds: Boolean, names: ManifestNames, snapshotId: Long,
       seq: Long): Seq[ManifestFile] = {
     def specOf(id: Int) = base.specById(id).getOrElse(base.defaultSpec)
-    def write(name: String, entries: Seq[ManifestEntry], spec: PartitionSpec,
+    def write(kind: String, entries: Seq[ManifestEntry], spec: PartitionSpec,
         content: Int) =
-      writeManifest(io, base, s"$commitUuid-$name", entries, base.currentSchema,
+      writeManifest(io, base, names.next(kind), entries, base.currentSchema,
         spec, content, snapshotId, seq)
     def added(f: DataFile, dataSeq: Long) =
       ManifestEntry(ManifestStatus.Added, Some(snapshotId), Some(dataSeq), Some(seq), f)
@@ -304,16 +316,16 @@ object Commits {
     val tagged = ch.addedData.flatMap { case (id, fs) => fs.map(id -> _) }
     val files = tagged.map(_._2)
     val stamped = tagged.map(_._1).zip(if (rowIds) assignFirstRowIds(base, files) else files)
-    val dataMs = stamped.groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex
-      .map { case ((specId, fs), i) =>
-        write(s"m$i", fs.map(f => added(f._2, seq)), specOf(specId), ManifestContent.Data)
+    val dataMs = stamped.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (specId, fs) =>
+        write("m", fs.map(f => added(f._2, seq)), specOf(specId), ManifestContent.Data)
       }
     val deleteMs =
       if (ch.addedDeletes.isEmpty) Nil
-      else Seq(write("d0", ch.addedDeletes.map(added(_, ch.deleteDataSeq.getOrElse(seq))),
+      else Seq(write("d", ch.addedDeletes.map(added(_, ch.deleteDataSeq.getOrElse(seq))),
         base.partitionSpecs.find(_.fields.isEmpty).get, ManifestContent.Deletes))
 
-    val kept = baseManifests(io, base).zipWithIndex.flatMap { case (m, i) =>
+    val kept = baseManifests(io, base).flatMap { m =>
       val isData = m.content == ManifestContent.Data
       val removed: DataFile => Boolean =
         if (isData) f => ch.removedData(f.filePath)
@@ -323,7 +335,7 @@ object Commits {
       else {
         val entries = ManifestCacheKeyed.read(io, base, m)
         if (!entries.exists(e => e.isAlive && removed(e.dataFile))) Some(m)
-        else Some(write(s"rw$i", entries.filter(_.isAlive).map { e =>
+        else Some(write("rw", entries.filter(_.isAlive).map { e =>
           val resolvedSeq = e.sequenceNumber.orElse(Some(m.sequenceNumber))
           if (removed(e.dataFile))
             e.copy(status = ManifestStatus.Deleted,
@@ -347,12 +359,15 @@ object Commits {
   def commit(table: GraftTable, operation: String, commitUuid: String,
       extraSummary: Map[String, String] = Map.empty,
       branch: Option[String] = None)(
-      changes: TableMetadata => FileChanges): GraftTable =
+      changes: TableMetadata => FileChanges): GraftTable = {
+    val names = new ManifestNames(commitUuid)
     retrying(table)((base, snapshotId) => applyCommit(table, base, operation,
-      commitUuid, snapshotId, extraSummary, branch)(changes))
+      names, snapshotId, extraSummary, branch)(changes))
+  }
 
   /** A commit that moves no files and writes its own manifests: `manifests`
-    * returns the FULL new list per attempt (manifest consolidation). */
+    * returns the FULL new list per attempt (manifest consolidation). Name
+    * them with one [[ManifestNames]] for the whole commit. */
   def commitManifests(table: GraftTable, operation: String, commitUuid: String,
       extraSummary: Map[String, String] = Map.empty)(
       manifests: (TableMetadata, Long, Long) => Seq[ManifestFile]): GraftTable =
@@ -384,15 +399,15 @@ object Commits {
     * into one catalog swap. A commit adding delete files registers the
     * unpartitioned spec first. */
   private[table] def applyCommit(table: GraftTable, base0: TableMetadata,
-      operation: String, commitUuid: String, snapshotId: Long,
+      operation: String, names: ManifestNames, snapshotId: Long,
       extraSummary: Map[String, String], branch: Option[String])(
       changes: TableMetadata => FileChanges): TableMetadata = {
     val ch = changes(onBranch(base0, branch))
     val prepared = if (ch.addedDeletes.isEmpty) base0 else ensureUnpartitionedSpec(base0)
-    applySnapshot(table, prepared, operation, commitUuid, snapshotId, extraSummary,
-      branch) { (base, seq, id) =>
+    applySnapshot(table, prepared, operation, names.commitUuid, snapshotId,
+      extraSummary, branch) { (base, seq, id) =>
       produce(table.io, base, ch, ch.assignRowIds && addsRows(operation),
-        commitUuid, id, seq)
+        names, id, seq)
     }
   }
 

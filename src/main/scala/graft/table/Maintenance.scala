@@ -550,6 +550,7 @@ object Maintenance {
         m.manifestLength < smallManifestBytes)
     if (before.size <= 1) return table // nothing to consolidate
     val commitUuid = UUID.randomUUID().toString
+    val names = new Commits.ManifestNames(commitUuid)
     Commits.commitManifests(table, "replace", commitUuid,
       Map("manifests-rewritten" -> before.size.toString)) { (base, seq, snapshotId) =>
       val manifests = Commits.baseManifests(io, base)
@@ -568,7 +569,7 @@ object Maintenance {
                 .map(e => e.copy(status = ManifestStatus.Existing,
                   sequenceNumber = e.sequenceNumber.orElse(Some(m.sequenceNumber))))
             }
-            Commits.writeManifest(io, base, s"$commitUuid-mrw$specId", entries,
+            Commits.writeManifest(io, base, names.next("mrw"), entries,
               base.currentSchema, spec, ManifestContent.Data, snapshotId, seq)
           }
         big ++ merged ++ rest

@@ -131,7 +131,8 @@ final class Transaction private[table] (origin: GraftTable) {
     if (files.nonEmpty) {
       val snapshotId =
         math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-      meta(base => Commits.applyCommit(origin, base, "append", commitUuid,
+      val names = new Commits.ManifestNames(commitUuid)
+      meta(base => Commits.applyCommit(origin, base, "append", names,
         snapshotId, extraSummary, None)(_ => AppendWriter.appendChanges(origin, files)))
     }
     this

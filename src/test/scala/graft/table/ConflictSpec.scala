@@ -260,6 +260,69 @@ class ConflictSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(GraftTable.load("c4", catalog).newScan().toDF(spark).count() === 145)
   }
 
+  /** A catalog whose first swap loses a race: just before it, `concurrent`
+    * commits through the inner catalog, so the swap conflicts and the
+    * commit retries against the moved base. */
+  private class LosesFirstSwap(inner: graft.catalog.Catalog,
+      concurrent: () => Unit) extends graft.catalog.Catalog {
+    @volatile var raced = false
+    override def io = inner.io
+    override def createTable(name: String, schema: IcebergSchema,
+        spec: PartitionSpec, properties: Map[String, String]) =
+      inner.createTable(name, schema, spec, properties)
+    override def loadTable(name: String) = inner.loadTable(name)
+    override def tableExists(name: String) = inner.tableExists(name)
+    override def dropTable(name: String) = inner.dropTable(name)
+    override def listTables() = inner.listTables()
+    override def commitTable(name: String, baseVersion: Int,
+        updated: TableMetadata): Int = {
+      if (!raced) { raced = true; concurrent() }
+      inner.commitTable(name, baseVersion, updated)
+    }
+    override protected def registerParsed(name: String,
+        md: TableMetadata): Unit = ()
+  }
+
+  private def ids(t: GraftTable): Seq[Long] = {
+    import spark.implicits._
+    t.newScan().toDF(spark).select("id").as[Long].collect().toSeq.sorted
+  }
+
+  // The retry rewrites the same base manifests after a concurrent append
+  // put a new one in front of them; each rewrite must land under a path
+  // no earlier attempt wrote, or the manifest cache serves the failed
+  // attempt's entries for it.
+  test("a compaction retried after a concurrent append tombstones every source file") {
+    val catalog = freshCatalog()
+    var t = GraftTable.create("c9", catalog, schema)
+    t = t.append(df(1 to 50).coalesce(1)); t = t.append(df(51 to 100).repartition(3))
+    assert(t.newScan().planFiles().size === 4)
+
+    val raced = new LosesFirstSwap(catalog,
+      () => GraftTable.load("c9", catalog).append(df(101 to 110).coalesce(1)))
+    Maintenance.rewriteDataFiles(GraftTable.load("c9", raced), spark)
+    assert(raced.raced)
+    val fresh = GraftTable.load("c9", catalog)
+    assert(fresh.metadata.currentSnapshot.get.summary("deleted-data-files") === "4")
+    assert(ids(fresh) === (1L to 110L))
+  }
+
+  test("a CoW delete retried after a concurrent append keeps the survivors of every manifest") {
+    val catalog = freshCatalog()
+    var t = GraftTable.create("c10", catalog, schema)
+    t = t.append(df(1 to 50).repartitionByRange(2, col("id")))
+    t = t.append(df(51 to 100).repartitionByRange(2, col("id")))
+
+    val raced = new LosesFirstSwap(catalog,
+      () => GraftTable.load("c10", catalog).append(df(101 to 110).coalesce(1)))
+    RowOps.overwriteWhere(GraftTable.load("c10", raced),
+      graft.expr.And(BinaryPred(Gt, "id", 40L), BinaryPred(LtEq, "id", 60L)), null, spark)
+    assert(raced.raced)
+    val fresh = GraftTable.load("c10", catalog)
+    assert(fresh.metadata.currentSnapshot.get.summary("deleted-data-files") === "2")
+    assert(ids(fresh) === (1L to 40L) ++ (61L to 110L))
+  }
+
   test("commit.retry.* table properties tune the retry policy") {
     import graft.catalog.{Catalog => GCatalog, CommitConflict, CommitRetry}
     // wrapper backend: commitTable always conflicts, counting attempts
