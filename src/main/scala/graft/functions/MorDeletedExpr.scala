@@ -8,16 +8,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.table.{DeleteFilter, DeletePlan, DeleteReaders}
 
-/** Merge-on-read delete test for the V1 scan: `mor_deleted(file_path,
-  * row_index, key1, …)` is true when the row at `row_index` of data file
-  * `file_path` is removed by a position delete, a deletion vector or an
-  * applicable equality delete on the key columns.
+/** Merge-on-read delete test for the V1 scan and the changelog's deleted
+  * rows: `mor_deleted(file_path, row_index, key1, …)` is true when the
+  * row at `row_index` of data file `file_path` is removed by a position
+  * delete, a deletion vector or an applicable equality delete on the key
+  * columns.
   *
   * Why an expression and not joins: the scan's own stage applies the
   * deletes row by row through the same [[graft.table.DeleteFilter]] the
@@ -109,12 +109,13 @@ case class MorDeletedExpr(
 }
 
 object MorDeletedExpr {
-  /** `keyCols`: (equality-key name the plan's groups use, the frame's
-    * column holding it). */
-  def column(keyCols: Seq[(String, Column)], plan: Broadcast[DeletePlan],
-      readers: DeleteReaders): Column =
+  /** `path`/`pos`: the frame's `_metadata.file_path`-rendered data-file
+    * path and row position (`_metadata.*` on a V1 scan, `_file`/`_pos`
+    * over one); `keyCols`: (equality-key name the plan's groups use, the
+    * frame's column holding it). */
+  def column(path: Column, pos: Column, keyCols: Seq[(String, Column)],
+      plan: Broadcast[DeletePlan], readers: DeleteReaders): Column =
     GraftBridge.column(MorDeletedExpr(
-      (Seq(col("_metadata.file_path"), col("_metadata.row_index")) ++
-        keyCols.map(_._2)).map(GraftBridge.expression),
+      (Seq(path, pos) ++ keyCols.map(_._2)).map(GraftBridge.expression),
       keyCols.map(_._1), plan, readers))
 }

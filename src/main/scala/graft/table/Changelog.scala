@@ -3,7 +3,7 @@ package graft.table
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.meta.{FileContent, ManifestContent, ManifestIO, ManifestStatus}
+import graft.meta.ManifestStatus
 import graft.spec.Snapshot
 
 /** Row-level changelog over a snapshot range — the CDC surface Iceberg
@@ -23,10 +23,12 @@ import graft.spec.Snapshot
   *   - `replace` (compaction): no logical change, contributes nothing.
   *
   * Scale shape: per snapshot the driver walks KB-scale manifest Avro of
-  * THAT snapshot (cache-hit for ancestors shared with the live scan);
-  * row work is executor joins — parent scan × (broadcast-sized delete
-  * descriptors | decoded DV positions), the same join shapes as the MoR
-  * read path. Output columns: table schema + `_change_type`,
+  * THAT snapshot through the scan's manifest cache. Rows are read by the
+  * table's one reader (`TableScan.readTasks`: field ids or name mapping,
+  * v3 defaults): inserts as their files hold them, deletes as ONE filter
+  * over the parent scan — the same per-row [[DeleteFilter]] test the MoR
+  * read applies, so each parent row is tested once and no join or
+  * exchange is planned. Output columns: table schema + `_change_type`,
   * `_change_ordinal`, `_commit_snapshot_id`.
   */
 object Changelog {
@@ -101,126 +103,47 @@ object Changelog {
 
   private def snapshotChanges(table: GraftTable, spark: SparkSession,
       s: Snapshot, ord: Int, dataCols: Seq[String]): Seq[DataFrame] = {
+    // the data files s itself added or removed, from ITS OWN manifest
+    // list (not `to`'s), so attribution survives later rewrites; a
+    // compaction reads none
+    lazy val mine = table.newScan().dataEntries(s)
+      .filter(_._2.snapshotId.contains(s.snapshotId))
+    def withStatus(status: Int) = mine.filter(_._2.status == status)
+    val deletes = s.operation match {
+      case "delete" | "overwrite" => deletedRows(table, spark, s,
+        withStatus(ManifestStatus.Deleted).map(e => table.io.qualify(e._2.dataFile.filePath)))
+      case _ => None
+    }
     val inserts = s.operation match {
       case "append" | "overwrite" =>
-        addedRows(table, spark, s).map(tag(_, "insert", ord, s.snapshotId, dataCols))
+        val added = withStatus(ManifestStatus.Added).map { case (m, e) => FileScanTask.of(m, e) }
+        Option.when(added.nonEmpty)(
+          table.newScan().readTasks(spark, added, applyDeletes = false))
       case _ => None
     }
-    val deletes = s.operation match {
-      case "delete" | "overwrite" =>
-        deletedRows(table, spark, s).map(tag(_, "delete", ord, s.snapshotId, dataCols))
-      case _ => None
-    }
-    deletes.toSeq ++ inserts.toSeq
+    deletes.map(tag(_, "delete", ord, s.snapshotId, dataCols)).toSeq ++
+      inserts.map(tag(_, "insert", ord, s.snapshotId, dataCols))
   }
 
-  /** Manifest entries of snapshot `s`'s OWN manifest list with the given
-    * content, alive-or-dead filtered by caller. Reading s's list (not
-    * `to`'s) keeps attribution correct even after later rewrites. */
-  private def entriesOf(table: GraftTable, s: Snapshot, content: Int)
-      : Seq[graft.meta.ManifestEntry] =
-    ManifestIO.readManifestList(table.io, s.manifestList, table.partTypes,
-        graft.crypto.MetadataEncryption.listKeyFor(table.metadata, s))
-      .filter(_.content == content)
-      .flatMap { m =>
-        val spec = table.metadata.specById(m.partitionSpecId).getOrElse(table.spec)
-        ManifestIO.readManifest(table.io, m.manifestPath, table.schema, spec,
-          m.keyMetadata)
-      }
-
-  private def addedRows(table: GraftTable, spark: SparkSession,
-      s: Snapshot): Option[DataFrame] = {
-    val paths = entriesOf(table, s, ManifestContent.Data)
-      .filter(e => e.status == ManifestStatus.Added &&
-        e.snapshotId.contains(s.snapshotId))
-      .map(_.dataFile.filePath)
-    if (paths.isEmpty) None
-    else {
-      val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
-      Some(graft.SessionConf.scanSession(spark).read.options(encConf)
-        .schema(table.schema.toSpark).parquet(paths: _*))
-    }
-  }
-
-  /** Rows snapshot `s` removed, resolved against the parent-visible scan:
-    * whole removed files, new position/DV delete positions, and new
-    * equality-delete keys (sequence-scoped). */
-  private def deletedRows(table: GraftTable, spark: SparkSession,
-      s: Snapshot): Option[DataFrame] = {
-    val parentId = s.parentSnapshotId.getOrElse(return None)
-    val parent = table.newScan().useSnapshot(parentId)
-      .withMetadataColumns().toDF(spark)
-    val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
-
-    val removedPaths = entriesOf(table, s, ManifestContent.Data)
-      .filter(e => e.status == ManifestStatus.Deleted &&
-        e.snapshotId.contains(s.snapshotId))
-      .map(e => table.io.qualify(e.dataFile.filePath))
-    val newDeletes = entriesOf(table, s, ManifestContent.Deletes)
-      .filter(e => e.status == ManifestStatus.Added &&
-        e.snapshotId.contains(s.snapshotId))
-
-    val parts = Seq.newBuilder[DataFrame]
-
-    if (removedPaths.nonEmpty) {
-      import spark.implicits._
-      val rp = removedPaths.toDF("_gf_removed_file")
-      parts += parent.join(broadcast(rp),
-        parent("_file") === rp("_gf_removed_file"), "left_semi")
-    }
-
-    val posParquet = newDeletes.filter(e =>
-      e.dataFile.content == FileContent.PositionDeletes &&
-        e.dataFile.fileFormat != "PUFFIN")
-    if (posParquet.nonEmpty) {
-      val pd = spark.read.options(encConf)
-        .parquet(posParquet.map(_.dataFile.filePath): _*)
-      parts += parent.join(pd,
-        parent("_file") === pd("file_path") && parent("_pos") === pd("pos"),
-        "left_semi")
-    }
-
-    val dvs = newDeletes.filter(e =>
-      e.dataFile.content == FileContent.PositionDeletes &&
-        e.dataFile.fileFormat == "PUFFIN")
-    if (dvs.nonEmpty) {
-      import spark.implicits._
-      val descriptors = dvs.flatMap(e => e.dataFile.referencedDataFile.map(ref =>
-        (e.dataFile.filePath, e.dataFile.contentOffset.getOrElse(0L),
-          e.dataFile.contentSizeInBytes.getOrElse(0L), table.io.qualify(ref))))
-      val dvRows = spark.sparkContext
-        .parallelize(descriptors, math.max(1, math.min(descriptors.size, 64)))
-        .flatMap { case (puffin, offset, len, ref) =>
-          val io = graft.io.FileIO.local()
-          val meta = graft.puffin.Puffin.BlobMetadata(
-            graft.puffin.Puffin.DeletionVectorV1, Nil, 0L, 0L, offset, len, Map.empty)
-          graft.puffin.Puffin.dvDeserialize(
-            graft.puffin.Puffin.readBlob(io, puffin, meta))
-            .iterator.map(pos => (ref, pos))
-        }.toDF("file_path", "pos")
-      parts += parent.join(dvRows,
-        parent("_file") === dvRows("file_path") && parent("_pos") === dvRows("pos"),
-        "left_semi")
-    }
-
-    val eqDeletes = newDeletes.filter(_.dataFile.content == FileContent.EqualityDeletes)
-    eqDeletes.groupBy(e => (e.dataFile.equalityIds,
-        e.sequenceNumber.getOrElse(s.sequenceNumber))).foreach {
-      case ((ids, delSeq), group) =>
-        val keyNames = ids.map(id => table.schema.idToField(id).name)
-        val dels = spark.read.options(encConf)
-          .parquet(group.map(_.dataFile.filePath): _*)
-          .select(keyNames.map(col): _*).distinct()
-        val keyCond = keyNames.map(n => parent(n) === dels(n)).reduce(_ && _)
-        parts += parent.join(dels,
-          keyCond && parent("_last_updated_sequence_number") < lit(delSeq),
-          "left_semi")
-    }
-
-    val built = parts.result()
-    if (built.isEmpty) None
-    // distinct on (_file, _pos): a row matched by several delete sources
-    // emits once; identity is positional, so duplicate row VALUES survive
-    else Some(built.reduce(_.unionAll(_)).dropDuplicates("_file", "_pos"))
+  /** Rows snapshot `s` removed: the parent snapshot's live rows (its
+    * deletes applied) that sit in a data file `s` removed, or that a
+    * delete file `s` added marks — the [[DeletePlan]] of those deletes
+    * over the parent's files, tested per row on `_file`, `_pos` and the
+    * served key columns. A delete alive at the parent too only marks rows
+    * the parent already dropped. */
+  private def deletedRows(table: GraftTable, spark: SparkSession, s: Snapshot,
+      removed: Seq[String]): Option[DataFrame] = {
+    val parent = table.newScan().useSnapshot(s.parentSnapshotId.getOrElse(return None))
+      .withMetadataColumns()
+    val tasks = parent.planFiles()
+    if (tasks.isEmpty) return None
+    val older = parent.planDeletes().map(d => Commits.deleteKey(d.file)).toSet
+    val added = table.newScan().useSnapshot(s.snapshotId).planDeletes()
+      .filterNot(d => older(Commits.deleteKey(d.file)))
+    val inRemoved = Option.when(removed.nonEmpty)(col("_file").isin(removed: _*))
+    val marked = parent.deletedRows(spark, tasks, added, col("_file"), col("_pos"))
+      .map(_(col))
+    (inRemoved ++ marked).reduceOption(_ || _)
+      .map(parent.readTasks(spark, tasks).filter(_))
   }
 }

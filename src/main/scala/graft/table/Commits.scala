@@ -32,6 +32,9 @@ object Commits {
   def partTypes(base: TableMetadata): Map[Int, graft.spec.IcebergType.StructT] =
     base.partitionSpecs.map(s => s.specId -> s.partitionType(base.currentSchema)).toMap
 
+  private def manifestPath(location: String, fileName: String): String =
+    s"$location/metadata/$fileName.avro"
+
   /** Write one manifest for `entries` and return its list descriptor. */
   def writeManifest(
       io: graft.io.FileIO,
@@ -43,7 +46,7 @@ object Commits {
       content: Int,
       snapshotId: Long,
       seq: Long): ManifestFile = {
-    val path = s"${base.location}/metadata/$fileName.avro"
+    val path = manifestPath(base.location, fileName)
     // encrypted tables: fresh DEK per manifest; its key metadata (with
     // the encrypted length for truncation detection) rides the list entry
     val fileKey =
@@ -291,7 +294,25 @@ object Commits {
     * get rewritten). Create one per commit, outside the retry loop. */
   final class ManifestNames(val commitUuid: String) {
     private val n = new java.util.concurrent.atomic.AtomicInteger
-    def next(kind: String): String = s"$commitUuid-$kind${n.getAndIncrement()}"
+    private val issued = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    /** Manifest paths of the latest attempt's full list. */
+    @volatile private[Commits] var listed: Set[String] = Set.empty
+
+    def next(kind: String): String = {
+      val name = s"$commitUuid-$kind${n.getAndIncrement()}"
+      issued.add(name)
+      name
+    }
+
+    /** Delete every manifest issued under `location` that `keep` does not
+      * name: attempts that lost the swap wrote them, and no snapshot will
+      * ever reference them. Best effort — a miss leaves an orphan. */
+    private[Commits] def reclaim(io: graft.io.FileIO, location: String,
+        keep: Set[String]): Unit =
+      issued.forEach { name =>
+        val path = manifestPath(location, name)
+        if (!keep(path)) try io.delete(path) catch { case _: Exception => () }
+      }
   }
 
   /** The snapshot producer: writes the manifests for `ch` and returns the
@@ -355,14 +376,28 @@ object Commits {
     * line (write-audit-publish staging): the new snapshot's parent and
     * manifest base are the BRANCH head, the ref moves to the new
     * snapshot, and `current-snapshot-id` / `snapshot-log` are untouched —
-    * readers of the table see nothing until a fast-forward publish. */
+    * readers of the table see nothing until a fast-forward publish.
+    *
+    * Manifests written by attempts that lost the swap are deleted once
+    * the commit lands (the winning list, already in hand, names what
+    * stays), and all of them when it finally fails on a conflict or a
+    * validation. After any other error the swap may have landed, so
+    * nothing is deleted. */
   def commit(table: GraftTable, operation: String, commitUuid: String,
       extraSummary: Map[String, String] = Map.empty,
       branch: Option[String] = None)(
       changes: TableMetadata => FileChanges): GraftTable = {
     val names = new ManifestNames(commitUuid)
-    retrying(table)((base, snapshotId) => applyCommit(table, base, operation,
-      names, snapshotId, extraSummary, branch)(changes))
+    val committed =
+      try retrying(table)((base, snapshotId) => applyCommit(table, base, operation,
+        names, snapshotId, extraSummary, branch)(changes))
+      catch {
+        case e @ (_: graft.catalog.CommitConflict | _: ValidationException) =>
+          names.reclaim(table.io, table.location, Set.empty)
+          throw e
+      }
+    names.reclaim(table.io, table.location, names.listed)
+    committed
   }
 
   /** A commit that moves no files and writes its own manifests: `manifests`
@@ -406,8 +441,10 @@ object Commits {
     val prepared = if (ch.addedDeletes.isEmpty) base0 else ensureUnpartitionedSpec(base0)
     applySnapshot(table, prepared, operation, names.commitUuid, snapshotId,
       extraSummary, branch) { (base, seq, id) =>
-      produce(table.io, base, ch, ch.assignRowIds && addsRows(operation),
+      val all = produce(table.io, base, ch, ch.assignRowIds && addsRows(operation),
         names, id, seq)
+      names.listed = all.map(_.manifestPath).toSet
+      all
     }
   }
 

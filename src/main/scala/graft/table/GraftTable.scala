@@ -476,6 +476,13 @@ final case class FileScanTask(
     specId: Int,
     sequenceNumber: Long)
 
+object FileScanTask {
+  /** The task for entry `e` of manifest `m` (sequence number inherited
+    * from the manifest when the entry carries none). */
+  def of(m: ManifestFile, e: ManifestEntry): FileScanTask =
+    FileScanTask(e.dataFile, m.partitionSpecId, e.sequenceNumber.getOrElse(m.sequenceNumber))
+}
+
 /** Driver-compact planning result: exactly what execution needs, WITHOUT
   * the per-file stats maps (bounds/value-counts/column-sizes) that
   * dominate task size. At ~200k planned files the full `DataFile` stats
@@ -511,31 +518,19 @@ final case class DeleteTask(
 final class IncrementalScan private[table] (
     table: GraftTable, toSnapshotId: Long, rangeIds: Set[Long]) {
 
-  def planFiles(): Seq[FileScanTask] = {
-    val snap = table.metadata.snapshotById(toSnapshotId).get
-    ManifestIO.readManifestList(table.io, snap.manifestList, table.partTypes,
-        graft.crypto.MetadataEncryption.listKeyFor(table.metadata, snap))
-      .filter(_.content == ManifestContent.Data)
-      .flatMap { m =>
-        val spec = table.metadata.specById(m.partitionSpecId).getOrElse(table.spec)
-        ManifestIO.readManifest(table.io, m.manifestPath, table.schema, spec,
-          m.keyMetadata)
-          .filter(e => e.status == ManifestStatus.Added &&
-            e.snapshotId.exists(rangeIds.contains))
-          .map(e => FileScanTask(e.dataFile, m.partitionSpecId,
-            e.sequenceNumber.getOrElse(m.sequenceNumber)))
-      }
-  }
+  private val scan = table.newScan()
 
-  def toDF(spark: SparkSession): DataFrame = {
-    val tasks = planFiles()
-    val sparkSchema = table.schema.toSpark
-    if (tasks.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
-    else
-      graft.SessionConf.scanSession(spark).read.schema(sparkSchema)
-        .parquet(tasks.map(_.file.filePath): _*)
-  }
+  def planFiles(): Seq[FileScanTask] =
+    scan.dataEntries(table.metadata.snapshotById(toSnapshotId).get).collect {
+      case (m, e) if e.status == ManifestStatus.Added &&
+          e.snapshotId.exists(rangeIds.contains) => FileScanTask.of(m, e)
+    }
+
+  /** The added rows as the table's reader serves them (field ids or name
+    * mapping, v3 defaults); later deletes are not applied — the window
+    * holds only appends. */
+  def toDF(spark: SparkSession): DataFrame =
+    scan.readTasks(spark, planFiles(), applyDeletes = false)
 }
 
 /** Byte-range slice of a FileScanTask (scan/task.rs:60-62 start/length):
@@ -742,6 +737,14 @@ final class TableScan private[table] (
         m.keyMetadata)
     }
 
+  /** Every data-manifest entry of `snap`'s OWN manifest list, live or
+    * not, with its manifest — read through the scan's caches. */
+  private[table] def dataEntries(snap: Snapshot): Seq[(ManifestFile, ManifestEntry)] =
+    readListCached(snap).filter(_.content == ManifestContent.Data).flatMap { m =>
+      readManifestCached(m, table.metadata.specById(m.partitionSpecId).getOrElse(table.spec))
+        .map(m -> _)
+    }
+
   def planFiles(): Seq[FileScanTask] = planWithMetrics()._1
 
   /** planFiles + per-stage pruning counters (the reference's ScanMetrics,
@@ -781,8 +784,7 @@ final class TableScan private[table] (
           if (!ok) byMetrics.incrementAndGet()
           ok
         }
-        .map(e => FileScanTask(e.dataFile, m.partitionSpecId,
-          e.sequenceNumber.getOrElse(m.sequenceNumber)))
+        .map(FileScanTask.of(m, _))
     }
     val metrics = ScanMetrics(
       totalDataManifests = dataManifests.size,
@@ -964,13 +966,15 @@ final class TableScan private[table] (
 
   /** Read a specific task subset with MoR deletes applied but no residual
     * filter/projection — the CoW rewrite path (RowOps) uses this to
-    * re-emit surviving rows of only the touched files. */
-  private[table] def readTasks(spark: SparkSession,
-      tasks: Seq[FileScanTask]): DataFrame = dfForTasks(spark, tasks)
+    * re-emit surviving rows of only the touched files. With
+    * `applyDeletes = false` the files' rows are served as written (the
+    * incremental and changelog inserts: the rows a snapshot added). */
+  private[table] def readTasks(spark: SparkSession, tasks: Seq[FileScanTask],
+      applyDeletes: Boolean = true): DataFrame = dfForTasks(spark, tasks, applyDeletes)
 
   def toDF(spark: SparkSession): DataFrame = {
     val tasks = planWithLimit()
-    val withMeta = dfForTasks(spark, tasks)
+    val withMeta = dfForTasks(spark, tasks, applyDeletes = true)
     val filtered = filter match {
       case AlwaysTrue => withMeta
       case p => withMeta.filter(Predicate.toColumn(p, table.schema))
@@ -989,7 +993,8 @@ final class TableScan private[table] (
     table.metadata.currentSnapshot.map(_.timestampMs)
       .getOrElse(table.metadata.lastUpdatedMs)
 
-  private def dfForTasks(spark: SparkSession, tasks: Seq[FileScanTask]): DataFrame = {
+  private def dfForTasks(spark: SparkSession, tasks: Seq[FileScanTask],
+      applyDeletes: Boolean): DataFrame = {
     val sparkSchema = table.schema.toSpark
     if (tasks.isEmpty) {
       val empty = spark.createDataFrame(
@@ -1049,7 +1054,10 @@ final class TableScan private[table] (
       }.toMap
     // deletes read `_metadata` and the equality keys as served, so they
     // are evaluated on the relation itself
-    val deleted = deletedRows(reader, tasks, encConf).map(_(served))
+    val deleted =
+      if (!applyDeletes) None
+      else deletedRows(spark, tasks, planDeletes(), col("_metadata.file_path"),
+        col("_metadata.row_index")).map(_(served))
     val kept = if (deletedCol) raw else deleted.fold(raw)(d => raw.filter(!d))
     if (!metaCols && physical.isEmpty && missing.isEmpty) return kept
 
@@ -1135,23 +1143,26 @@ final class TableScan private[table] (
         name, dt, nullable)
   }
 
-  /** The deleted-row test for a read of `tasks`, None when no delete is in
-    * scope: one deterministic [[graft.functions.MorDeletedExpr]] over
-    * `_metadata.file_path`, `_metadata.row_index` and the equality-key
-    * columns, evaluated per row through the [[DeleteFilter]] the DSv2
-    * reader shares — position deletes and DVs as a per-file row bitmap
-    * [positional_deletes.rs:35], equality deletes as JVM-cached key sets
-    * scoped to data_seq < delete_seq and to the delete's partition, a
-    * null key never matching [delete_filter.rs:190,
+  /** The test for rows of `tasks` that `deletes` remove, None when
+    * `deletes` is empty: one deterministic
+    * [[graft.functions.MorDeletedExpr]] over the rows' data-file path
+    * (`_metadata.file_path` rendering) and position — `path`, `pos` — and
+    * the equality-key columns, evaluated per row through the
+    * [[DeleteFilter]] the DSv2 reader shares — position deletes and DVs as
+    * a per-file row bitmap [positional_deletes.rs:35], equality deletes as
+    * JVM-cached key sets scoped to data_seq < delete_seq and to the
+    * delete's partition, a null key never matching [delete_filter.rs:190,
     * caching_delete_file_loader.rs:421-424]. Delete files load on the
     * executors; no join or exchange is planned. The returned function maps
     * each equality key to the column serving its value (default-filled
     * for files written without it, cast from the physical alias on
     * name-mapped reads). */
-  private def deletedRows(scanSpark: SparkSession, tasks: Seq[FileScanTask],
-      encConf: Map[String, String]): Option[(String => Column) => Column] = {
-    val deletes = planDeletes()
+  private[table] def deletedRows(spark: SparkSession, tasks: Seq[FileScanTask],
+      deletes: Seq[DeleteTask], path: Column,
+      pos: Column): Option[(String => Column) => Column] = {
     if (deletes.isEmpty) return None
+    val scanSpark = graft.SessionConf.scanSession(spark)
+    val encConf = graft.crypto.Encryption.confFor(table.metadata.properties)
     val plan = DeletePlan.build(table, deletes,
       tasks.map(t => (table.io.qualify(t.file.filePath), t.sequenceNumber, t.specId,
         t.file.partition)))
@@ -1161,7 +1172,7 @@ final class TableScan private[table] (
       plan.eqGroups.map(_.keyNames).distinct,
       () => graft.SessionConf.readConf(scanSpark, encConf))
     val planBc = scanSpark.sparkContext.broadcast(plan)
-    Some(keyColumn => graft.functions.MorDeletedExpr.column(
+    Some(keyColumn => graft.functions.MorDeletedExpr.column(path, pos,
       keys.map(k => k -> keyColumn(k)), planBc, readers))
   }
 }

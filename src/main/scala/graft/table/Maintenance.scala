@@ -212,7 +212,6 @@ object Maintenance {
         side: graft.meta.DataFile => Map[Int, Any]): Seq[Double] =
       tasks.flatMap(tk => side(tk.file).get(id)).map {
         case n: Number => n.doubleValue()
-        case d: java.math.BigDecimal => d.doubleValue()
         case other => throw new IllegalArgumentException(
           s"zorder needs numeric bounds, got $other")
       }

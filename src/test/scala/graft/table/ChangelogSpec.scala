@@ -116,4 +116,68 @@ class ChangelogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rowsOf(ord1.filter(col("_change_type") === "insert"))
       === Seq((9L, 18.0), (10L, 20.0)))
   }
+
+  test("an upsert emits exactly the replaced rows as deletes and its batch as inserts") {
+    val ss = spark
+    import ss.implicits._
+    val schema = IcebergSchema(0, Seq(
+      NestedField(1, "id", IcebergType.LongT, required = false),
+      NestedField(2, "v", IcebergType.DoubleT, required = false)))
+    var t = GraftTable.create("cdc4", catalog, schema)
+    t = t.append((1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v"))
+    val before = t.metadata.currentSnapshotId.get
+    val batch = Seq((3L, 30.0), (4L, 40.0), (11L, 110.0))
+    t = t.upsert(batch.toDF("id", "v"), Seq("id")) // equality deletes + data
+    assert(t.newScan().planDeletes().exists(_.file.content == graft.meta.FileContent.EqualityDeletes))
+
+    val ch = t.changesBetween(spark, before, t.metadata.currentSnapshotId.get)
+    assert(rowsOf(ch.filter(col("_change_type") === "delete")) === Seq((3L, 3.0), (4L, 4.0)))
+    assert(rowsOf(ch.filter(col("_change_type") === "insert")) === batch)
+  }
+
+  test("the changelog of a position-delete, DV or equality-delete snapshot plans no join or exchange") {
+    val ss = spark
+    import ss.implicits._
+    val schema = IcebergSchema(0, Seq(
+      NestedField(1, "id", IcebergType.LongT, required = false),
+      NestedField(2, "v", IcebergType.DoubleT, required = false)))
+    var t = GraftTable.create("cdc5", catalog, schema,
+      properties = Map("format-version" -> "3"))
+    t = t.append((1L to 40L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(2))
+    val deletes = Seq[(String, GraftTable => GraftTable, Seq[Long])](
+      ("position deletes", _.deleteWhere(Predicate.gt("id", 35L), spark), 36L to 40L),
+      ("deletion vector", _.deleteWhereDV(Predicate.lt("id", 4L), spark), 1L to 3L),
+      ("equality deletes", _.equalityDelete(Seq(10L, 20L).toDF("id"), Seq("id")),
+        Seq(10L, 20L)))
+    deletes.foreach { case (kind, delete, gone) =>
+      val parent = t.metadata.currentSnapshotId.get
+      t = delete(t)
+      val ch = t.changesBetween(spark, parent, t.metadata.currentSnapshotId.get)
+      val optimized = ch.queryExecution.optimizedPlan
+      assert(optimized.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        .isEmpty, s"$kind: ${optimized.treeString}")
+      val physical = ch.queryExecution.sparkPlan
+      assert(physical.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+        .isEmpty, s"$kind: ${physical.treeString}")
+      assert(rowsOf(ch) === gone.map(i => (i, i * 1.0)), kind)
+      assert(ch.filter(col("_change_type") =!= "delete").count() === 0, kind)
+    }
+  }
+
+  test("an added-files table serves its values to incremental scans and the changelog") {
+    val ss = spark
+    import ss.implicits._
+    val dir = s"$wh/foreign_cdc6"
+    (1L to 5L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1).write.parquet(dir)
+    val schema = IcebergSchema(0, Seq(
+      NestedField(1, "id", IcebergType.LongT, required = false),
+      NestedField(2, "v", IcebergType.DoubleT, required = false)))
+    var t = GraftTable.create("cdc6", catalog, schema)
+    t = t.addFiles(spark, t.io.listFiles(dir).map(_._1).filter(_.endsWith(".parquet")))
+    val to = t.metadata.currentSnapshotId.get
+    val expected = (1L to 5L).map(i => (i, i * 1.0))
+    assert(rowsOf(t.newScan().toDF(spark)) === expected)
+    assert(rowsOf(t.newScan().appendsBetween(-1L, to).toDF(spark)) === expected)
+    assert(rowsOf(t.changesBetween(spark, -1L, to)) === expected)
+  }
 }

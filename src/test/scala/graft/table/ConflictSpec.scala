@@ -305,6 +305,54 @@ class ConflictSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = GraftTable.load("c9", catalog)
     assert(fresh.metadata.currentSnapshot.get.summary("deleted-data-files") === "4")
     assert(ids(fresh) === (1L to 110L))
+    // the losing attempt's manifests are gone: every manifest on disk is
+    // in some snapshot's list
+    def name(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val listed = fresh.metadata.snapshots.flatMap(s =>
+      graft.meta.ManifestIO.readManifestList(fresh.io, s.manifestList, fresh.partTypes,
+        None).map(m => name(m.manifestPath))).toSet
+    val onDisk = fresh.io.listFiles(s"${fresh.location}/metadata").map(f => name(f._1))
+      .filter(n => n.endsWith(".avro") && !n.startsWith("snap-"))
+    assert(onDisk.nonEmpty && onDisk.filterNot(listed).isEmpty,
+      s"unlisted manifests: ${onDisk.filterNot(listed)}")
+  }
+
+  /** A catalog whose every swap fails with `err()`. */
+  private class FailsSwap(inner: graft.catalog.Catalog, err: () => Throwable)
+      extends graft.catalog.Catalog {
+    override def io = inner.io
+    override def createTable(name: String, schema: IcebergSchema,
+        spec: PartitionSpec, properties: Map[String, String]) =
+      inner.createTable(name, schema, spec, properties)
+    override def loadTable(name: String) = inner.loadTable(name)
+    override def tableExists(name: String) = inner.tableExists(name)
+    override def dropTable(name: String) = inner.dropTable(name)
+    override def listTables() = inner.listTables()
+    override def commitTable(name: String, baseVersion: Int,
+        updated: TableMetadata): Int = throw err()
+    override protected def registerParsed(name: String,
+        md: TableMetadata): Unit = ()
+  }
+
+  test("a commit that finally conflicts deletes its manifests; an unknown swap error keeps them") {
+    val catalog = freshCatalog()
+    GraftTable.create("c11", catalog, schema, properties = Map(
+      "commit.retry.num-retries" -> "1", "commit.retry.min-wait-ms" -> "1"))
+    val t = GraftTable.load("c11", catalog).append(df(1 to 10).coalesce(1))
+    def manifests() = t.io.listFiles(s"${t.location}/metadata").map(_._1)
+      .filter(p => p.endsWith(".avro") && !p.contains("/snap-")).toSet
+    val before = manifests()
+    intercept[graft.catalog.CommitConflict] {
+      GraftTable.load("c11", new FailsSwap(catalog,
+        () => graft.catalog.CommitConflict("synthetic"))).append(df(11 to 20).coalesce(1))
+    }
+    assert(manifests() === before, "both attempts' manifests are deleted")
+    // the swap may have landed behind an unknown error: nothing is deleted
+    intercept[IllegalStateException] {
+      GraftTable.load("c11", new FailsSwap(catalog,
+        () => new IllegalStateException("no response"))).append(df(21 to 30).coalesce(1))
+    }
+    assert((manifests() -- before).size === 1)
   }
 
   test("a CoW delete retried after a concurrent append keeps the survivors of every manifest") {

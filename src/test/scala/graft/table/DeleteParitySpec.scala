@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalacheck.Gen
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +24,8 @@ import graft.spec._
   * default then matches every row of the files written before it); after
   * every step both readers are compared with each
   * other and with an in-memory model of the live rows. One step is one
-  * case. */
+  * case; at the end of each scenario the changelog from the first
+  * snapshot, replayed, must equal the model too. */
 class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -288,6 +289,18 @@ class DeleteParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         if (t.metadata.partitionSpecs.size > 1) evolvedCases += 1
         if (withD) defaultedCases += 1
       }
+
+      // the full changelog replays to the model: inserts minus deletes,
+      // as a multiset over the data columns
+      val cols = if (withD) Cols :+ "d" else Cols
+      val replay = t.changesBetween(spark, -1L, t.metadata.currentSnapshotId.get)
+        .groupBy(cols.map(col): _*)
+        .agg(sum(when(col("_change_type") === "insert", 1).otherwise(-1)).as("n"))
+        .filter(col("n") =!= 0).collect()
+        .map(r => (recs(Seq(r)).head, Option.when(withD)(r.getLong(4))) -> r.getLong(cols.size))
+        .toMap
+      assert(replay === model.map(r => (r, Option.when(withD)(dRead(r))) -> 1L).toMap,
+        s"changelog replay vs model — scenario $si ($sc)")
     }
     assert(cases >= 200)
     assert(evolvedCases > 0 && defaultedCases > 0 && defaultKeyedCases > 0,
